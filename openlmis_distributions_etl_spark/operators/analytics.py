@@ -10,6 +10,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import dec, dsum, ts_us
+from ..functions.prefix import buckets, prefix_sums
 
 
 def distinct_counts(t: dict[str, DataFrame]) -> DataFrame:
@@ -605,31 +606,19 @@ def join_key_skew_audit(t: dict[str, DataFrame],
                     "total", "n_keys"))
 
 
-ABC_BUCKETS = 16
-
-
 def abc_classification(t: dict[str, DataFrame]) -> DataFrame:
     """ABC inventory classification: parts ranked by revenue with the
     cumulative revenue share — class A holds the first 80% of revenue,
     B the next 15%, C the tail (the Pareto cut every warehouse uses to
     set stocking policy).
 
-    The interesting scale problem is the CUMULATIVE sum: a single
-    ORDER BY window funnels every part through one task. This plan
-    runs a DISTRIBUTED PREFIX SUM instead — (1) revenue per part (one
-    map-side-combinable shuffle), (2) parts bucketed by revenue range
-    via broadcast APPROX-percentile fences (fence placement only
-    affects bucket balance, never the answer: the bucket test is
-    monotone in revenue, and equal revenues land in one bucket, so
-    bucket order is consistent with the global revenue order for ANY
-    fence values — which is why the cheap sketch beats an exact
-    sort-based percentile here), (3) per-bucket totals → exclusive
-    running offsets AND the grand total in one window pass over the
-    ≤16 bucket rows (constant-size window), (4) in-bucket prefix sums
-    (partitioned window, each ~1/16 of parts) plus the bucket offset =
-    the exact global cumulative. At production scale the bucket count
-    scales with the cluster; no task ever sees more than
-    parts/buckets rows.
+    The cumulative sum is the shared DISTRIBUTED PREFIX SUM
+    (`functions/prefix.py`) instead of a single ORDER BY window that
+    funnels every part through one task: revenue per part (one
+    map-side-combinable shuffle), range buckets on the negated double
+    revenue (descending order; decimal→double is monotone, so ties
+    never straddle buckets), and in-bucket running sums plus
+    broadcast bucket offsets.
 
     Exactness: every cumulation is DECIMAL (order-independent), so the
     decomposed prefix equals the oracle's single-window prefix
@@ -639,206 +628,25 @@ def abc_classification(t: dict[str, DataFrame]) -> DataFrame:
     from ..functions import disc_price
     from ..functions.cache import retain
 
-    # retained: the per-part revenue feeds THREE consumers (fences,
-    # bucketing twice) — without the cache the lineitem aggregate
-    # re-executes once per consumer
     rev = retain(t["lineitem"]
                  .groupBy(F.col("l_partkey").alias("partkey"))
                  .agg(F.sum(disc_price()).cast("decimal(38,6)")
                       .alias("rev")))
-    # ONE quantile sketch over doubles (an array of 15 percentiles),
-    # not 15 independent decimal sketches — same job, ~5x cheaper.
-    # decimal→double is monotone, so bucketing on the double value is
-    # still consistent with the exact decimal order (a double-level
-    # tie merely merges two adjacent revenues into one bucket).
-    pcts = ",".join(str(i / ABC_BUCKETS) for i in range(1, ABC_BUCKETS))
-    fences = rev.agg(F.expr(
-        f"approx_percentile(CAST(rev AS DOUBLE), array({pcts}))")
-        .alias("fa"))
-    b = F.lit(0)
-    for i in range(1, ABC_BUCKETS):
-        b = b + (F.col("rev").cast("double")
-                 > F.element_at("fa", i)).cast("int")
-    bucketed = (rev.crossJoin(F.broadcast(fences))
-                .select("partkey", "rev", b.alias("bkt")))
-    bt = (bucketed.groupBy("bkt")
-          .agg(F.sum("rev").cast("decimal(38,6)").alias("btot")))
-    # one ≤16-row frame yields both the exclusive prefix (off) and the
-    # grand total — no separate full-table total aggregate needed
-    wo = (Window.orderBy(F.desc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    wt = (Window.orderBy(F.desc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-    offs = bt.select(
-        "bkt",
-        F.coalesce(F.sum("btot").over(wo),
-                   F.lit(0).cast("decimal(38,6)")).alias("off"),
-        F.sum("btot").over(wt).cast("decimal(38,6)").alias("total"))
-    win = (Window.partitionBy("bkt")
-           .orderBy(F.desc("rev"), F.asc("partkey"))
-           .rowsBetween(Window.unboundedPreceding, 0))
-    cum = (bucketed.join(F.broadcast(offs), "bkt")
-           .select("partkey", "rev", "total",
-                   (F.sum("rev").over(win) + F.col("off"))
-                   .cast("decimal(38,6)").alias("cum")))
-    return (cum
+    b, _ = buckets(rev, -F.col("rev").cast("double"))
+    cum, tot = F.col("cum_rev"), F.col("tot_rev")
+    return (prefix_sums(b, [F.desc("rev"), F.asc("partkey")], ["rev"])
             .select("partkey",
                     F.col("rev").cast("double").alias("revenue"),
-                    F.col("cum").cast("double").alias("cum_revenue"),
-                    (F.col("cum").cast("double")
-                     / F.col("total").cast("double")).alias("share_cum"),
-                    F.when(F.col("cum") * 100 <= F.col("total") * 80,
-                           "A")
-                    .when(F.col("cum") * 100 <= F.col("total") * 95,
-                          "B")
+                    cum.cast("double").alias("cum_revenue"),
+                    (cum.cast("double") / tot.cast("double"))
+                    .alias("share_cum"),
+                    F.when(cum * 100 <= tot * 80, "A")
+                    .when(cum * 100 <= tot * 95, "B")
                     .otherwise("C").alias("abc_class")))
 
 
-PREFIX_TARGET_ROWS = 4_000_000   # cap on rows one in-bucket window task sees
-PREFIX_MAX_FENCES = 1024         # per-level fence ceiling (per-row test cost)
-PROBE_FENCES = 64                # fused-probe sketch resolution: covers
-                                 # nb <= 64 (256M rows at the 4M target)
-                                 # in one cheap job; larger inputs pay a
-                                 # second exact-resolution sketch
 KS_GROUP_A = "click"
 KS_GROUP_B = "purchase"
-
-
-def _rank_buckets(df: DataFrame, n: int) -> DataFrame:
-    """Range-bucket ``df`` on its double column ``_k`` (ascending;
-    ties NEVER straddle buckets) into a DATA-PROPORTIONAL number of
-    buckets — ceil(n / PREFIX_TARGET_ROWS), floor 16 — so the
-    in-bucket window of a distributed prefix sum is bounded-size at
-    ANY input scale (the round-4 version hard-coded 16 buckets, a
-    16-way parallelism ceiling at 100 TB). Returns ``df`` plus an
-    int column ``bkt``, monotone in ``_k``.
-
-    Fences are approx_percentile values of ``_k`` itself and the test
-    is ``_k > fence``, so equal keys always share a bucket and fence
-    placement only affects balance — never results. Per-row bucket
-    assignment is one JVM higher-order fold over the broadcast fence
-    array (``size(filter(fences, f -> _k > f))``). Above
-    PREFIX_MAX_FENCES the decomposition RECURSES one level: coarse
-    fences split the axis ~sqrt(nb) ways, then per-coarse-bucket
-    fences (one grouped percentile sketch, broadcast back) refine to
-    nb total — per-row cost stays O(sqrt(nb)) ≈ 1k comparisons while
-    bucket count tracks n/4M up to ~4e12 rows per level pair."""
-    import math
-
-    nb = max(16, math.ceil(n / PREFIX_TARGET_ROWS)) if n else 16
-
-    def fence_pcts(m: int) -> str:
-        return ",".join(str(i / m) for i in range(1, m))
-
-    def one_level(frame: DataFrame, m: int, out: str) -> DataFrame:
-        # level-1 fences are COLLECTED to driver literals (≤1023
-        # doubles): the bucketed frame feeds two plan branches in the
-        # two-level path, and a re-evaluated approx_percentile sketch
-        # is not guaranteed to reproduce — literals pin one fence set.
-        # The bucket id is an UNROLLED sum of comparisons, not a
-        # size(filter(...)) higher-order fold: a lambda-bearing column
-        # used as both a grouping key and a join key trips Catalyst
-        # attribute binding (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND when
-        # the HOF is inlined across the self-join), and the unrolled
-        # form codegens to the same per-row comparison count anyway.
-        acc = max(10000, m * 64)
-        row = frame.agg(F.expr(
-            f"approx_percentile(_k, array({fence_pcts(m)}), {acc})")
-            .alias("_fa")).collect()[0]["_fa"]
-        fences = [float(x) for x in (row or []) if x is not None]
-        b = F.lit(0)
-        for p in fences:
-            b = b + (F.col("_k") > F.lit(p)).cast("int")
-        return frame.withColumn(out, b)
-
-    if nb <= PREFIX_MAX_FENCES:
-        return one_level(df, nb, "bkt")
-    nb1 = min(PREFIX_MAX_FENCES, math.ceil(math.sqrt(nb)))
-    nb2 = math.ceil(nb / nb1)
-    acc2 = max(10000, nb2 * 64)
-    lvl1 = one_level(df, nb1, "_b1")
-    # level-2 fences stay distributed (nb1·nb2 doubles): ONE grouped
-    # sketch evaluated once, broadcast back keyed on the level-1 id
-    fences2 = (lvl1.groupBy("_b1")
-               .agg(F.expr(f"approx_percentile(_k, "
-                           f"array({fence_pcts(nb2)}), {acc2})")
-                    .alias("_fb")))
-    return (lvl1.join(F.broadcast(fences2), "_b1")
-            .withColumn("bkt", F.col("_b1") * nb2 + F.size(F.filter(
-                "_fb", lambda x: F.col("_k") > x)))
-            .drop("_fb", "_b1"))
-
-
-def _rank_buckets_probed(df: DataFrame) -> tuple[DataFrame, int]:
-    """`_rank_buckets` with its TWO setup jobs fused into one: the
-    row count (which sizes the bucket count) and the fence sketch
-    ride a single aggregate/collect. The sketch is always taken at
-    the fixed PREFIX_MAX_FENCES resolution and subsampled to the
-    needed bucket count — fence placement only affects balance,
-    never results (equal keys still share a bucket; the bucket test
-    stays monotone). Returns (df + ``bkt``, n).
-
-    ``df`` must be retained/cached by the caller (the probe is its
-    first action; the bucket pipeline re-reads it)."""
-    import math
-
-    # moderate fixed probe resolution: a 1023-point/65536-accuracy
-    # sketch costs multiples of the whole pass on wide frames (the
-    # first cut of this fusion regressed every ECDF consumer); 63
-    # points at default accuracy covers every nb <= PROBE_FENCES
-    # (n <= 256M rows at the 4M target) in the single probe job, and
-    # bigger inputs pay the old second sketch job at the exact
-    # resolution they need — no worse than the pre-fusion cost.
-    pcts = ",".join(str(i / PROBE_FENCES)
-                    for i in range(1, PROBE_FENCES))
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"approx_percentile(_k, array({pcts}), 10000)")
-        .alias("_fa")).collect()[0]
-    n = int(row["n"] or 0)
-    nb = max(16, math.ceil(n / PREFIX_TARGET_ROWS)) if n else 16
-    if nb <= PROBE_FENCES:
-        fences = _subsample_fences(row["_fa"], nb, PROBE_FENCES)
-        # unrolled comparisons, not a size(filter(...)) fold — the
-        # _rank_buckets attribute-binding rationale
-        b = F.lit(0)
-        for p in fences:
-            b = b + (F.col("_k") > F.lit(p)).cast("int")
-        return df.withColumn("bkt", b), n
-    if nb <= PREFIX_MAX_FENCES:
-        # rare big-input path: one more sketch at the needed
-        # resolution (exactly the pre-fusion second job)
-        acc = max(10000, nb * 64)
-        pcts2 = ",".join(str(i / nb) for i in range(1, nb))
-        fa = df.agg(F.expr(
-            f"approx_percentile(_k, array({pcts2}), {acc})")
-            .alias("_fa")).collect()[0]["_fa"]
-        b = F.lit(0)
-        for p in [float(x) for x in (fa or []) if x is not None]:
-            b = b + (F.col("_k") > F.lit(p)).cast("int")
-        return df.withColumn("bkt", b), n
-    # two-level recursion (> ~4G distinct keys): level-1 fences from
-    # a dedicated sketch, level-2 stays the distributed grouped sketch
-    nb1 = min(PREFIX_MAX_FENCES, math.ceil(math.sqrt(nb)))
-    nb2 = math.ceil(nb / nb1)
-    acc1 = max(10000, nb1 * 64)
-    pcts1 = ",".join(str(i / nb1) for i in range(1, nb1))
-    fa1 = df.agg(F.expr(
-        f"approx_percentile(_k, array({pcts1}), {acc1})")
-        .alias("_fa")).collect()[0]["_fa"]
-    b1 = F.lit(0)
-    for p in [float(x) for x in (fa1 or []) if x is not None]:
-        b1 = b1 + (F.col("_k") > F.lit(p)).cast("int")
-    lvl1 = df.withColumn("_b1", b1)
-    acc2 = max(10000, nb2 * 64)
-    pcts2 = ",".join(str(i / nb2) for i in range(1, nb2))
-    fences2 = (lvl1.groupBy("_b1")
-               .agg(F.expr(f"approx_percentile(_k, array({pcts2}), "
-                           f"{acc2})").alias("_fb")))
-    return (lvl1.join(F.broadcast(fences2), "_b1")
-            .withColumn("bkt", F.col("_b1") * nb2 + F.size(F.filter(
-                "_fb", lambda x: F.col("_k") > x)))
-            .drop("_fb", "_b1")), n
 
 
 def _value_ecdf(t: dict[str, DataFrame]) -> DataFrame:
@@ -847,18 +655,10 @@ def _value_ecdf(t: dict[str, DataFrame]) -> DataFrame:
     axis, one row per DISTINCT value with (value, ca, cb, na, nb,
     fa, fb).
 
-    Built with the same DISTRIBUTED PREFIX SUM as abc_classification:
-    (1) per-distinct-value counts for both groups (one map-side-
-    combinable shuffle, cardinality = distinct values, not rows),
-    (2) `_rank_buckets` fences bucket the value axis DATA-
-    PROPORTIONALLY — ceil(distinct/4M) buckets, recursing to a
-    two-level split past 1024 — so no in-bucket window task ever
-    sees more than a bounded row count at any scale (fence placement
-    only affects balance; the bucket test is monotone so cumulative
-    order is preserved), (3) per-bucket totals → exclusive offsets
-    over the small bucket frame, (4) in-bucket running counts +
-    offset = exact global cumulatives. No single-task ORDER BY window
-    ever sees the full value axis."""
+    Per-distinct-value counts for both groups (one map-side-
+    combinable shuffle, cardinality = distinct values, not rows) feed
+    the shared distributed prefix sum (`functions/prefix.py`): no
+    single-task ORDER BY window ever sees the full value axis."""
     ev = (t["events"]
           .where(F.col("event_type").isin(KS_GROUP_A, KS_GROUP_B)
                  & F.col("value").isNotNull())
@@ -869,28 +669,11 @@ def _value_ecdf(t: dict[str, DataFrame]) -> DataFrame:
               .otherwise(0)).alias("ca"),
         F.sum(F.when(F.col("event_type") == KS_GROUP_B, 1)
               .otherwise(0)).alias("cb")))
-    bucketed, _ = _rank_buckets_probed(
-        pts.withColumn("_k", F.col("value").cast("double")))
-    bucketed = bucketed.select("value", "ca", "cb", "bkt")
-    bt = bucketed.groupBy("bkt").agg(F.sum("ca").alias("bca"),
-                                     F.sum("cb").alias("bcb"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    wt = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding,
-                       Window.unboundedFollowing))
-    offs = bt.select(
-        "bkt",
-        F.coalesce(F.sum("bca").over(wo), F.lit(0)).alias("offa"),
-        F.coalesce(F.sum("bcb").over(wo), F.lit(0)).alias("offb"),
-        F.sum("bca").over(wt).alias("na"),
-        F.sum("bcb").over(wt).alias("nb"))
-    win = (Window.partitionBy("bkt").orderBy(F.asc("value"))
-           .rowsBetween(Window.unboundedPreceding, 0))
-    return (bucketed.join(F.broadcast(offs), "bkt")
-            .select("value", "ca", "cb", "na", "nb",
-                    (F.sum("ca").over(win) + F.col("offa")).alias("fa"),
-                    (F.sum("cb").over(win) + F.col("offb")).alias("fb")))
+    b, _ = buckets(pts, F.col("value"))
+    return prefix_sums(b, [F.asc("value")], ["ca", "cb"]).select(
+        "value", "ca", "cb", F.col("tot_ca").alias("na"),
+        F.col("tot_cb").alias("nb"), F.col("cum_ca").alias("fa"),
+        F.col("cum_cb").alias("fb"))
 
 
 def ks_drift_value(t: dict[str, DataFrame]) -> DataFrame:
@@ -1373,34 +1156,17 @@ def global_row_index(t: dict[str, DataFrame]) -> DataFrame:
     """Contiguous global row ids 0..n−1 in (n_chars DESC, doc_id ASC)
     order — the distributed zipWithIndex every training-data export
     needs (assign example ids in curriculum order) — WITHOUT the
-    single-task global ORDER BY window: `_rank_buckets` fences
-    range-bucket the order key into ceil(n/4M) buckets (monotone
-    test, ties share a bucket, so bucket order is consistent with the
-    global order; two-level recursion past 1024 buckets), per-bucket
-    counts give exclusive offsets over the small bucket frame, and
-    in-bucket row_number + offset = the exact global index. The same
-    prefix-decomposition as abc_classification, producing ids instead
-    of cumulative sums. The DESCENDING order key rides through the
+    single-task global ORDER BY window: the index is the distributed
+    prefix sum (`functions/prefix.py`) of a constant 1 under that
+    total order. The DESCENDING order key rides through the
     ascending bucketer negated: bucket 0 holds the LARGEST n_chars."""
     from ..functions.cache import retain
     d = retain(t["documents"].select("doc_id", "n_chars"))
-    # count + fence sketch ride one probe job (`_rank_buckets_probed`)
-    # instead of a count action followed by the sketch action
-    bucketed, _ = _rank_buckets_probed(
-        d.withColumn("_k", -F.col("n_chars").cast("double")))
-    bucketed = bucketed.select("doc_id", "n_chars", "bkt")
-    bt = bucketed.groupBy("bkt").agg(F.count(F.lit(1)).alias("cnt"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offs = bt.select(
-        "bkt", F.coalesce(F.sum("cnt").over(wo),
-                          F.lit(0).cast("long")).alias("off"))
-    win = (Window.partitionBy("bkt")
-           .orderBy(F.desc("n_chars"), F.asc("doc_id")))
-    return (bucketed.join(F.broadcast(offs), "bkt")
-            .select("doc_id", "n_chars",
-                    (F.row_number().over(win) - 1 + F.col("off"))
-                    .cast("long").alias("row_index")))
+    b, _ = buckets(d, -F.col("n_chars").cast("double"))
+    ranked = prefix_sums(b.withColumn("one", F.lit(1)),
+                         [F.desc("n_chars"), F.asc("doc_id")], ["one"])
+    return ranked.select("doc_id", "n_chars",
+                         (F.col("cum_one") - 1).alias("row_index"))
 
 
 def exact_median_by_type(t: dict[str, DataFrame]) -> DataFrame:
@@ -1495,7 +1261,7 @@ def user_activity_gini(t: dict[str, DataFrame]) -> DataFrame:
     hyperactive users dominating a corpus skews training). Exact:
     per-user counts (one shuffle), a contiguous rank in ascending
     (count, user_id) order assigned by the SAME data-proportional
-    prefix decomposition as global_row_index (`_rank_buckets` — no
+    prefix sum as global_row_index (`functions/prefix.py` — no
     single-task ORDER BY window over the user table), then
     G = (2·Σ rank·count)/(n·Σ count) − (n+1)/n from exact
     DECIMAL(38,0) sums in one deterministic double expression."""
@@ -1503,20 +1269,10 @@ def user_activity_gini(t: dict[str, DataFrame]) -> DataFrame:
     counts = retain(t["events"]
                     .groupBy("user_id")
                     .agg(F.count(F.lit(1)).alias("c")))
-    # fused count+sketch probe (one setup job, same buckets-only use)
-    bucketed, _ = _rank_buckets_probed(
-        counts.withColumn("_k", F.col("c").cast("double")))
-    bt = bucketed.groupBy("bkt").agg(F.count(F.lit(1)).alias("cnt"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offs = bt.select(
-        "bkt", F.coalesce(F.sum("cnt").over(wo),
-                          F.lit(0).cast("long")).alias("off"))
-    win = (Window.partitionBy("bkt")
-           .orderBy(F.asc("c"), F.asc("user_id")))
-    ranked = (bucketed.join(F.broadcast(offs), "bkt")
-              .select((F.row_number().over(win) + F.col("off"))
-                      .alias("rank"), "c"))
+    b, _ = buckets(counts, F.col("c"))
+    ranked = prefix_sums(b.withColumn("one", F.lit(1)),
+                         [F.asc("c"), F.asc("user_id")], ["one"]) \
+        .select(F.col("cum_one").alias("rank"), "c")
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     agg = ranked.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1541,24 +1297,10 @@ def _doc_len_ecdf(t: dict[str, DataFrame]) -> DataFrame:
                  .select(F.col("n_chars").cast("double").alias("value"))
                  .groupBy("value")
                  .agg(F.count(F.lit(1)).alias("ca")))
-    bucketed, _ = _rank_buckets_probed(
-        pts.withColumn("_k", F.col("value")))
-    bucketed = bucketed.select("value", "ca", "bkt")
-    bt = bucketed.groupBy("bkt").agg(F.sum("ca").alias("bca"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    wt = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding,
-                       Window.unboundedFollowing))
-    offs = bt.select(
-        "bkt",
-        F.coalesce(F.sum("bca").over(wo), F.lit(0)).alias("offa"),
-        F.sum("bca").over(wt).alias("na"))
-    win = (Window.partitionBy("bkt").orderBy(F.asc("value"))
-           .rowsBetween(Window.unboundedPreceding, 0))
-    return (bucketed.join(F.broadcast(offs), "bkt")
-            .select("value", "ca", "na",
-                    (F.sum("ca").over(win) + F.col("offa")).alias("fa")))
+    b, _ = buckets(pts, F.col("value"))
+    return prefix_sums(b, [F.asc("value")], ["ca"]).select(
+        "value", "ca", F.col("tot_ca").alias("na"),
+        F.col("cum_ca").alias("fa"))
 
 
 def ks_by_source(t: dict[str, DataFrame]) -> DataFrame:
@@ -1602,10 +1344,9 @@ def value_deciles_by_type(t: dict[str, DataFrame]) -> DataFrame:
     delegated to the shared `_grouped_rank_min` helper: a
     single-window-per-group formulation would funnel each group's
     whole value axis (≈ rows/|groups| for continuous doubles) through
-    one task at 100 TB; the helper's data-proportional per-type fence
-    arrays (two-level past PREFIX_MAX_FENCES) keep every in-bucket
-    window bounded, and the nine conditional mins ride one final
-    per-type aggregate."""
+    one task at 100 TB; the helper's data-proportional per-type
+    buckets keep every in-bucket window bounded, and the nine
+    conditional mins ride one final per-type aggregate."""
     pts = (t["events"]
            .where(F.col("value").isNotNull())
            .groupBy("event_type",
@@ -1624,32 +1365,20 @@ def customer_revenue_lorenz(t: dict[str, DataFrame]) -> DataFrame:
     decile's exact revenue and the cumulative revenue share — the
     "top 10% of customers carry X% of revenue" concentration report.
 
-    Third reuse of the `_rank_buckets` prefix decomposition (after
-    abc_classification and global_row_index): contiguous ranks come
-    from data-proportional range buckets + in-bucket row_number +
-    broadcast offsets — no single-task global ORDER BY over the
-    customer table. Deciles are integer rank arithmetic
-    (floor(rank·10/n)); revenue stays exact decimal until the two
-    final IEEE divisions (share, cum share)."""
+    Contiguous ranks are the distributed prefix sum
+    (`functions/prefix.py`) of a constant 1 — no single-task global
+    ORDER BY over the customer table. Deciles are integer rank
+    arithmetic (floor(rank·10/n)); revenue stays exact decimal until
+    the two final IEEE divisions (share, cum share)."""
     from ..functions.cache import retain
     rev = retain(t["orders"]
                  .groupBy("o_custkey")
                  .agg(F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
                       .cast("decimal(38,6)").alias("rev_d")))
-    bucketed, n = _rank_buckets_probed(
-        rev.withColumn("_k", F.col("rev_d").cast("double")))
-    bt = bucketed.groupBy("bkt").agg(F.count(F.lit(1)).alias("cnt"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offs = bt.select(
-        "bkt", F.coalesce(F.sum("cnt").over(wo),
-                          F.lit(0).cast("long")).alias("off"))
-    win = (Window.partitionBy("bkt")
-           .orderBy(F.asc("rev_d"), F.asc("o_custkey")))
-    ranked = (bucketed.join(F.broadcast(offs), "bkt")
-              .select("rev_d",
-                      (F.row_number().over(win) - 1 + F.col("off"))
-                      .alias("rank")))
+    b, n = buckets(rev, F.col("rev_d").cast("double"))
+    ranked = prefix_sums(b.withColumn("one", F.lit(1)),
+                         [F.asc("rev_d"), F.asc("o_custkey")], ["one"]) \
+        .select("rev_d", (F.col("cum_one") - 1).alias("rank"))
     # integer DIV, not cast-of-double: DuckDB CAST(double AS INT)
     # rounds half-away while Spark truncates — floor division is the
     # same operation in both engines
@@ -1772,194 +1501,56 @@ def daily_revenue_autocorr(t: dict[str, DataFrame]) -> DataFrame:
         (F.floor(raw * 1e9 + F.lit(0.5)) / 1e9).alias("autocorr"))
 
 
-def _grouped_rank_min(pts: DataFrame,
-                      targets: dict[str, str]) -> DataFrame:
-    """Per-group order statistics over per-(event_type, _k) counts
-    `c` via the GROUPED distributed prefix-sum ECDF (the
-    value_deciles_by_type decomposition): one grouped
-    approx_percentile sketch yields data-proportional per-type fence
-    arrays (broadcast back; fence placement only affects balance —
-    the bucket test is monotone and ties never straddle buckets),
-    per-(type, bucket) totals give exclusive offsets over a tiny
-    frame, in-bucket cumulative windows stay bounded-size, and every
-    requested statistic rides one final per-type aggregate.
+def _grouped_rank_min(pts: DataFrame, targets: dict[str, str],
+                      group: str | None = "event_type") -> DataFrame:
+    """Per-group order statistics over per-(``group``, _k) counts `c`
+    via the grouped distributed prefix sum (`functions/prefix.py`).
 
     ``targets`` maps output column name → SQL expression over ``n``
     (the group row count) giving the 1-based target rank; the result
-    has one row per event_type with ``n_rows`` plus, per target, the
-    MIN ``_k`` whose cumulative count reaches that rank.
-
-    Like `_rank_buckets`, the decomposition RECURSES one level past
-    PREFIX_MAX_FENCES: coarse per-group fences split each group's
-    axis ~sqrt(nb) ways, then ONE second grouped sketch keyed on
-    (group, coarse bucket) refines to nb total — so a single giant
-    group (> fences·target rows, ~4G distinct values) no longer
-    collapses the in-bucket window onto >4M-row tasks. The level-1
-    frame is retained so Catalyst never inlines the lambda-bearing
-    `_b1` column across the grouping/join branches (the
-    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND hazard SURVEY documents)."""
-    return _grouped_rank_min_multi(pts, {"c": targets}) \
+    has one row per non-NULL ``group`` value (a single row when
+    ``group`` is None) with ``n_rows`` plus, per target, the MIN
+    ``_k`` whose cumulative count reaches that rank."""
+    return _grouped_rank_min_multi(pts, {"c": targets}, group) \
         .withColumnRenamed("n_c", "n_rows")
 
 
-def _subsample_fences(fa, m: int, res: int | None = None) -> list[float]:
-    """m-1 monotone cut points from a fixed-resolution percentile
-    sketch: index round-down mapping of i/m onto the sketch grid.
-    Any monotone subsample is a VALID fence set (equal keys share a
-    bucket via the > test; placement affects balance only), so no
-    divisibility between m and the sketch resolution is required."""
-    vals = [float(x) for x in (fa or []) if x is not None]
-    if not vals or m <= 1:
-        return []
-    k = len(vals) + 1
-    out = []
-    for i in range(1, m):
-        idx = max(0, min(len(vals) - 1, (i * k) // m - 1))
-        out.append(vals[idx])
-    return out
-
-
 def _grouped_rank_min_multi(pts: DataFrame,
-                            weights: dict[str, dict[str, str]]) \
+                            weights: dict[str, dict[str, str]],
+                            group: str | None = "event_type") \
         -> DataFrame:
-    """Multi-weight core of `_grouped_rank_min`: the SAME bucket
-    pipeline (one probe, one fence sketch, one in-bucket window pass)
-    carries ANY number of weight columns at once — so an operator
-    needing order statistics under two weightings (e.g. a
-    quantity-weighted median AND the row median) pays one scan, not
-    one pipeline per weighting.
+    """Multi-weight core of `_grouped_rank_min`: ONE bucket pipeline
+    carries any number of weight columns, so order statistics under
+    two weightings (a quantity-weighted median AND the row median)
+    pay one scan, not one pipeline per weighting.
 
     ``weights`` maps weight column → {output name → SQL rank
     expression over ``n``}, where ``n`` inside each expression binds
-    to THAT weight's group total. Returns one row per event_type with
+    to THAT weight's group total. Returns one row per group with
     ``n_<w>`` per weight plus every requested MIN ``_k``."""
-    import math
     import re
 
     from ..functions.cache import retain
-    wcols = list(weights)
-    # retained: the points frame feeds the size/fence probe AND the
-    # bucket pipeline — uncached it recomputes (and rescans its
-    # input) twice per call
-    pts = retain(pts)
-    # ONE setup job where there used to be two: the per-type weight
-    # totals (which size the bucket count) and the fence sketch ride
-    # the SAME grouped aggregate and come back in one collect. The
-    # sketch is taken at the fixed PREFIX_MAX_FENCES resolution and
-    # subsampled to the needed bucket count — fences only affect
-    # BALANCE (ties never straddle a bucket and the rank assembly is
-    # exact for ANY monotone fence set), so a finer sketch changes no
-    # result. The collected fences become per-type array literals in
-    # a map lookup, which also removes the per-call broadcast fence
-    # join from the main pass.
-    def fence_pcts(m: int) -> str:
-        return ",".join(str(i / m) for i in range(1, m))
-
-    probe_rows = (pts.groupBy("event_type")
-                  .agg(*[F.sum(w).alias(w) for w in wcols],
-                       F.expr(f"approx_percentile(_k, "
-                              f"array({fence_pcts(PROBE_FENCES)})"
-                              f", 10000)").alias("_fa"))
-                  .collect())
-    n_max = max((max(r[w] or 0 for w in wcols) for r in probe_rows),
-                default=0)
-    nb = max(16, math.ceil(n_max / PREFIX_TARGET_ROWS))
-
-    def fence_map(m: int) -> F.Column:
-        """Literal map event_type → its m-bucket fence array: the
-        full-resolution sketch subsampled to m-1 monotone cut points
-        (any monotone subsample is valid — fences are balance-only)."""
-        entries: list[F.Column] = []
-        for r in probe_rows:
-            if r["event_type"] is None:
-                continue     # inner fence join dropped null types too
-            sub = _subsample_fences(r["_fa"], m)
-            entries.append(F.lit(r["event_type"]))
-            entries.append(F.array(*[F.lit(x) for x in sub])
-                           if sub else
-                           F.array().cast("array<double>"))
-        return F.create_map(*entries)
-
-    def grouped_fences(frame: DataFrame, keys: list[str], m: int,
-                       out: str) -> DataFrame:
-        acc = max(10000, m * 64)
-        return (frame.groupBy(*keys)
-                .agg(F.expr(f"approx_percentile(_k, "
-                            f"array({fence_pcts(m)}), {acc})")
-                     .alias(out)))
-
-    def map_bucketed(frame: DataFrame, m: int, out: str) -> DataFrame:
-        """Bucket via the literal fence map when the probe sketch
-        resolves m buckets; past PROBE_FENCES, fall back to the
-        exact-resolution grouped sketch + broadcast join (one more
-        job — exactly the pre-fusion cost, big inputs only)."""
-        if m <= PROBE_FENCES:
-            fm = fence_map(m)
-            return (frame
-                    .withColumn("_fx", F.element_at(
-                        fm, F.col("event_type")))
-                    .withColumn(out, F.size(F.filter(
-                        "_fx", lambda x: F.col("_k") > x)))
-                    .drop("_fx"))
-        fs = grouped_fences(frame, ["event_type"], m, "_fx")
-        return (frame.join(F.broadcast(fs), "event_type")
-                .withColumn(out, F.size(F.filter(
-                    "_fx", lambda x: F.col("_k") > x)))
-                .drop("_fx"))
-
-    if not any(r["event_type"] is not None for r in probe_rows):
-        # empty input (or only the null-type group, which the fence
-        # join always dropped): degenerate single bucket
-        bucketed = (pts.where(F.col("event_type").isNotNull())
-                    .withColumn("bkt", F.lit(0)))
-    elif nb <= PREFIX_MAX_FENCES:
-        bucketed = map_bucketed(
-            pts.where(F.col("event_type").isNotNull()), nb, "bkt")
-    else:
-        nb1 = min(PREFIX_MAX_FENCES, math.ceil(math.sqrt(nb)))
-        nb2 = math.ceil(nb / nb1)
-        lvl1 = retain(map_bucketed(
-            pts.where(F.col("event_type").isNotNull()), nb1, "_b1"))
-        f2 = grouped_fences(lvl1, ["event_type", "_b1"], nb2, "_fb")
-        bucketed = (lvl1.join(F.broadcast(f2), ["event_type", "_b1"])
-                    .withColumn("bkt", F.col("_b1") * nb2
-                                + F.size(F.filter(
-                                    "_fb", lambda x: F.col("_k") > x)))
-                    .drop("_fb", "_b1"))
-    bt = (bucketed.groupBy("event_type", "bkt")
-          .agg(*[F.sum(w).alias(f"bc_{w}") for w in wcols]))
-    wo = (Window.partitionBy("event_type").orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    wt = Window.partitionBy("event_type")
-    offs = bt.select(
-        "event_type", "bkt",
-        *[F.coalesce(F.sum(f"bc_{w}").over(wo), F.lit(0))
-          .alias(f"off_{w}") for w in wcols],
-        *[F.sum(f"bc_{w}").over(wt).alias(f"n_{w}") for w in wcols])
-    win = (Window.partitionBy("event_type", "bkt")
-           .orderBy(F.asc("_k"))
-           .rowsBetween(Window.unboundedPreceding, 0))
-    cum = (bucketed.join(F.broadcast(offs), ["event_type", "bkt"])
-           .select("event_type", "_k",
-                   *[F.col(f"n_{w}") for w in wcols],
-                   *[(F.sum(w).over(win) + F.col(f"off_{w}"))
-                     .alias(f"cf_{w}") for w in wcols]))
+    pb = [group] if group else []
+    # retained: the points frame feeds the bucket probe AND the
+    # bucket pipeline
+    b, _ = buckets(retain(pts), F.col("_k"), pb)
+    cum = prefix_sums(b, [F.asc("_k")], list(weights), pb)
     sels = []
     for w, targets in weights.items():
         for name, expr in targets.items():
-            bound = re.sub(r"\bn\b", f"n_{w}", expr)
-            sels.append(F.min(F.when(F.col(f"cf_{w}")
+            bound = re.sub(r"\bn\b", f"tot_{w}", expr)
+            sels.append(F.min(F.when(F.col(f"cum_{w}")
                                      >= F.expr(bound),
                                      F.col("_k"))).alias(name))
-    # retained: the result is one tiny row per type, but consumers
+    # retained: the result is one tiny row per group, but consumers
     # reference it several times (a median feeds the deviation pass,
     # the broadcast stats join, AND the final report), and every
     # uncached reference re-inlines — and re-executes — the whole
     # bucket pipeline above it
-    return retain(cum.groupBy("event_type")
-                  .agg(*[F.max(f"n_{w}").alias(f"n_{w}")
-                         for w in wcols],
-                       *sels))
+    return retain(cum.groupBy(*pb)
+                  .agg(*[F.max(f"tot_{w}").alias(f"n_{w}")
+                         for w in weights], *sels))
 
 
 MAD_K = 4.4478   # 3 · 1.4826 as ONE literal: both engines parse the
@@ -2383,14 +1974,11 @@ def customer_spend_gini(t: dict[str, DataFrame]) -> DataFrame:
     the whale accounts") via the rank formulation
     G = (2·Σᵢ i·xᵢ − (n+1)·Σx) / (n·Σx) with x ascending.
 
-    The global rank is the distributed prefix-sum decomposition
-    (`_rank_buckets`, data-proportional bucket count): per-customer
-    cents spend is range-bucketed on its double image (monotone, so
-    bucket order refines the global order and cents TIES never
-    straddle buckets), bucket counts give exclusive rank offsets
-    over the constant-size bucket frame, and the in-bucket
-    `row_number` is bounded by PREFIX_TARGET_ROWS at any scale —
-    no single ORDER BY window ever sees the full customer set.
+    The global rank is the distributed prefix sum
+    (`functions/prefix.py`) of a constant 1: per-customer cents spend
+    is range-bucketed on its double image (monotone, so cents TIES
+    never straddle buckets) — no single ORDER BY window ever sees
+    the full customer set.
 
     Exactness: Σ i·xᵢ is invariant to tie ordering (a tie block
     contributes x·Σranks whatever the permutation), so the oracle's
@@ -2415,20 +2003,10 @@ def _gini_from_weights(units: DataFrame) -> DataFrame:
     so the spend and engagement variants cannot drift. Emits one row
     (n_units, total_w, gini); gini is NULL on an all-zero total."""
     from ..functions.cache import retain
-    units = retain(units.withColumn("_k", F.col("w").cast("double")))
-    # fused count+sketch probe: one setup job (n is buckets-only here —
-    # the final aggregate recounts its own n_units)
-    b, _ = _rank_buckets_probed(units)
-    bt = b.groupBy("bkt").agg(F.count(F.lit(1)).alias("bn"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offs = bt.select(
-        "bkt",
-        F.coalesce(F.sum("bn").over(wo), F.lit(0)).alias("off"))
-    win = Window.partitionBy("bkt").orderBy(F.asc("w"),
-                                            F.asc("unit_id"))
-    ranked = (b.join(F.broadcast(offs), "bkt")
-              .withColumn("rnk", F.col("off") + F.row_number().over(win)))
+    b, _ = buckets(retain(units), F.col("w"))
+    ranked = prefix_sums(b.withColumn("one", F.lit(1)),
+                         [F.asc("w"), F.asc("unit_id")], ["one"]) \
+        .withColumnRenamed("cum_one", "rnk")
     g = ranked.agg(
         F.count(F.lit(1)).alias("n_units"),
         F.sum(F.col("w").cast("decimal(38,0)")).alias("tot"),
@@ -2560,9 +2138,9 @@ def customer_spend_decile_profile(t: dict[str, DataFrame]) -> DataFrame:
     """Customer-value DECILE profile: customers ranked by exact
     lifetime spend (orders fact), cut into 10 equal-population bands
     (band = idx·10 DIV n on the distributed row index — the
-    `_rank_buckets` prefix decomposition, NO single-task global
-    sort), then per decile the population, exact decimal spend, its
-    corpus share, and the mean — the table behind "the top decile
+    `functions/prefix.py` prefix sum, NO single-task global sort),
+    then per decile the population, exact decimal spend, its corpus
+    share, and the mean — the table behind "the top decile
     is 40% of revenue" slides. Ties break (spend DESC, custkey ASC)
     so the cut is deterministic."""
     from ..functions import dec
@@ -2570,22 +2148,11 @@ def customer_spend_decile_profile(t: dict[str, DataFrame]) -> DataFrame:
     cust = retain(t["orders"]
                   .groupBy("o_custkey")
                   .agg(F.sum(dec("o_totalprice")).alias("spend")))
-    # fused count+sketch probe: one setup job; n is reused below in
-    # the decile cut expression
-    bucketed, n = _rank_buckets_probed(
-        cust.withColumn("_k", -F.col("spend").cast("double")))
-    bucketed = bucketed.select("o_custkey", "spend", "bkt")
-    bt = bucketed.groupBy("bkt").agg(F.count(F.lit(1)).alias("cnt"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offs = bt.select(
-        "bkt", F.coalesce(F.sum("cnt").over(wo),
-                          F.lit(0).cast("long")).alias("off"))
-    win = (Window.partitionBy("bkt")
-           .orderBy(F.desc("spend"), F.asc("o_custkey")))
-    idx = (F.row_number().over(win) - 1 + F.col("off")).cast("long")
-    ranked = (bucketed.join(F.broadcast(offs), "bkt")
-              .select("o_custkey", "spend", idx.alias("idx")))
+    # n (the probe's row count) is reused in the decile cut
+    b, n = buckets(cust, -F.col("spend").cast("double"))
+    ranked = prefix_sums(b.withColumn("one", F.lit(1)),
+                         [F.desc("spend"), F.asc("o_custkey")], ["one"]) \
+        .select("o_custkey", "spend", (F.col("cum_one") - 1).alias("idx"))
     dec10 = F.expr(f"idx * 10 DIV {n}").cast("int")
     tot = ranked.agg(
         F.sum("spend").cast("decimal(38,6)").alias("tot"))
@@ -3147,9 +2714,9 @@ def kruskal_wallis_values(t: dict[str, DataFrame]) -> DataFrame:
 
     Scale shape: one (type, value) count shuffle (cardinality =
     distinct cells, not rows), the global cumulative rides the shared
-    `_rank_buckets` distributed prefix sum over the DISTINCT value
-    grid (value-range-bounded, never a data-sized global sort), and
-    everything after the per-type rollup is a k-row frame."""
+    distributed prefix sum (`functions/prefix.py`) over the DISTINCT
+    value grid (value-range-bounded, never a data-sized global sort),
+    and everything after the per-type rollup is a k-row frame."""
     from ..functions.cache import retain
     d38 = "decimal(38,0)"
     vu = F.floor(F.col("value") * KW_VGRID + F.lit(0.5)).cast("long")
@@ -3159,21 +2726,11 @@ def kruskal_wallis_values(t: dict[str, DataFrame]) -> DataFrame:
                   .groupBy("event_type", "vu")
                   .agg(F.count(F.lit(1)).alias("c_gv")))
     vals = retain(cell.groupBy("vu").agg(F.sum("c_gv").alias("cnt")))
-    bucketed, _ = _rank_buckets_probed(
-        vals.withColumn("_k", F.col("vu").cast("double")))
-    bucketed = bucketed.select("vu", "cnt", "bkt")
-    bt = bucketed.groupBy("bkt").agg(F.sum("cnt").alias("bc"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offs = bt.select(
-        "bkt", F.coalesce(F.sum("bc").over(wo), F.lit(0)).alias("off"))
-    win = (Window.partitionBy("bkt").orderBy(F.asc("vu"))
-           .rowsBetween(Window.unboundedPreceding, -1))
-    ranked = (bucketed.join(F.broadcast(offs), "bkt")
-              .select("vu", "cnt",
-                      (2 * (F.coalesce(F.sum("cnt").over(win),
-                                       F.lit(0)) + F.col("off"))
-                       + F.col("cnt") + 1).alias("avg2")))
+    b, _ = buckets(vals, F.col("vu"))
+    # cum - cnt: the count strictly below vu
+    ranked = prefix_sums(b, [F.asc("vu")], ["cnt"]).select(
+        "vu", (2 * (F.col("cum_cnt") - F.col("cnt"))
+               + F.col("cnt") + 1).alias("avg2"))
     per = retain(cell.join(ranked.select("vu", "avg2"), "vu")
                  .groupBy("event_type")
                  .agg(F.sum("c_gv").alias("n"),
@@ -3377,22 +2934,22 @@ def weighted_price_median_by_flag(t: dict[str, DataFrame]) -> DataFrame:
     reports the unweighted row median at (n + 1) DIV 2 for contrast
     via a second selector target on a weight-1 rollup."""
     li = (t["lineitem"]
-          .select(F.col("l_returnflag").alias("event_type"),
+          .select("l_returnflag",
                   F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
                   .cast("long").cast("double").alias("_k"),
                   F.floor(F.col("l_quantity") + F.lit(0.5))
                   .cast("long").alias("qty")))
-    pts = (li.groupBy("event_type", "_k")
+    pts = (li.groupBy("l_returnflag", "_k")
            .agg(F.sum("qty").alias("qty"),
                 F.count(F.lit(1)).alias("ones")))
     # BOTH weightings ride ONE selector pipeline (the multi-weight
-    # core): one probe, one fence sketch, one in-bucket window pass —
-    # the two-call formulation paid the whole pipeline twice
+    # core): one probe, one in-bucket window pass — the two-call
+    # formulation paid the whole pipeline twice
     sel = _grouped_rank_min_multi(
         pts, {"qty": {"wm": "(n + 1) DIV 2"},
-              "ones": {"rm": "(n + 1) DIV 2"}})
+              "ones": {"rm": "(n + 1) DIV 2"}}, "l_returnflag")
     return sel.select(
-        F.col("event_type").alias("l_returnflag"),
+        "l_returnflag",
         F.col("n_qty").alias("total_qty"),
         (F.col("wm") / 100.0).alias("weighted_median_price"),
         F.col("n_ones").alias("n_rows"),

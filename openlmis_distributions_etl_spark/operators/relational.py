@@ -1241,14 +1241,12 @@ def order_gap_median_by_segment(t: dict[str, DataFrame]) -> DataFrame:
                                F.col("c_mktsegment").alias("segment"))
     g = retain(gaps.join(seg, "o_custkey")
                .select("segment", F.col("gap").cast("long").alias("gap")))
-    pts = (g.selectExpr("segment AS event_type",
-                        "CAST(gap AS DOUBLE) AS _k")
-           .groupBy("event_type", "_k")
+    pts = (g.selectExpr("segment", "CAST(gap AS DOUBLE) AS _k")
+           .groupBy("segment", "_k")
            .agg(F.count(F.lit(1)).alias("c")))
-    med = _grouped_rank_min(pts, {"med": "(n + 1) DIV 2"})
+    med = _grouped_rank_min(pts, {"med": "(n + 1) DIV 2"}, "segment")
     tot = g.groupBy("segment").agg(F.sum("gap").alias("gap_sum"))
-    return (med.selectExpr("event_type AS segment",
-                           "n_rows AS n_gaps",
+    return (med.selectExpr("segment", "n_rows AS n_gaps",
                            "CAST(med AS BIGINT) AS median_gap_days")
             .join(F.broadcast(tot), "segment")
             .select("segment", "n_gaps", "median_gap_days",

@@ -23,11 +23,11 @@ as DataFrame rounds:
   sequential barrier count, and the extra lead() columns ride the
   same window shuffle.
 
-Rank assignment is the repo's distributed prefix decomposition
-(`_rank_buckets`, analytics.py): range-bucket a double proxy of the
-sort key data-proportionally (equal keys never straddle), dense_rank
-inside bounded buckets, and offset by the per-bucket exclusive
-count-distinct prefix over the tiny bucket frame. NO global
+Rank assignment is the repo's distributed prefix sum
+(`functions/prefix.py`): range-bucket a double proxy of the sort key
+data-proportionally (equal keys never straddle), flag the first row
+of each key inside bounded buckets, and take the running sum of the
+flags plus the per-bucket offset over the tiny bucket frame. NO global
 single-task ORDER BY at any point; each doubling round is one
 bounded-window shuffle + one broadcast join over n suffix rows, and
 there are at most ceil(log2(max doc tokens)) rounds - doc-bounded
@@ -68,7 +68,7 @@ from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
 from ..functions.cache import retain
-from .analytics import _rank_buckets_probed
+from ..functions.prefix import PREFIX_TARGET_ROWS, buckets, prefix_sums
 from .dedup import _all_docs_tokenized, _truncate_lineage
 
 LRS_SCHEMA = StructType([
@@ -108,7 +108,7 @@ def _doubling_buckets(df: DataFrame, n: int, dense_max: int,
     lexicographically = key order, so exactness is untouched and a
     Zipfian hot rank costs balance nothing."""
     import math
-    nb = max(16, math.ceil(n / 4_000_000))
+    nb = max(16, math.ceil(n / PREFIX_TARGET_ROWS))
     width = max(1, math.ceil(dense_max / nb))
     target = max(1, math.ceil(n / nb))
     hv = sorted((h, c) for h, c in (heavy or []) if c > target)
@@ -152,8 +152,9 @@ def _dense_rank_distributed(df: DataFrame, n: int, okey: list,
     (equal keys share a bucket - fences test ``_k > f``) and
     (b) monotone non-decreasing in okey order wherever doubles can
     resolve it (fence placement then only affects balance). Dense
-    rank = in-bucket dense_rank + exclusive prefix of per-bucket
-    count-distinct over the tiny (ceil(n/4M)-row) bucket frame.
+    rank = the prefix sum of a first-of-key flag (equal keys sit
+    together inside one bucket, so exactly one row per key is
+    flagged).
 
     ``dense_max``: when the LEADING okey column is already a dense
     1..dense_max rank (every doubling round after the first), fences
@@ -163,21 +164,13 @@ def _dense_rank_distributed(df: DataFrame, n: int, okey: list,
     if dense_max is not None:
         b = _doubling_buckets(df, n, dense_max, heavy)
     else:
-        # fused probe: count + fence sketch in ONE collect (the
-        # caller no longer pays a separate count job for sizing)
-        b, _ = _rank_buckets_probed(df.withColumn("_k", proxy))
-    win = Window.partitionBy("bkt").orderBy(*okey)
-    per = b.groupBy("bkt").agg(F.count_distinct(*okey).alias("_nd"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offs = per.select(
-        "bkt", F.coalesce(F.sum("_nd").over(wo),
-                          F.lit(0).cast("long")).alias("_base"))
-    return (b.withColumn("_dr", F.dense_rank().over(win))
-            .join(F.broadcast(offs), "bkt")
-            .withColumn("r", (F.col("_base") + F.col("_dr"))
-                        .cast("long"))
-            .drop("_k", "_dr", "_base", "bkt"))
+        b, _ = buckets(df, proxy)
+    key = F.struct(*okey)
+    first = ~F.lag(key).over(Window.partitionBy("bkt").orderBy(*okey)) \
+        .eqNullSafe(key)
+    return (prefix_sums(b.withColumn("new", first.cast("long")), okey,
+                        ["new"])
+            .select(*df.columns, F.col("cum_new").alias("r")))
 
 
 def _suffix_levels(t: dict[str, DataFrame]):
@@ -222,10 +215,10 @@ def _suffix_levels(t: dict[str, DataFrame]):
             .select("doc_id", "n", "pos", "r"))
     levels = [_truncate_lineage(lvl0)]
     # per-bucket row target of the doubling bucketer (mirrors
-    # _dense_rank_distributed's nb formula): the rank census below
+    # _doubling_buckets' nb formula): the rank census below
     # reports groups above it so they can be sub-bucketed by r2
     import math
-    nb = max(16, math.ceil(n_suf / 4_000_000))
+    nb = max(16, math.ceil(n_suf / PREFIX_TARGET_ROWS))
     target = max(1, math.ceil(n_suf / nb))
     width = 1
     need_census = True

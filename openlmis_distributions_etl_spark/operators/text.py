@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions import spread
 from ..functions.cache import retain
+from ..functions.prefix import buckets, prefix_sums
 
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in")
 # marker-token profiles for the stopword language-ID heuristic
@@ -1682,35 +1683,22 @@ def vocab_coverage_curve(t: dict[str, DataFrame]) -> DataFrame:
     the tokenizer-budget planning number (how big a word-level vocab
     must be before <unk> mass is negligible).
 
-    The global frequency rank is the distributed prefix-sum
-    decomposition (`_rank_buckets` on the NEGATED count, so bucket
-    order is count-descending and count TIES never straddle
-    buckets): bucket row-counts give exclusive rank offsets over the
-    constant-size bucket frame and the in-bucket `row_number`
-    (count desc, token asc — the oracle's exact tie-break) is
-    bounded per task at any vocabulary size — no single ORDER BY
+    The global frequency rank is the distributed prefix sum
+    (`functions/prefix.py`) of a constant 1 under (count desc, token
+    asc — the oracle's exact tie-break), bucketed on the NEGATED
+    count so count TIES never straddle buckets — no single ORDER BY
     window over the (at web scale, billions-row) vocabulary. Each
     k's covered-token mass is a conditional sum in ONE final
     aggregate; rank·count sums are exact BIGINTs and coverage is a
     single double division."""
-    from ..operators.analytics import _rank_buckets_probed
     vocab = retain(
         t["documents"]
         .select(F.explode(tokens()).alias("token"))
-        .groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("_k", -F.col("cnt").cast("double")))
-    # fused count+sketch probe: one setup job
-    b, _ = _rank_buckets_probed(vocab)
-    bt = b.groupBy("bkt").agg(F.count(F.lit(1)).alias("bn"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offs = bt.select(
-        "bkt", F.coalesce(F.sum("bn").over(wo), F.lit(0)).alias("off"))
-    win = Window.partitionBy("bkt").orderBy(F.desc("cnt"),
-                                            F.asc("token"))
-    ranked = (b.join(F.broadcast(offs), "bkt")
-              .withColumn("rnk",
-                          F.col("off") + F.row_number().over(win)))
+        .groupBy("token").agg(F.count(F.lit(1)).alias("cnt")))
+    b, _ = buckets(vocab, -F.col("cnt").cast("double"))
+    ranked = prefix_sums(b.withColumn("one", F.lit(1)),
+                         [F.desc("cnt"), F.asc("token")], ["one"]) \
+        .withColumnRenamed("cum_one", "rnk")
     aggs = [F.count(F.lit(1)).alias("vocab_size"),
             F.sum("cnt").alias("tok_total")]
     for k in VOCAB_COVERAGE_KS:
@@ -1862,39 +1850,19 @@ def token_budget_sample(t: dict[str, DataFrame]) -> DataFrame:
     the corpus's TOKEN mass, where uniform doc sampling skews short.
 
     The cumulative axis is the distributed prefix sum
-    (`_rank_buckets` on doc_id — unique, so buckets are exact):
-    per-bucket token totals give exclusive weight offsets over the
-    constant-size bucket frame, the in-bucket running sum is bounded
-    per task, and tick-crossing is pure integer arithmetic
-    (cum_before DIV T < cum_after DIV T), identical in the oracle."""
-    from ..operators.analytics import _rank_buckets_probed
-
+    (`functions/prefix.py`) of token counts in doc_id order, and
+    tick-crossing is pure integer arithmetic (cum_before DIV T <
+    cum_after DIV T), identical in the oracle."""
     d = retain(t["documents"]
                .select("doc_id", "lang", "source",
-                       F.size(tokens()).cast("long").alias("nt"))
-               .withColumn("_k", F.col("doc_id").cast("double")))
-    # fused count+sketch probe: one setup job
-    b, _ = _rank_buckets_probed(d)
-    bt = b.groupBy("bkt").agg(F.sum("nt").alias("bw"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    wt = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding,
-                       Window.unboundedFollowing))
-    offs = bt.select(
-        "bkt",
-        F.coalesce(F.sum("bw").over(wo), F.lit(0).cast("long"))
-        .alias("woff"),
-        F.sum("bw").over(wt).alias("wtot"))
-    run = (Window.partitionBy("bkt").orderBy(F.asc("doc_id"))
-           .rowsBetween(Window.unboundedPreceding, 0))
-    j = (b.join(F.broadcast(offs), "bkt")
-         .withColumn("cum_after",
-                     F.col("woff") + F.sum("nt").over(run))
+                       F.size(tokens()).cast("long").alias("nt")))
+    b, _ = buckets(d, F.col("doc_id").cast("double"))
+    j = (prefix_sums(b, [F.asc("doc_id")], ["nt"])
+         .withColumnRenamed("cum_nt", "cum_after")
          .withColumn("cum_before", F.col("cum_after") - F.col("nt"))
          .withColumn("tick", F.greatest(
              F.lit(1).cast("long"),
-             F.expr(f"wtot DIV {SYSTEMATIC_TICKS}"))))
+             F.expr(f"tot_nt DIV {SYSTEMATIC_TICKS}"))))
     return (j.where(F.expr("cum_before DIV tick")
                     < F.expr("cum_after DIV tick"))
             .select("doc_id", "lang", "source", "nt",
@@ -2372,12 +2340,11 @@ def ccnet_perplexity_buckets(t: dict[str, DataFrame]) -> DataFrame:
     d = retain(t["documents"].select("doc_id", "lang")
                .join(lm, "doc_id")
                .select("lang", "score"))
-    pts = (d.groupBy(F.col("lang").alias("event_type"),
-                     F.col("score").cast("double").alias("_k"))
+    pts = (d.groupBy("lang", F.col("score").cast("double").alias("_k"))
            .agg(F.count(F.lit(1)).alias("c")))
     fences = _grouped_rank_min(
-        pts, {"f1": "(n + 2) DIV 3", "f2": "(2 * n + 2) DIV 3"}) \
-        .select(F.col("event_type").alias("lang"), "f1", "f2")
+        pts, {"f1": "(n + 2) DIV 3", "f2": "(2 * n + 2) DIV 3"},
+        "lang").select("lang", "f1", "f2")
     sd = F.col("score").cast("double")
     bucketed = (d.join(F.broadcast(fences), "lang")
                 .select("lang", "score",
@@ -2588,12 +2555,11 @@ def ccnet_sampling_plan(t: dict[str, DataFrame]) -> DataFrame:
                .select("doc_id", "lang", F.size(tokens()).alias("n_toks"))
                .join(lm, "doc_id", "left"))
     pts = (d.where(F.col("score").isNotNull())
-           .groupBy(F.col("lang").alias("event_type"),
-                    F.col("score").cast("double").alias("_k"))
+           .groupBy("lang", F.col("score").cast("double").alias("_k"))
            .agg(F.count(F.lit(1)).alias("c")))
     fences = _grouped_rank_min(
-        pts, {"f1": "(n + 2) DIV 3", "f2": "(2 * n + 2) DIV 3"}) \
-        .select(F.col("event_type").alias("lang"), "f1", "f2")
+        pts, {"f1": "(n + 2) DIV 3", "f2": "(2 * n + 2) DIV 3"},
+        "lang").select("lang", "f1", "f2")
     sd = F.col("score").cast("double")
     coin = (F.conv(F.substring(
         F.md5(F.concat(F.lit("ccnet|"), F.col("doc_id").cast("string"))
@@ -2814,10 +2780,9 @@ def classifier_auc(t: dict[str, DataFrame]) -> DataFrame:
     + g + 1), rank sums accumulate in DECIMAL(38,0), and the two
     final divisions are the only floats (bit-identical in DuckDB).
     Shape: the per-distinct-score count grid (one map-side-combinable
-    shuffle, cardinality = distinct scores), then the `_rank_buckets`
-    distributed prefix sum — no global sort at any scale."""
-    from .analytics import _rank_buckets_probed
-    from ..functions.cache import retain
+    shuffle, cardinality = distinct scores), then the distributed
+    prefix sum of `functions/prefix.py` — no global sort at any
+    scale."""
     score = hashed_classifier_score(t).select("doc_id", "w_sum")
     keep = doc_quality_filters(t).select("doc_id", "keep")
     pts = retain(
@@ -2825,29 +2790,11 @@ def classifier_auc(t: dict[str, DataFrame]) -> DataFrame:
         .groupBy("w_sum")
         .agg(F.sum("keep").cast("long").alias("c1"),
              F.sum(1 - F.col("keep")).cast("long").alias("c0")))
-    # fused count+sketch probe: one setup job
-    bucketed, _ = _rank_buckets_probed(
-        pts.withColumn("_k", F.col("w_sum").cast("double")))
-    bucketed = bucketed.select("w_sum", "c1", "c0", "bkt")
-    bt = bucketed.groupBy("bkt").agg(F.sum("c1").alias("b1"),
-                                     F.sum("c0").alias("b0"))
-    wo = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1))
-    wt = (Window.orderBy(F.asc("bkt"))
-          .rowsBetween(Window.unboundedPreceding,
-                       Window.unboundedFollowing))
-    offs = bt.select(
-        "bkt",
-        F.coalesce(F.sum("b1").over(wo), F.lit(0)).alias("off1"),
-        F.coalesce(F.sum("b0").over(wo), F.lit(0)).alias("off0"),
-        F.sum("b1").over(wt).alias("n1"),
-        F.sum("b0").over(wt).alias("n0"))
-    win = (Window.partitionBy("bkt").orderBy(F.asc("w_sum"))
-           .rowsBetween(Window.unboundedPreceding, 0))
-    cum = (bucketed.join(F.broadcast(offs), "bkt")
-           .select("w_sum", "c1", "c0", "n1", "n0",
-                   (F.sum("c1").over(win) + F.col("off1")).alias("f1"),
-                   (F.sum("c0").over(win) + F.col("off0")).alias("f0")))
+    b, _ = buckets(pts, F.col("w_sum").cast("double"))
+    cum = prefix_sums(b, [F.asc("w_sum")], ["c1", "c0"]).select(
+        "c1", "c0", F.col("tot_c1").alias("n1"),
+        F.col("tot_c0").alias("n0"), F.col("cum_c1").alias("f1"),
+        F.col("cum_c0").alias("f0"))
     prior = (F.col("f1") - F.col("c1") + F.col("f0") - F.col("c0"))
     grp = F.col("c1") + F.col("c0")
     r2 = (F.col("c1").cast("decimal(38,0)")

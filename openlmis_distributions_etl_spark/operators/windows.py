@@ -681,8 +681,9 @@ def peak_concurrent_sessions(t: dict[str, DataFrame]) -> DataFrame:
     tie, applies BEFORE a +1 at the same microsecond (a session
     starting at another's end+1 is not concurrent with it) — the
     (us asc, delta asc) sort key, identical in the oracle. The in-day window partitions on the calendar day;
-    at extreme per-day volumes the same fence decomposition as
-    `_rank_buckets` applies (documented, not needed at gate scale)."""
+    at extreme per-day volumes the bucket decomposition of
+    `functions/prefix.py` applies (documented, not needed at gate
+    scale)."""
     sess = (sessionize_events(t)
             .groupBy("user_id", "session_id")
             .agg(F.min("ts_us").alias("start_us"),
@@ -732,9 +733,9 @@ def funnel_convert_time_quantiles(t: dict[str, DataFrame]) -> DataFrame:
 
     Composes the signup→purchase funnel (per-user min aggregates, one
     user shuffle) with the grouped prefix-sum ECDF selection
-    (`_grouped_rank_min` under a single pseudo-group — the machinery
-    keeps every in-bucket window bounded even for one group, which is
-    exactly the 100 TB case a single global sort would lose).
+    (`_grouped_rank_min` with no group — the machinery keeps every
+    in-bucket window bounded even for one group, which is exactly the
+    100 TB case a single global sort would lose).
     Conversion time is exact integer microseconds floored to whole
     seconds before selection."""
     from ..operators.analytics import _grouped_rank_min
@@ -743,15 +744,13 @@ def funnel_convert_time_quantiles(t: dict[str, DataFrame]) -> DataFrame:
             .select(F.expr("(first_purchase_after_us"
                            " - first_signup_us) DIV 1000000")
                     .alias("secs")))
-    pts = (conv.select(F.lit("all").alias("event_type"),
-                       F.col("secs").cast("double").alias("_k"))
-           .groupBy("event_type", "_k")
+    pts = (conv.groupBy(F.col("secs").cast("double").alias("_k"))
            .agg(F.count(F.lit(1)).alias("c")))
     qs = _grouped_rank_min(pts, {
         "p25_s": "(n + 3) DIV 4",
         "p50_s": "(n + 1) DIV 2",
         "p75_s": "(3 * n + 3) DIV 4",
-        "p90_s": "(9 * n + 9) DIV 10"})
+        "p90_s": "(9 * n + 9) DIV 10"}, None)
     return qs.select(
         F.col("n_rows").alias("n_converted"),
         F.col("p25_s").cast("bigint").alias("p25_s"),

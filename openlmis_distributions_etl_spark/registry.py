@@ -540,193 +540,8 @@ def _wrap(fn) -> QueryFn:
     return run
 
 
-# Names the driver's correctness sampler has ALREADY drawn (union of
-# CORRECTNESS_r01-r07). The sampler draws from the registry prefix,
-# so queries() enumerates the never-sampled operators FIRST -
-# rotating driver exposure onto the least-covered waves while every
-# entry stays in the registry either way.
-_DRIVER_SAMPLED = frozenset((
-    # -- CORRECTNESS_r09 (49 green + pagerank rows-only) --
-    "abc_classification", "asof_nearest_click",
-    "bloom_prefilter_dedup", "bpe_apply_doc_tokens",
-    "bpe_merge_pairs", "bpe_vocab_32",
-    "chi2_event_segments", "daily_value_ffill",
-    "date_dim", "dedup_keep_best",
-    "demand_yoy_by_type", "doc_bigram_lm_score",
-    "doc_chunks", "doc_novelty_rate",
-    "doc_simpson_diversity", "dup_span_removal",
-    "dup_span_stats", "edit_distance_pairs",
-    "event_value_zscores", "exact_median_value",
-    "exact_quantiles_value", "grouping_sets_report",
-    "hll_partitioned_union", "join_key_skew_audit",
-    "knn_filtered", "knn_ivf_pq",
-    "knn_pq_refine", "ks_by_source",
-    "ks_drift_value", "ks_windowed",
-    "langid_confusion", "matryoshka_prefix_eval",
-    "minhash_pair_precision", "monthly_revenue_growth",
-    "orders_backlog_aging", "pagerank_dup_graph",
-    "pq_balanced_perm", "pq_codebook_trained",
-    "pq_codes_trained", "psi_value_drift",
-    "psi_windowed", "return_rate_by_brand",
-    "rfm_segments", "rq_codes",
-    "semantic_dup_lang_matrix", "shingle_overlap_pairs",
-    "source_quota_sample", "supplier_lead_time_gaps",
-    "supplier_scorecard", "window_rank_report",
-    # -- CORRECTNESS_r08 (all 50 green) --
-    "approx_value_percentiles", "asof_time_to_purchase",
-    "bm25_scores", "cohort_retention",
-    "curation_pipeline", "daily_active_users",
-    "dedup_ngram_coverage", "deterministic_sample",
-    "deterministic_shuffle", "doc_bpe_token_count",
-    "doc_dup_rate_by_source", "doc_fingerprint",
-    "doc_langid", "doc_oov_rate",
-    "doc_quality_filters", "doc_quality_score",
-    "doc_rolling_hash", "doc_tfidf_top_terms",
-    "doc_token_count", "embedding_norms",
-    "embedding_quantize_int8", "event_transitions",
-    "event_value_outliers", "funnel_three_step",
-    "hashed_classifier_score", "hybrid_search_rrf",
-    "kmeans_centroids", "knn_batch",
-    "knn_bruteforce", "knn_ivf",
-    "knn_ivf_trained", "knn_pq_adc",
-    "label_centroids", "language_mixture_weights",
-    "multimodal_byte_stats_arrow", "multimodal_features",
-    "multimodal_frame_sample", "multimodal_shard_plan",
-    "pii_redaction", "pq_codes",
-    "range_join_value_buckets", "salted_event_type_stats",
-    "semantic_dedup_components", "semantic_dedup_pairs",
-    "sequence_packing", "sliding_window_event_counts",
-    "token_countmin_topk", "token_freq_topk",
-    "user_value_histogram_pandas", "winnowing_fingerprints",
-    # -- CORRECTNESS_r07 (all 50 green) --
-    "anova_f_values", "bbit_minhash_estimate",
-    "brown_forsythe_variance_test", "ccnet_perplexity_buckets",
-    "ccnet_sampling_plan", "centroid_drift",
-    "conformal_value_intervals", "cramers_v_audit",
-    "cross_source_dup_matrix", "customer_band_migration",
-    "daily_revenue_periodogram", "doc_ttr_profile",
-    "dsir_importance_weights", "embedding_dim_psi",
-    "event_type_share_trend", "functional_dependency_audit",
-    "gopher_ngram_fractions", "gopher_quality_rules",
-    "hapax_share_by_source", "heaps_law_fit",
-    "intra_inter_cosine_gap", "jl_projection_distortion",
-    "join_cardinality_estimate", "knn_beam_batch",
-    "knn_beam_batch_recall", "knn_bq_hamming",
-    "knn_bq_recall", "knn_bq_rerank",
-    "kruskal_wallis_values", "label_knn_purity",
-    "lm_heldout_perplexity", "mann_kendall_trend",
-    "mmr_diversified_topk", "ols_daily_trend",
-    "payload_chunk_overlap_pairs", "payload_dedup_components",
-    "peak_hour_by_type", "poisson_bootstrap_ci",
-    "purchase_gap_survival", "segment_pvalues_fdr",
-    "theil_sen_daily_trend", "time_decay_attribution",
-    "token_js_drift", "unigram_logprob_quality",
-    "user_retention_curve", "ushape_attribution",
-    "weighted_price_median_by_flag", "weighted_sample_docs",
-    "welch_ttest_values", "zipf_slope_topk",
-    # -- CORRECTNESS_r06 (all 50 green) --
-    "audience_bitmap_intersection", "beam_graph_edges",
-    "benford_first_digit", "boolean_and_search",
-    "classifier_score_calibration", "cume_dist_value_probes",
-    "customer_spend_decile_profile", "daily_revenue_autocorr",
-    "daily_revenue_control_chart", "decayed_user_value",
-    "decontaminated_corpus_stats", "doc_char_entropy",
-    "doc_script_mix", "dup_graph_clustering_coef",
-    "dup_rate_by_length", "embedding_outliers_diag",
-    "event_value_mad_outliers", "events_anomaly_days",
-    "knn_beam", "knn_beam_ndcg",
-    "knn_beam_recall", "knn_lsh_ndcg",
-    "label_centroid_silhouette", "late_delivery_root_cause",
-    "longest_repeated_substring", "mann_whitney_value_drift",
-    "monthly_status_mix", "nation_trade_balance",
-    "orders_skyline_2d", "part_supplier_redundancy",
-    "payload_cdc_dedup_stats", "payload_magic_types",
-    "pq_code_utilization", "priority_transition_matrix",
-    "random_pair_cos_histogram", "revenue_cohorts",
-    "session_bounce_rate", "session_type_affinity",
-    "simhash_idf", "spearman_daily_rank_corr",
-    "supplier_part_price_spread", "template_prefix_groups",
-    "time_to_third_purchase", "tokenizer_fertility_by_lang",
-    "user_active_day_streaks", "user_interarrival_stats",
-    "user_lifecycle_stages", "value_qq_table",
-    "winnowing_pair_candidates", "winsorized_value_stats",
-    # -- CORRECTNESS_r05 (all 50 green) --
-    "benford_chi2_by_priority", "centroid_distance_matrix",
-    "cohort_ltv_curve", "customer_spend_gini",
-    "discount_quantity_corr_by_brand", "doc_sentence_stats",
-    "doc_truncation_loss", "dup_graph_degree_hist",
-    "event_rate_spikes", "events_hourly_heatmap",
-    "ewma_daily_revenue", "funnel_convert_time_quantiles",
-    "hll_event_overlap", "ivf_cluster_purity",
-    "ivf_probe_sweep", "kcore_dup_graph",
-    "kmv_distinct_users", "knn_int8_recall",
-    "knn_int8_rerank", "langid_margin_hist",
-    "leakage_safe_split", "linear_touch_attribution",
-    "lsh_band_sweep", "mom_delta_by_segment",
-    "multimodal_content_dedup", "nation_supplier_hhi",
-    "opq_rotation_mse", "order_gap_median_by_segment",
-    "orders_expectations", "packing_efficiency_by_ctx",
-    "part_triple_affinity", "payload_simhash",
-    "payload_simhash_pairs", "pca_explained_variance",
-    "peak_concurrent_sessions", "revenue_changepoint",
-    "rolling_7d_active_users", "seasonal_residual_outliers",
-    "semantic_dedup_keep_best", "skipgram_pairs",
-    "source_cross_dup_matrix", "split_leakage_audit",
-    "supplier_ontime_wilson", "token_budget_sample",
-    "token_zipf_table", "top_repeated_spans",
-    "training_corpus_plan", "trimmed_mean_by_type",
-    "user_behavior_entropy", "vocab_coverage_curve",
-    # -- CORRECTNESS_r01-r04 --
-    "anti_join_inactive_customers", "approx_distinct_events",
-    "asof_purchase_attribution", "bigram_lm_top_successor",
-    "conditional_agg_returns", "contamination_overlap",
-    "correlated_subquery_max_order", "cube_status_priority",
-    "date_arithmetic_report", "dedup_components",
-    "distinct_counts", "doc_repetition_ratio",
-    "embedding_dim_stats", "embedding_near_dup_pairs",
-    "exact_dedup", "exact_dedup_stats",
-    "first_last_order_value", "fk_integrity_audit",
-    "funnel_signup_purchase", "grouped_having_big_orders",
-    "hyperplane_lsh_buckets", "incremental_dedup",
-    "ivf_cluster_stats", "json_extract_props",
-    "knn_lsh", "knn_lsh_recall",
-    "latest_event_per_user", "minhash_jaccard_estimate",
-    "minhash_lsh_pairs", "minhash_signatures",
-    "monthly_sales_rollup", "near_dup_recall",
-    "ngram_jaccard_pairs", "numeric_profile",
-    "percentile_order_value", "pivot_event_counts",
-    "q10_returned_items", "q11_important_parts",
-    "q12_late_shipment_priority", "q13_customer_order_counts",
-    "q14_promo_revenue_share", "q15_top_supplier",
-    "q16_supplier_variety", "q17_small_quantity_revenue",
-    "q18_large_volume_customers", "q19_disjunctive_revenue",
-    "q1_pricing_summary", "q20_excess_supply_suppliers",
-    "q21_sole_late_supplier", "q22_dormant_high_balance",
-    "q2_min_cost_supplier", "q3_shipping_priority",
-    "q4_order_priority", "q5_regional_volume",
-    "q6_forecast_revenue", "q7_nation_trade_volume",
-    "q8_market_share", "q9_profit_by_nation_year",
-    "rollup_priority_status", "running_total_per_user",
-    "scd2_user_state", "session_stats",
-    "session_window_stats", "sessionize_events",
-    "set_ops_customers", "simhash64",
-    "simhash_hamming_pairs", "sql_pricing_summary",
-    "star_denormalize", "stats_correlation",
-    "stratified_sample", "string_functions_report",
-    "token_positions", "topk_customers_per_nation",
-    "unpivot_priority_metrics", "user_value_histogram",
-    "window_range_frame", "windowed_event_counts",
-))
-
 def queries() -> dict[str, QueryFn]:
-    # never-driver-sampled queries enumerate FIRST, OLDEST first
-    # (insertion order), so a prefix-sampling correctness gate
-    # drains the longest-standing never-sampled tail before brand-new
-    # waves (which already carry fresh local parity + unit pins)
-    fresh = [n for n in _OPERATORS if n not in _DRIVER_SAMPLED]
-    ordered = (fresh
-               + [n for n in _OPERATORS if n in _DRIVER_SAMPLED])
-    return {name: _wrap(_OPERATORS[name]) for name in ordered}
+    return {name: _wrap(fn) for name, fn in _OPERATORS.items()}
 
 
 def oracle_sql() -> dict[str, str]:

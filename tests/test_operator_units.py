@@ -1121,38 +1121,51 @@ def test_rank_buckets_data_proportional_and_two_level(spark, monkeypatch):
     """The prefix-sum bucket count must GROW with input (the round-4
     fixed 16-bucket ceiling capped window parallelism at scale), ties
     must never straddle buckets, and the two-level recursion past
-    PREFIX_MAX_FENCES must produce the same monotone bucketing."""
-    from openlmis_distributions_etl_spark.operators import analytics as A
+    PREFIX_MAX_FENCES (and the re-sketch past PROBE_FENCES) must
+    produce the same monotone bucketing — ungrouped and per group."""
+    from openlmis_distributions_etl_spark.functions import prefix as P
     df = spark.range(5000).select(
-        ((F.col("id") * 37) % 991).cast("double").alias("_k"))
-    monkeypatch.setattr(A, "PREFIX_TARGET_ROWS", 100)  # → nb = 50
-    for max_fences, label in ((1024, "single"), (8, "two-level")):
-        monkeypatch.setattr(A, "PREFIX_MAX_FENCES", max_fences)
-        out = A._rank_buckets(df, 5000).collect()
-        per = {}
-        for r in out:
-            per.setdefault(r["bkt"], set()).add(r["_k"])
-        assert len(per) > 16, f"{label}: bucket count stuck at old ceiling"
-        # monotone in _k: bucket ranges must not interleave
-        spans = sorted((min(v), max(v), b) for b, v in per.items())
-        for (lo1, hi1, b1), (lo2, hi2, b2) in zip(spans, spans[1:]):
-            assert hi1 <= lo2 and b1 < b2, f"{label}: interleaved buckets"
-        # ties share a bucket
-        owner = {}
-        for r in out:
-            assert owner.setdefault(r["_k"], r["bkt"]) == r["bkt"], label
-        # balance: no bucket hoards the axis
-        sizes = [len([r for r in out if r["bkt"] == b]) for b in per]
-        assert max(sizes) <= 1000, f"{label}: unbalanced {max(sizes)}"
+        ((F.col("id") * 37) % 991).cast("double").alias("_k"),
+        (F.col("id") % 2).cast("string").alias("g"))
+    # (target rows, max fences, partition_by): 5000 rows at target 100
+    # → nb = 50 ungrouped, 25 per group; at target 50 → nb = 100
+    for target, max_fences, pb, label in (
+            (100, 1024, (), "single"), (100, 8, (), "two-level"),
+            (50, 1024, (), "re-sketch"), (100, 1024, ("g",), "grouped"),
+            (100, 8, ("g",), "grouped two-level")):
+        monkeypatch.setattr(P, "PREFIX_TARGET_ROWS", target)
+        monkeypatch.setattr(P, "PREFIX_MAX_FENCES", max_fences)
+        b, n = P.buckets(df, F.col("_k"), pb)
+        assert n == 5000, label
+        groups = {}
+        for r in b.collect():
+            groups.setdefault(r["g"] if pb else None, []).append(r)
+        for out in groups.values():
+            per = {}
+            for r in out:
+                per.setdefault(r["bkt"], set()).add(r["_k"])
+            assert len(per) > 16, f"{label}: bucket count stuck at old ceiling"
+            # monotone in _k: bucket ranges must not interleave
+            spans = sorted((min(v), max(v), b) for b, v in per.items())
+            for (lo1, hi1, b1), (lo2, hi2, b2) in zip(spans, spans[1:]):
+                assert hi1 <= lo2 and b1 < b2, f"{label}: interleaved buckets"
+            # ties share a bucket
+            owner = {}
+            for r in out:
+                assert owner.setdefault(r["_k"], r["bkt"]) == r["bkt"], label
+            # balance: no bucket hoards the axis
+            sizes = [len([r for r in out if r["bkt"] == b]) for b in per]
+            assert max(sizes) <= 1000, f"{label}: unbalanced {max(sizes)}"
 
 
 def test_global_row_index_exact_under_two_level_buckets(spark, monkeypatch):
     """End-to-end pin: the two-level recursion path still assigns the
     EXACT contiguous ids (fence placement only affects balance)."""
+    from openlmis_distributions_etl_spark.functions import prefix as P
     from openlmis_distributions_etl_spark.operators import analytics as A
     from openlmis_distributions_etl_spark.sources import load_tables
-    monkeypatch.setattr(A, "PREFIX_TARGET_ROWS", 20)
-    monkeypatch.setattr(A, "PREFIX_MAX_FENCES", 5)
+    monkeypatch.setattr(P, "PREFIX_TARGET_ROWS", 20)
+    monkeypatch.setattr(P, "PREFIX_MAX_FENCES", 5)
     t = load_tables(spark, SF0001)
     got = {r["doc_id"]: r["row_index"]
            for r in A.global_row_index(t).collect()}
@@ -1163,45 +1176,82 @@ def test_global_row_index_exact_under_two_level_buckets(spark, monkeypatch):
 
 def test_grouped_rank_min_two_level_exact(spark, monkeypatch):
     """The GROUPED prefix-sum ECDF must recurse past PREFIX_MAX_FENCES
-    like _rank_buckets: one giant group no longer collapses onto the
-    per-group fence ceiling, and rank selection stays EXACT under the
-    two-level split (fence placement only affects balance)."""
+    like the ungrouped split: one giant group no longer collapses onto
+    the per-group fence ceiling, and rank selection stays EXACT under
+    the two-level split (fence placement only affects balance). The
+    primitive itself must match a single-Window reference for weight
+    sums, ranks and dense ranks, ungrouped and grouped (a NULL group
+    drops out, as it gets no statistic), and on empty input."""
+    from pyspark.sql import Window
+    from openlmis_distributions_etl_spark.functions import prefix as P
     from openlmis_distributions_etl_spark.operators import analytics as A
     rows, vals = [], {}
     # group a: 900 distinct values; group b: 400 values over 97
-    # distinct (exercises the c > 1 multiplicity path)
-    for g, (n, mul, mod) in {"a": (900, 37, 997),
-                             "b": (400, 91, 97)}.items():
+    # distinct (exercises the c > 1 multiplicity path); the NULL
+    # group gets no statistic
+    for g, (n, mul, mod) in {"a": (900, 37, 997), "b": (400, 91, 97),
+                             None: (50, 13, 17)}.items():
         vs = [((i * mul) % mod) * 1.0 for i in range(n)]
-        vals[g] = sorted(vs)
+        if g is not None:
+            vals[g] = sorted(vs)
         rows += [(g, v) for v in vs]
-    pts = (spark.createDataFrame(rows, "event_type string, _k double")
-           .groupBy("event_type", "_k")
-           .agg(F.count(F.lit(1)).alias("c")))
+    raw = spark.createDataFrame(rows, "event_type string, _k double")
+    pts = raw.groupBy("event_type", "_k").agg(F.count(F.lit(1)).alias("c"))
     targets = {"med": "(n + 1) DIV 2", "p90": "(9 * n + 9) DIV 10"}
+    # weight sum, rank (constant-1 weight under a total order) and
+    # dense rank (first-of-key flag) against one Window per group
+    df = raw.select(F.monotonically_increasing_id().alias("id"), "*",
+                    (F.length(F.coalesce("event_type", F.lit("")))
+                     + F.col("_k") % 7).cast("long").alias("w"))
+    order = [F.asc("_k"), F.asc("id")]
     for target_rows, max_fences, label in (
             (1_000_000, 1024, "single"), (25, 6, "two-level")):
-        monkeypatch.setattr(A, "PREFIX_TARGET_ROWS", target_rows)
-        monkeypatch.setattr(A, "PREFIX_MAX_FENCES", max_fences)
+        monkeypatch.setattr(P, "PREFIX_TARGET_ROWS", target_rows)
+        monkeypatch.setattr(P, "PREFIX_MAX_FENCES", max_fences)
         got = {r["event_type"]: r for r in
                A._grouped_rank_min(pts, targets).collect()}
+        assert set(got) == set(vals), label
         for g, vs in vals.items():
             n = len(vs)
             assert got[g]["n_rows"] == n, label
             assert got[g]["med"] == vs[(n + 1) // 2 - 1], label
             assert got[g]["p90"] == vs[(9 * n + 9) // 10 - 1], label
+        for pb in ((), ("event_type",)):
+            ref = Window.partitionBy(*pb).orderBy(*order)
+            kept = df.where(F.col("event_type").isNotNull()) if pb else df
+            want = {r["id"]: tuple(r[1:]) for r in kept.select(
+                "id", F.sum("w").over(ref), F.row_number().over(ref),
+                F.dense_rank().over(Window.partitionBy(*pb)
+                                    .orderBy("_k")),
+                F.sum("w").over(Window.partitionBy(*pb))).collect()}
+            b, _ = P.buckets(df, F.col("_k"), pb)
+            prev = F.lag("_k").over(
+                Window.partitionBy(*pb, "bkt").orderBy(*order))
+            b = b.select("*", F.lit(1).alias("one"),
+                         (~prev.eqNullSafe(F.col("_k"))).cast("int")
+                         .alias("new"))
+            out = P.prefix_sums(b, order, ["w", "one", "new"], pb)
+            assert {r["id"]: (r["cum_w"], r["cum_one"], r["cum_new"],
+                              r["tot_w"]) for r in out.collect()} \
+                == want, f"{label} {pb}"
+    b, n = P.buckets(df.limit(0), F.col("_k"), ("event_type",))
+    assert n == 0
+    assert P.prefix_sums(b, order, ["w"], ("event_type",)).count() == 0
+    assert A._grouped_rank_min(pts.where(F.col("event_type").isNull()),
+                               targets).count() == 0
 
 
 def test_value_deciles_two_level_matches_single(spark, monkeypatch):
     """End-to-end pin: value_deciles_by_type (now on the shared
     grouped helper) returns identical deciles under the two-level
     fence split as under the parity-pinned single-level path."""
+    from openlmis_distributions_etl_spark.functions import prefix as P
     from openlmis_distributions_etl_spark.operators import analytics as A
     from openlmis_distributions_etl_spark.sources import load_tables
     t = load_tables(spark, SF0001)
     want = sorted(tuple(r) for r in A.value_deciles_by_type(t).collect())
-    monkeypatch.setattr(A, "PREFIX_TARGET_ROWS", 50)
-    monkeypatch.setattr(A, "PREFIX_MAX_FENCES", 7)
+    monkeypatch.setattr(P, "PREFIX_TARGET_ROWS", 50)
+    monkeypatch.setattr(P, "PREFIX_MAX_FENCES", 7)
     got = sorted(tuple(r) for r in A.value_deciles_by_type(t).collect())
     assert got == want
 

@@ -38,7 +38,6 @@ BNLJ_ALLOWED = {
     "knn_filtered",
     "knn_ivf_trained",
     "knn_lsh",
-    "abc_classification",      # broadcast fences + totals rows
     "psi_value_drift",         # broadcast fence rows (ECDF + deciles)
     "psi_windowed",            # broadcast fence row + 10-row baseline
     "ks_windowed",             # broadcast fence row + 64-row base grid

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Solo-probe one or more queries: time with the noop sink (warmup +
 min-of-N, the bench methodology) and optionally dump the formatted
-physical plan to plans/r10/<query>_<tag>.txt.
+physical plan to DIR/<query>.txt.
 
-Usage: python tools/probe.py [--plan TAG] [--runs N] [--sf DIR] q1 q2 ...
+Usage: python tools/probe.py [--plan DIR] [--runs N] [--sf DIR] q1 q2 ...
 """
 
 from __future__ import annotations
@@ -22,9 +22,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
-    ap.add_argument("--plan", default=None,
-                    help="dump explain('formatted') to "
-                         "plans/r10/<q>_<TAG>.txt")
+    ap.add_argument("--plan", default=None, type=Path,
+                    help="dump explain('formatted') to DIR/<q>.txt")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -42,16 +41,15 @@ def main() -> None:
         spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / "r10"
-    out_dir.mkdir(parents=True, exist_ok=True)
+    if args.plan:
+        args.plan.mkdir(parents=True, exist_ok=True)
     for name in args.queries:
         fn = qs[name]
         if args.plan:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 fn(spark, args.sf).explain("formatted")
-            (out_dir / f"{name}_{args.plan}.txt").write_text(
-                buf.getvalue())
+            (args.plan / f"{name}.txt").write_text(buf.getvalue())
         if args.runs <= 0:
             print(f"{name}: plan dumped", flush=True)
             continue
