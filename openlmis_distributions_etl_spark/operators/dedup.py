@@ -11,13 +11,13 @@ DuckDB oracles reproduce signatures bit-for-bit.
 from __future__ import annotations
 
 import hashlib
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions import pin, spread
+from ..functions.bands import Keys, band_pairs
 from ..functions.cache import retain
 from .text import tokens
 
@@ -117,71 +117,28 @@ def minhash_signatures(t: dict[str, DataFrame]) -> DataFrame:
     return pinned.selectExpr("doc_id", *[sig(j) for j in range(N_HASHES)])
 
 
-def _bands(sig: DataFrame) -> DataFrame:
-    """Explode the 16-hash signature into 4 banded bucket keys; the
-    full signature rides along so pair consumers can dedupe by
-    first-matching-band and score slot agreement without join-backs.
-
-    One Generate pass, not a union of per-band branches: a B-branch
-    union re-reads its input B times (B× the map tasks feeding the
-    band-join exchange, B copies of the subtree in the plan); the
-    explode emits the same rows in one pass over one scan."""
-    rows = N_HASHES // BANDS
-    hs = [f"h{j}" for j in range(N_HASHES)]
-    arr = F.array(*[
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.concat_ws("|", *[F.col(f"h{b * rows + r}")
-                               for r in range(rows)]).alias("band_val"))
-        for b in range(BANDS)])
-    return (sig.select("doc_id", *hs, F.explode(arr).alias("_bb"))
-            .select("doc_id", *hs, "_bb.band_id", "_bb.band_val"))
-
-
-def _first_matching_band() -> Column:
-    """Index of the first band on which the joined a/b signatures
-    agree — requiring band_id to equal it dedupes a multi-band match
-    WITHOUT shuffling the candidate stream through a distinct (the
-    near-dup-pairs trick, see similarity._banded_pairs)."""
-    rows = N_HASHES // BANDS
-
-    def band_match(j: int) -> Column:
-        m = None
-        for r in range(rows):
-            eq = F.col(f"a.h{j * rows + r}") == F.col(f"b.h{j * rows + r}")
-            m = eq if m is None else m & eq
-        return m
-
-    c = F.when(band_match(0), F.lit(0))
-    for j in range(1, BANDS - 1):
-        c = c.when(band_match(j), F.lit(j))
-    return c.otherwise(F.lit(BANDS - 1))
-
-
-def _lsh_candidate_join(bands: DataFrame) -> DataFrame:
-    """Self-join on (band_id, band_val), each pair emitted exactly
-    once (at its first matching band)."""
-    a, b = bands.alias("a"), bands.alias("b")
-    return a.join(
-        b, (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_val") == F.col("b.band_val"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & (F.col("a.band_id") == _first_matching_band()))
+def minhash_keys(bands: int = BANDS,
+                 rows: int = N_HASHES // BANDS) -> Keys:
+    """Band keys of the 16-hash signature: band b is the ``|``-joined
+    slots h[b·rows, (b+1)·rows). Equal keys ⟺ equal slots (integer
+    slots, never NULL past the SHINGLE pre-filter)."""
+    def keys(p: str) -> list[Column]:
+        return [F.concat_ws("|", *[F.col(f"{p}h{b * rows + r}")
+                                   for r in range(rows)])
+                for b in range(bands)]
+    return keys
 
 
 def minhash_lsh_pairs(t: dict[str, DataFrame]) -> DataFrame:
     """LSH candidate pairs: docs sharing any full band. The self-join
     shuffles on (band_id, band_val) — bucket-local comparison, never
     all-pairs — and dedupes by first-matching-band instead of a
-    distinct over the candidate stream."""
+    distinct over the candidate stream (`functions/bands.py`)."""
     # retained cache: the self-join would otherwise recompute the
     # 16-seed md5 signature pipeline for both sides (2× the dominant
     # cost); released when the next query starts building
-    # retain the SIGNATURE table, not the banded union: the union's
-    # 4 branches then read one cached signature instead of the cache
-    # fill running the md5 pipeline once per branch
     sig = retain(minhash_signatures(t))
-    return (_lsh_candidate_join(_bands(sig))
+    return (band_pairs(sig, "doc_id", minhash_keys())
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b")))
 
@@ -209,7 +166,7 @@ def ngram_jaccard_pairs(t: dict[str, DataFrame],
     self-join, Jaccard is verified INLINE, and a pair that collides on
     several prefix shingles is emitted exactly once — at its
     globally-rarest shared prefix shingle (the first-matching-band
-    trick, `_first_matching_band`) — so there is no `.distinct()`
+    trick of `functions/bands.py`) — so there is no `.distinct()`
     over the candidate stream and no join-back of the shingle arrays
     (the round-3 plan shuffled the candidate stream three more times:
     a pair-key distinct plus two array-payload join-backs). The price
@@ -537,38 +494,26 @@ def simhash_hamming_pairs(t: dict[str, DataFrame],
     One simhash computation (persisted — both self-join sides read
     it), a self-join shuffled on (band_id, band_val), no O(n²) stage.
     """
-    sh = retain(simhash64(t))
-    band_width = 60 // SIMHASH_BANDS
-    mask = (1 << band_width) - 1
-    parts = [
-        sh.select("doc_id", "simhash", F.lit(b).alias("band_id"),
-                  F.shiftright("simhash", band_width * b)
-                  .bitwiseAND(F.lit(mask))
-                  .alias("band_val"))
-        for b in range(SIMHASH_BANDS)
-    ]
-    banded = reduce(DataFrame.unionAll, parts)
-    a, b = banded.alias("a"), banded.alias("b")
-    # dedupe by first-matching-band on xor instead of a distinct over
-    # the candidate stream (see _first_matching_band)
-    x = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    first = F.when(x.bitwiseAND(F.lit(mask)) == 0, F.lit(0))
-    for j in range(1, SIMHASH_BANDS - 1):
-        first = first.when(
-            F.shiftright(x, band_width * j).bitwiseAND(F.lit(mask)) == 0,
-            F.lit(j))
-    first = first.otherwise(F.lit(SIMHASH_BANDS - 1))
-    cand = (
-        a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
-               & (F.col("a.band_val") == F.col("b.band_val"))
-               & (F.col("a.doc_id") < F.col("b.doc_id"))
-               & (F.col("a.band_id") == first))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.bit_count(F.col("a.simhash").bitwiseXOR(
-                    F.col("b.simhash"))).alias("hamming"))
-    )
-    return cand.where(F.col("hamming") <= max_dist)
+    return simhash_pairs(retain(simhash64(t)), "simhash", max_dist)
+
+
+def simhash_pairs(sh: DataFrame, col: str, max_dist: int) -> DataFrame:
+    """(doc_a, doc_b, hamming ≤ ``max_dist``) over the 60-bit hash in
+    ``sh.<col>``: SIMHASH_BANDS disjoint 15-bit band keys through the
+    banded pair join, then one codegen'd ``bit_count(xor)`` verify."""
+    width = 60 // SIMHASH_BANDS
+    mask = (1 << width) - 1
+
+    def keys(p: str) -> list[Column]:
+        return [F.shiftright(F.col(p + col), width * b)
+                .bitwiseAND(F.lit(mask)) for b in range(SIMHASH_BANDS)]
+
+    return (band_pairs(sh, "doc_id", keys)
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"),
+                    F.bit_count(F.col(f"a.{col}").bitwiseXOR(
+                        F.col(f"b.{col}"))).alias("hamming"))
+            .where(F.col("hamming") <= max_dist))
 
 
 def minhash_jaccard_estimate(t: dict[str, DataFrame]) -> DataFrame:
@@ -582,12 +527,12 @@ def minhash_jaccard_estimate(t: dict[str, DataFrame]) -> DataFrame:
     16-term integer sum (codegen, no arrays) — is computed inline on
     the matched row: no distinct over the candidate stream, no
     signature join-backs."""
-    bands = _bands(retain(minhash_signatures(t)))
+    sig = retain(minhash_signatures(t))
     n_agree = None
     for j in range(N_HASHES):
         term = F.when(F.col(f"a.h{j}") == F.col(f"b.h{j}"), 1).otherwise(0)
         n_agree = term if n_agree is None else n_agree + term
-    return (_lsh_candidate_join(bands)
+    return (band_pairs(sig, "doc_id", minhash_keys())
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"),
                     n_agree.cast("int").alias("n_agree"))
@@ -1493,9 +1438,9 @@ def kcore_dup_graph(t: dict[str, DataFrame]) -> DataFrame:
     edges = retain(minhash_lsh_pairs(t)
                    .selectExpr("doc_a AS a", "doc_b AS b"))
     sym, _ = _dup_sym_degrees(edges)
-    lanes = [sym.select(F.lit(k).cast("int").alias("k"), "u", "v")
-             for k in KCORE_KS]
-    symk = retain(reduce(DataFrame.unionByName, lanes))
+    # one explode of the literal lane array fans out every k-lane
+    lane = F.explode(F.array(*[F.lit(k) for k in KCORE_KS])).alias("k")
+    symk = retain(sym.select(lane, "u", "v"))
     alive = symk.select("k", F.col("u").alias("node")).distinct()
     prev: dict[int, int] = {}
     for _ in range(KCORE_ROUNDS):
@@ -1518,21 +1463,14 @@ def kcore_dup_graph(t: dict[str, DataFrame]) -> DataFrame:
         if all(cur.get(k, 0) == prev.get(k, 0) for k in KCORE_KS):
             break
         prev = cur
-    edgesk = reduce(DataFrame.unionByName,
-                    [edges.select(F.lit(k).cast("int").alias("k"),
-                                  "a", "b") for k in KCORE_KS])
-    ne = (edgesk
+    ne = (edges.select(lane, "a", "b")
           .join(alive.selectExpr("k", "node AS a"), ["k", "a"],
                 "left_semi")
           .join(alive.selectExpr("k", "node AS b"), ["k", "b"],
                 "left_semi")
           .groupBy("k").agg(F.count(F.lit(1)).alias("n_core_edges")))
     nn = alive.groupBy("k").agg(F.count(F.lit(1)).alias("n_core_nodes"))
-    spine = reduce(DataFrame.unionByName,
-                   [sym.sparkSession.range(1)
-                    .select(F.lit(k).cast("int").alias("k"))
-                    for k in KCORE_KS])
-    return (spine
+    return (sym.sparkSession.range(1).select(lane)
             .join(F.broadcast(nn), "k", "left")
             .join(F.broadcast(ne), "k", "left")
             .select("k",
@@ -1702,44 +1640,11 @@ def lsh_band_sweep(t: dict[str, DataFrame]) -> DataFrame:
     signature-slot agreement gives the Jaccard estimate in-row; a
     3-key aggregate finishes. Never all-pairs at any config."""
     sig = retain(minhash_signatures(t))
-    hs = [f"h{j}" for j in range(N_HASHES)]
+    matches = sum((F.col(f"a.h{j}") == F.col(f"b.h{j}")).cast("int")
+                  for j in range(N_HASHES))
     out = None
     for bands, rows in LSH_SWEEP_CONFIGS:
-        # one Generate pass per config, not a union of per-band
-        # branches (the _bands() rationale: B× fewer map tasks)
-        arr = F.array(*[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws("|", *[F.col(f"h{b * rows + r}")
-                                   for r in range(rows)])
-                .alias("band_val"))
-            for b in range(bands)])
-        banded = (sig.select("doc_id", *hs, F.explode(arr).alias("_bb"))
-                  .select("doc_id", *hs, "_bb.band_id", "_bb.band_val"))
-        a = banded.select(
-            F.col("doc_id").alias("doc_a"),
-            *[F.col(h).alias(f"a_{h}") for h in hs],
-            "band_id", "band_val")
-        b_ = banded.select(
-            F.col("doc_id").alias("doc_b"),
-            *[F.col(h).alias(f"b_{h}") for h in hs],
-            "band_id", "band_val")
-        # first band (lowest id) on which the two signatures agree
-        fb = None
-        for bi in reversed(range(bands)):
-            agree = reduce(
-                lambda x, y: x & y,
-                [F.col(f"a_h{bi * rows + r}")
-                 == F.col(f"b_h{bi * rows + r}") for r in range(rows)])
-            fb = (F.when(agree, F.lit(bi))
-                  if fb is None else F.when(agree, F.lit(bi))
-                  .otherwise(fb))
-        matches = sum(
-            (F.col(f"a_{h}") == F.col(f"b_{h}")).cast("int")
-            for h in hs)
-        pairs = (a.join(b_, ["band_id", "band_val"])
-                 .where(F.col("doc_a") < F.col("doc_b"))
-                 .where(F.col("band_id") == fb)
+        pairs = (band_pairs(sig, "doc_id", minhash_keys(bands, rows))
                  .select((matches.cast("double") / N_HASHES)
                          .alias("est_jaccard")))
         row = pairs.agg(
@@ -1797,7 +1702,7 @@ def bbit_minhash_estimate(t: dict[str, DataFrame]) -> DataFrame:
     columns just add a pmod before the compare. Output per pair: both
     estimates and their gap — the number that decides whether the
     16× smaller sketch is worth its variance."""
-    bands = _bands(retain(minhash_signatures(t)))
+    sig = retain(minhash_signatures(t))
     full = None
     bbit = None
     m = 1 << BBIT_B
@@ -1812,7 +1717,7 @@ def bbit_minhash_estimate(t: dict[str, DataFrame]) -> DataFrame:
     est_b = ((bbit.cast("double") - F.lit(float(N_HASHES)) / m)
              / (F.lit(float(N_HASHES))
                 * (F.lit(1.0) - F.lit(1.0) / m)))
-    return (_lsh_candidate_join(bands)
+    return (band_pairs(sig, "doc_id", minhash_keys())
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"),
                     full.cast("int").alias("n_agree_full"),

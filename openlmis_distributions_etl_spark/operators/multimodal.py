@@ -302,49 +302,16 @@ def payload_simhash_pairs(t: dict[str, DataFrame],
     as the text `simhash_hamming_pairs` (any two 60-bit hashes within
     distance 3 share one of 4 disjoint 15-bit bands — perfect recall,
     bucket-local compare), on the payload lane's simhash. One hash
-    pass (retained), one (band, value)-keyed self-join, first-
-    matching-band emission, exact bit_count(xor) verify. Never
+    pass (retained) into the shared `dedup.simhash_pairs` body: one
+    (band, value)-keyed self-join, first-matching-band emission,
+    exact bit_count(xor) verify. Never
     all-pairs; the oracle's naive join IS the banded result by
     pigeonhole."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
     from ..functions.cache import retain
-    from .dedup import SIMHASH_BANDS
+    from .dedup import simhash_pairs
 
-    sh = retain(payload_simhash(t))
-    band_width = 60 // SIMHASH_BANDS
-    mask = (1 << band_width) - 1
-    parts = [
-        sh.select("doc_id", "payload_simhash",
-                  F.lit(b).alias("band_id"),
-                  F.shiftright("payload_simhash", band_width * b)
-                  .bitwiseAND(F.lit(mask)).alias("band_val"))
-        for b in range(SIMHASH_BANDS)
-    ]
-    banded = reduce(DataFrame.unionAll, parts)
-    a, b = banded.alias("a"), banded.alias("b")
-    x = F.col("a.payload_simhash").bitwiseXOR(
-        F.col("b.payload_simhash"))
-    first = F.when(x.bitwiseAND(F.lit(mask)) == 0, F.lit(0))
-    for j in range(1, SIMHASH_BANDS - 1):
-        first = first.when(
-            F.shiftright(x, band_width * j)
-            .bitwiseAND(F.lit(mask)) == 0, F.lit(j))
-    first = first.otherwise(F.lit(SIMHASH_BANDS - 1))
-    cand = (
-        a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
-               & (F.col("a.band_val") == F.col("b.band_val"))
-               & (F.col("a.doc_id") < F.col("b.doc_id"))
-               & (F.col("a.band_id") == first))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.bit_count(
-                    F.col("a.payload_simhash").bitwiseXOR(
-                        F.col("b.payload_simhash")))
-                .alias("hamming")))
-    return cand.where(F.col("hamming") <= max_dist)
+    return simhash_pairs(retain(payload_simhash(t)), "payload_simhash",
+                         max_dist)
 
 
 def payload_magic_types(t: dict[str, DataFrame]) -> DataFrame:

@@ -1248,15 +1248,15 @@ def lsh_band_gate_stream(new_docs: DataFrame,
     exact pair verify; the firehose passes untouched. Docs too short
     to shingle can't band-match and gate through unflagged."""
     from ..functions import pin
-    from ..operators.dedup import (BANDS, MINHASH_AB, MINHASH_P,
-                                   N_HASHES, SHINGLE, _bands,
+    from ..functions.bands import explode_bands
+    from ..operators.dedup import (MINHASH_AB, MINHASH_P, SHINGLE,
                                    _shingles, bloom_bitmap,
-                                   bloom_hit_sql, minhash_signatures,
-                                   tokens)
+                                   bloom_hit_sql, minhash_keys,
+                                   minhash_signatures, tokens)
 
-    rows = N_HASHES // BANDS
     # --- static side, once at setup: snapshot band keys → Bloom ---
-    snap_bands = (_bands(minhash_signatures({"documents": snapshot}))
+    snap_sig = minhash_signatures({"documents": snapshot})
+    snap_bands = (explode_bands(snap_sig, minhash_keys())
                   .select(F.md5(F.concat(
                       F.col("band_id").cast("string"), F.lit("|"),
                       F.col("band_val")).cast("binary"))
@@ -1286,9 +1286,7 @@ def lsh_band_gate_stream(new_docs: DataFrame,
                             "size(shingles) AS n_shingles", *sigs)
     withbands = sig
     hits = []
-    for j in range(BANDS):
-        val = F.concat_ws(
-            "|", *[F.col(f"h{j * rows + r}") for r in range(rows)])
+    for j, val in enumerate(minhash_keys()("")):
         withbands = withbands.withColumn(
             f"_bh{j}",
             F.md5(F.concat(F.lit(f"{j}|"), val).cast("binary")))
@@ -1431,11 +1429,13 @@ def stream_maintain_band_index(docs: DataFrame, out_dir: str,
 
     from pyspark.errors import AnalysisException
 
-    from ..operators.dedup import _bands, minhash_signatures
+    from ..functions.bands import explode_bands
+    from ..operators.dedup import minhash_keys, minhash_signatures
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        bands = (_bands(minhash_signatures({"documents": batch}))
+        bands = (explode_bands(minhash_signatures({"documents": batch}),
+                               minhash_keys())
                  .select("band_id", "band_val").distinct())
         pointer = f"{out_dir}/_CURRENT"
         try:

@@ -327,6 +327,48 @@ def test_near_dup_banded_lsh_finds_identical_vectors(spark):
     assert out[0]["cos_sim"] == pytest.approx(1.0)
 
 
+def test_band_pairs_first_equal_band_matches_any_key_reference(spark):
+    """The banded pair join emits every pair sharing >=1 band key
+    exactly once, at its FIRST equal band, with the other columns of
+    both rows riding along — equal to a naive any-key cross join."""
+    from openlmis_distributions_etl_spark.functions.bands import band_pairs
+
+    schema = "id long, k0 long, k1 long, k2 long, k3 long, tag string"
+
+    def keys(p):
+        return [F.col(f"{p}k{j}") for j in range(4)]
+
+    df = spark.createDataFrame([
+        (1, 1, 2, 3, 4, "a1"),
+        (2, 9, 2, 8, 4, "a2"),   # = row 1 on bands 1 and 3
+        (3, 5, 6, 7, 0, "a3"),   # no band equal to rows 1 or 2
+        (4, 5, 0, 0, 9, "a4"),   # = row 3 on band 0 only
+        (5, 5, 6, 7, 0, "a5"),   # = row 3 everywhere, row 4 on band 0
+    ], schema)
+    got = [(r["a_id"], r["b_id"], r["band_id"], r["a_tag"], r["b_tag"])
+           for r in band_pairs(df, "id", keys).select(
+               F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"),
+               F.col("a.band_id").alias("band_id"),
+               F.col("a.tag").alias("a_tag"),
+               F.col("b.tag").alias("b_tag")).collect()]
+    pairs = {(a, b): (band, ta, tb) for a, b, band, ta, tb in got}
+    assert len(pairs) == len(got)      # each pair once
+    assert pairs[(1, 2)] == (1, "a1", "a2")
+    assert pairs[(3, 4)][0] == pairs[(3, 5)][0] == pairs[(4, 5)][0] == 0
+    assert (1, 3) not in pairs and (2, 3) not in pairs
+    a, b = df.alias("a"), df.alias("b")
+    any_eq = (F.col("a.k0") == F.col("b.k0"))
+    for j in range(1, 4):
+        any_eq = any_eq | (F.col(f"a.k{j}") == F.col(f"b.k{j}"))
+    ref = {(r["x"], r["y"]) for r in a.crossJoin(b)
+           .where((F.col("a.id") < F.col("b.id")) & any_eq)
+           .select(F.col("a.id").alias("x"), F.col("b.id").alias("y"))
+           .collect()}
+    assert set(pairs) == ref
+    empty = spark.createDataFrame([], schema)
+    assert band_pairs(empty, "id", keys).count() == 0
+
+
 def test_near_dup_recall_bounds(spark):
     e1 = [1.0, 2.0] + [0.5] * 62
     emb = spark.createDataFrame(

@@ -232,7 +232,8 @@ def test_incremental_dedup_no_python_and_hash_join(spark):
 
 @pytest.mark.parametrize("name", [
     "minhash_lsh_pairs", "minhash_jaccard_estimate",
-    "simhash_hamming_pairs", "embedding_near_dup_pairs",
+    "bbit_minhash_estimate", "simhash_hamming_pairs",
+    "payload_simhash_pairs", "embedding_near_dup_pairs",
 ])
 def test_lsh_pair_paths_are_distinct_free(spark, name):
     """First-matching-band dedup: every banded pair query emits each

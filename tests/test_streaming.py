@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF0001
 
+from openlmis_distributions_etl_spark.functions.bands import explode_bands
 from openlmis_distributions_etl_spark.operators import windows
 from openlmis_distributions_etl_spark.sources import load_tables
 from openlmis_distributions_etl_spark.streaming import jobs
@@ -642,9 +643,12 @@ def test_lsh_band_gate_stream_matches_batch(spark):
         jobs.lsh_band_gate_stream(stream, snapshot),
         "lsh_band_gate", spark, "append")
     # batch twin: incoming docs sharing any (band_id, band_val)
-    bn = (dedup._bands(dedup.minhash_signatures({"documents": incoming}))
+    keys = dedup.minhash_keys()
+    bn = (explode_bands(dedup.minhash_signatures({"documents": incoming}),
+                        keys)
           .select("doc_id", "band_id", "band_val"))
-    bo = (dedup._bands(dedup.minhash_signatures({"documents": snapshot}))
+    bo = (explode_bands(dedup.minhash_signatures({"documents": snapshot}),
+                        keys)
           .select("band_id", "band_val").distinct())
     want_flagged = {r["doc_id"] for r in
                     bn.join(bo, ["band_id", "band_val"], "left_semi")
@@ -707,7 +711,7 @@ def test_band_index_store_matches_batch(spark, tmp_path):
         spark, store).collect()))
     t = load_tables(spark, SF0001, "documents")
     want = sorted(map(tuple, (
-        dedup._bands(dedup.minhash_signatures(t))
+        explode_bands(dedup.minhash_signatures(t), dedup.minhash_keys())
         .select("band_id", "band_val").distinct().collect())))
     assert got == want
     q2 = jobs.stream_maintain_band_index(
