@@ -26,17 +26,6 @@ def write_partitioned_parquet(df: DataFrame, path: str,
     writer.parquet(path)
 
 
-def write_bucketed_table(df: DataFrame, table: str, bucket_cols: Sequence[str],
-                         n_buckets: int = 32, mode: str = "overwrite") -> None:
-    """Bucketed managed table: co-locates rows by key so equi-joins /
-    aggregations on bucket_cols run shuffle-free."""
-    (df.write.mode(mode)
-     .bucketBy(n_buckets, *bucket_cols)
-     .sortBy(*bucket_cols)
-     .format("parquet")
-     .saveAsTable(table))
-
-
 def write_jdbc(df: DataFrame, url: str, table: str,
                mode: str = "append", batchsize: int = 10_000,
                num_partitions: int | None = None,

@@ -10,13 +10,21 @@ both win: the loser gets a VersionConflictError and retries against
 the new latest (optimistic concurrency, the Delta commit protocol in
 miniature).
 
+Every manifest records the TABLE schema (the union of its files'
+columns, in the order a footer merge gives), so a read is planned
+from the manifest alone: ``_scan`` hands that schema to the reader and
+no schema-inference job runs until the action. Files that lack a
+column null-fill it. Only a manifest with no ``schema`` key (one
+written before manifests recorded it) falls back to a mergeSchema
+footer read.
+
 What this deliberately does NOT do (and a production format adds):
 compaction of the manifest log, file-level column statistics for data
 skipping, and schema evolution rules. The foreachBatch snapshot upsert
 in streaming/jobs.py is the streaming producer of the same pattern.
 
 Layout:
-    <table>/_log/v00000042.json   # {"version", "files", "mode"}
+    <table>/_log/v00000042.json   # {"version", "files", "mode", "schema"}
     <table>/data/v00000042-<uuid>/part-*.parquet
 """
 
@@ -28,6 +36,7 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _LOG = "_log"
 _DATA = "data"
@@ -52,6 +61,20 @@ def versions(path: str) -> list[int]:
 def _read_manifest(path: str, version: int) -> dict:
     with open(_log_dir(path) / f"v{version:08d}.json", encoding="utf-8") as f:
         return json.load(f)
+
+
+def _scan(spark: SparkSession, path: str, manifest: dict,
+          files: list[str]) -> DataFrame:
+    """Read ``files`` (relative to ``path``) with the table schema
+    ``manifest`` records: no footer is opened to plan the read, and
+    files missing a column read it as typed NULLs. A manifest without
+    a schema falls back to a mergeSchema footer read (one Spark job)."""
+    paths = [f"{path}/{f}" for f in files]
+    schema = manifest.get("schema")
+    if schema is None:
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
+    return (spark.read.schema(StructType.fromJson(json.loads(schema)))
+            .parquet(*paths))
 
 
 def committed_txns(path: str) -> set[str]:
@@ -87,23 +110,31 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append",
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     existing = versions(path)
-    # schema evolution contract: an append may ADD columns (readers
-    # see typed NULLs for old files via mergeSchema) but may not
-    # CHANGE a shared column's type — that would silently corrupt
-    # every existing file's reads, so it fails loudly here
-    if mode == "append" and existing:
-        prev = _read_manifest(path, existing[-1]).get("schema")
-        if prev is not None:
-            prev_types = {f["name"]: f["type"]
-                          for f in json.loads(prev)["fields"]}
-            for f in json.loads(df.schema.json())["fields"]:
-                if (f["name"] in prev_types
-                        and f["type"] != prev_types[f["name"]]):
+    base = base_version if base_version is not None else \
+        (existing[-1] if existing else None)
+    # schema evolution contract: an append may ADD columns (appended
+    # at the end of the table schema; older files read them as typed
+    # NULLs) but may not CHANGE the type of any column the table has
+    # — that would silently corrupt every existing file's reads, so it
+    # fails loudly here
+    schema = df.schema.json()
+    if mode == "append" and base in existing:
+        prev = _read_manifest(path, base).get("schema")
+        if prev is None:
+            schema = None       # table schema unknown: mergeSchema reads
+        else:
+            fields = json.loads(prev)["fields"]
+            prev_types = {f["name"]: f["type"] for f in fields}
+            for f in json.loads(schema)["fields"]:
+                if f["name"] not in prev_types:
+                    fields.append(f)
+                elif f["type"] != prev_types[f["name"]]:
                     raise TypeError(
                         f"schema evolution: column {f['name']!r} "
                         f"changes type {prev_types[f['name']]!r} -> "
                         f"{f['type']!r}; only ADDING columns is a "
                         "safe widening")
+            schema = json.dumps({"type": "struct", "fields": fields})
     if txn is not None:
         for v in existing:
             if _read_manifest(path, v).get("txn") == txn:
@@ -120,8 +151,6 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append",
     new_files = sorted(
         f"{commit_dir}/{p.name}"
         for p in (Path(path) / commit_dir).glob("part-*.parquet"))
-    base = base_version if base_version is not None else \
-        (existing[-1] if existing else None)
     files = new_files if mode == "overwrite" or base is None else \
         _read_manifest(path, base)["files"] + new_files
     _log_dir(path).mkdir(parents=True, exist_ok=True)
@@ -131,7 +160,7 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append",
         with open(manifest, "x", encoding="utf-8") as f:
             json.dump({"version": new_version, "mode": mode,
                        "files": files, "txn": txn,
-                       "schema": df.schema.json()}, f)
+                       "schema": schema}, f)
     except FileExistsError as e:
         raise VersionConflictError(
             f"version {new_version} of {path} was committed concurrently; "
@@ -151,12 +180,7 @@ def read_versioned(spark: SparkSession, path: str,
     elif version not in vs:
         raise ValueError(f"version {version} not in {vs}")
     m = _read_manifest(path, version)
-    files = m["files"]
-    # mergeSchema: additive schema evolution — a version whose appends
-    # carry new columns reads as the union schema, with older files
-    # null-filling the new columns (footer-level merge, no data rewrite)
-    return (spark.read.option("mergeSchema", "true")
-            .parquet(*[f"{path}/{f}" for f in files]))
+    return _scan(spark, path, m, m["files"])
 
 
 def vacuum_versioned(path: str, keep_versions: int = 1) -> dict:
@@ -271,13 +295,14 @@ def read_versioned_pruned(spark: SparkSession, path: str, column: str,
             keep.append(f)
     if not keep:
         return _empty_like(spark, path, m)
-    return spark.read.parquet(*[f"{path}/{f}" for f in keep])
+    return _scan(spark, path, m, keep)
 
 
 def _empty_like(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
-    """Zero-row frame with the table's schema (footer-only read)."""
-    return (spark.read.parquet(f"{path}/{manifest['files'][0]}")
-            .where("false"))
+    """Zero-row frame with the table's schema: a scan of no files, or
+    a footer read when the manifest records no schema."""
+    files = [] if manifest.get("schema") else manifest["files"]
+    return _scan(spark, path, manifest, files).where("false")
 
 
 def changed_files(path: str, since_version: int,
@@ -294,15 +319,27 @@ def changed_files(path: str, since_version: int,
     return [f for f in now if f not in base]
 
 
+def changed_rows(path: str, since_version: int) -> int:
+    """Row count of the change feed after ``since_version``, summed
+    from the parquet footers on the driver (no Spark job, no data
+    page read)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(str(Path(path) / f)).num_rows
+               for f in changed_files(path, since_version))
+
+
 def read_changes(spark: SparkSession, path: str, since_version: int,
                  to_version: int | None = None) -> DataFrame:
     """Read only the rows added after ``since_version`` (see
-    changed_files)."""
+    changed_files), with the table schema of ``to_version``."""
+    if to_version is None:
+        to_version = versions(path)[-1]
     files = changed_files(path, since_version, to_version)
+    m = _read_manifest(path, to_version)
     if not files:
-        m = _read_manifest(path, versions(path)[-1])
         return _empty_like(spark, path, m)
-    return spark.read.parquet(*[f"{path}/{f}" for f in files])
+    return _scan(spark, path, m, files)
 
 
 def merge_upsert_versioned(spark: SparkSession, path: str,
@@ -413,7 +450,7 @@ def clone_versioned(src: str, dst: str) -> int:
     try:
         with open(manifest, "x", encoding="utf-8") as f:
             json.dump({"version": 0, "mode": "overwrite", "files": files,
-                       "txn": None,
+                       "txn": None, "schema": m.get("schema"),
                        "cloned_from": {"table": str(src),
                                        "version": vs[-1]}}, f)
     except FileExistsError as e:
@@ -456,8 +493,7 @@ def delete_versioned(spark: SparkSession, path: str, predicate: str,
     base = vs[-1] if base_version is None else base_version
     m = _read_manifest(path, base)
     files = m["files"]
-    df = (spark.read.option("mergeSchema", "true")
-          .parquet(*[f"{path}/{f}" for f in files]))
+    df = _scan(spark, path, m, files)
     hit_rows = (df.where(F.expr(predicate))
                 .select(F.input_file_name().alias("f"))
                 .distinct().collect())
@@ -469,8 +505,7 @@ def delete_versioned(spark: SparkSession, path: str, predicate: str,
     new_version = base + 1
     commit_dir = f"{_DATA}/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
     keep = ~F.coalesce(F.expr(predicate), F.lit(False))
-    (spark.read.option("mergeSchema", "true")
-     .parquet(*[f"{path}/{f}" for f in touched])
+    (_scan(spark, path, m, touched)
      .where(keep)
      .write.mode("errorifexists").parquet(f"{path}/{commit_dir}"))
     new_files = sorted(
@@ -479,7 +514,7 @@ def delete_versioned(spark: SparkSession, path: str, predicate: str,
     carried = [f for f in files if f not in touched]
     manifest = {"version": new_version, "mode": "delete",
                 "files": carried + new_files, "txn": None,
-                "predicate": predicate}
+                "schema": m.get("schema"), "predicate": predicate}
     old_stats = m.get("stats", {})
     if old_stats:
         manifest["stats"] = {f: old_stats[f] for f in carried
@@ -526,8 +561,7 @@ def collect_bloom(spark: SparkSession, path: str, column: str,
     vs = versions(path)
     version = vs[-1] if version is None else version
     m = _read_manifest(path, version)
-    df = (spark.read.option("mergeSchema", "true")
-          .parquet(*[f"{path}/{f}" for f in m["files"]])
+    df = (_scan(spark, path, m, m["files"])
           .select(F.input_file_name().alias("f"),
                   F.col(column).cast("string").alias("v"))
           .where(F.col("v").isNotNull()))
@@ -586,8 +620,7 @@ def read_versioned_point(spark: SparkSession, path: str, column: str,
     if not keep:
         return _empty_like(spark, path, m).where(
             F.col(column) == F.lit(value))
-    return (spark.read.option("mergeSchema", "true")
-            .parquet(*[f"{path}/{f}" for f in keep])
+    return (_scan(spark, path, m, keep)
             .where(F.col(column) == F.lit(value)))
 
 
@@ -648,8 +681,7 @@ def diff_versions(spark: SparkSession, path: str, v_from: int,
         if not files:
             base = _empty_like(spark, path, manifest)
         else:
-            base = (spark.read.option("mergeSchema", "true")
-                    .parquet(*[f"{path}/{f}" for f in files]))
+            base = _scan(spark, path, manifest, files)
         non_key = sorted(c for c in base.columns if c not in keys)
         return base.select(
             *keys,

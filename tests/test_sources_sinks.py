@@ -690,6 +690,105 @@ def test_versioned_schema_evolution_contract(spark, tmp_path):
         write_versioned(bad, p, mode="append")
 
 
+def test_versioned_delete_keeps_schema_contract(spark, tmp_path):
+    """A DELETE commit carries its base's schema, so a later append
+    that changes a column's type is still refused."""
+    from openlmis_distributions_etl_spark.sources.versioned import (
+        delete_versioned, write_versioned)
+
+    p = str(tmp_path / "tbl")
+    write_versioned(spark.createDataFrame(
+        [(1, "x"), (2, "y")], "id long, name string"), p)
+    assert delete_versioned(spark, p, "id = 2")["version"] == 1
+    bad = spark.createDataFrame([(3, 7)], "id long, name long")
+    with pytest.raises(TypeError, match="changes type"):
+        write_versioned(bad, p, mode="append")
+
+
+def test_versioned_clone_keeps_schema_contract(spark, tmp_path):
+    """A shallow clone's v0 carries the source's schema, so an append
+    to the clone that changes a column's type is refused."""
+    from openlmis_distributions_etl_spark.sources.versioned import (
+        clone_versioned, write_versioned)
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    write_versioned(spark.createDataFrame(
+        [(1, "x")], "id long, name string"), src)
+    clone_versioned(src, dst)
+    bad = spark.createDataFrame([(3, 7)], "id long, name long")
+    with pytest.raises(TypeError, match="changes type"):
+        write_versioned(bad, dst, mode="append")
+
+
+def _evolved_table(spark, p: str) -> None:
+    """v0: an overwrite (one non-nullable column); v1: an append that
+    adds a column."""
+    from openlmis_distributions_etl_spark.sources.versioned import (
+        write_versioned)
+
+    write_versioned(spark.createDataFrame(
+        [(1, "x")], "id long not null, name string"), p, mode="overwrite")
+    write_versioned(spark.createDataFrame(
+        [(2, "y", 9.5)], "id long, name string, score double"), p,
+        mode="append")
+
+
+def test_versioned_reads_match_merged_footer_schema(spark, tmp_path):
+    """Reads take the manifest's table schema; it must be the schema a
+    mergeSchema footer read of the same files gives (names, order,
+    types, nullability), at every version and for the change feed —
+    also after an append that omits a column the table has."""
+    from openlmis_distributions_etl_spark.sources.versioned import (
+        _read_manifest, changed_files, read_changes, read_versioned,
+        write_versioned)
+
+    p = str(tmp_path / "tbl")
+    _evolved_table(spark, p)
+    write_versioned(spark.createDataFrame(
+        [(3, "z")], "id long, name string"), p, mode="append")
+
+    def cols(schema):
+        return [(f.name, f.dataType, f.nullable) for f in schema.fields]
+
+    def merged(files):
+        return cols(spark.read.option("mergeSchema", "true")
+                    .parquet(*[f"{p}/{f}" for f in files]).schema)
+
+    for v in (2, 1, 0):
+        assert (cols(read_versioned(spark, p, version=v).schema)
+                == merged(_read_manifest(p, v)["files"])), v
+    assert (cols(read_versioned(spark, p).schema)
+            == merged(_read_manifest(p, 2)["files"]))
+    assert [c[0] for c in cols(read_versioned(spark, p).schema)] == [
+        "id", "name", "score"]
+    assert (cols(read_changes(spark, p, 0).schema)
+            == merged(changed_files(p, 0)))
+
+
+def test_versioned_reads_start_no_job(spark, tmp_path):
+    """Planning a versioned read opens no footer: read_versioned,
+    read_changes and an empty-feed read_changes start no Spark job."""
+    from openlmis_distributions_etl_spark.sources.versioned import (
+        read_changes, read_versioned)
+
+    p = str(tmp_path / "tbl")
+    _evolved_table(spark, p)
+    sc = spark.sparkContext
+    group = f"versioned-reads-{tmp_path.name}"
+    sc.setJobGroup(group, "versioned reads")
+    try:
+        frames = [read_versioned(spark, p), read_changes(spark, p, 0),
+                  read_changes(spark, p, 1)]
+        assert [len(df.schema) for df in frames] == [3, 3, 3]
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # the tracker sees this group's jobs once an action runs
+        assert [df.count() for df in frames] == [2, 1, 0]
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_sql_frontend_views_and_functions(spark):
     """register_views + register_sql_functions make ad-hoc spark.sql
     work against the normalized source layer with the engine's vector
