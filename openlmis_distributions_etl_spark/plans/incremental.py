@@ -123,9 +123,10 @@ def incremental_join_view_update(spark: SparkSession, orders_path: str,
 
     Every appended order is touched, so the emptiness probe (a Spark
     job) runs only when the orders feed's footers count zero rows."""
-    d_orders = read_changes(spark, orders_path, since_orders)
+    v_orders = versions(orders_path)[-1]
+    d_orders = read_changes(spark, orders_path, since_orders, v_orders)
     d_cust = read_changes(spark, customer_path, since_customer)
-    orders = read_versioned(spark, orders_path)
+    orders = read_versioned(spark, orders_path, version=v_orders)
     customer = read_versioned(spark, customer_path)
     changed_keys = d_cust.select("c_custkey").distinct()
     touched = (orders
@@ -134,7 +135,8 @@ def incremental_join_view_update(spark: SparkSession, orders_path: str,
                      "leftsemi")
                .unionByName(d_orders.select(*orders.columns))
                .dropDuplicates(["o_orderkey"]))
-    if changed_rows(orders_path, since_orders) == 0 and touched.isEmpty():
+    if (changed_rows(orders_path, since_orders, v_orders) == 0
+            and touched.isEmpty()):
         return versions(view_path)[-1]
     updated = _order_customer_view(touched, customer)
     return merge_upsert_versioned(spark, view_path, updated,

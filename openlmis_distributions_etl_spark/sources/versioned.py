@@ -10,13 +10,14 @@ both win: the loser gets a VersionConflictError and retries against
 the new latest (optimistic concurrency, the Delta commit protocol in
 miniature).
 
-Every manifest records the TABLE schema (the union of its files'
-columns, in the order a footer merge gives), so a read is planned
-from the manifest alone: ``_scan`` hands that schema to the reader and
-no schema-inference job runs until the action. Files that lack a
-column null-fill it. Only a manifest with no ``schema`` key (one
-written before manifests recorded it) falls back to a mergeSchema
-footer read.
+Every manifest records the TABLE schema under ``table_schema`` (the
+union of its files' columns, in the order a footer merge gives), so a
+read is planned from the manifest alone: ``_scan`` hands that schema
+to the reader and no schema-inference job runs until the action.
+Files that lack a column null-fill it. A manifest written before
+manifests recorded the table schema (it holds only the last commit's
+``schema``) takes it from a mergeSchema read of its files' footers;
+the next append, DELETE or MERGE onto such a table records it.
 
 What this deliberately does NOT do (and a production format adds):
 compaction of the manifest log, file-level column statistics for data
@@ -24,7 +25,7 @@ skipping, and schema evolution rules. The foreachBatch snapshot upsert
 in streaming/jobs.py is the streaming producer of the same pattern.
 
 Layout:
-    <table>/_log/v00000042.json   # {"version", "files", "mode", "schema"}
+    <table>/_log/v00000042.json  # {"version", "files", "mode", "table_schema"}
     <table>/data/v00000042-<uuid>/part-*.parquet
 """
 
@@ -63,18 +64,27 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(f)
 
 
+def _table_schema(spark: SparkSession, path: str,
+                  manifest: dict) -> StructType:
+    """The table schema ``manifest`` records. A manifest without
+    ``table_schema`` (written before manifests recorded it) gets it
+    from a mergeSchema read of all its files' footers (one Spark
+    job)."""
+    recorded = manifest.get("table_schema")
+    if recorded is not None:
+        return StructType.fromJson(json.loads(recorded))
+    return (spark.read.option("mergeSchema", "true")
+            .parquet(*[f"{path}/{f}" for f in manifest["files"]]).schema)
+
+
 def _scan(spark: SparkSession, path: str, manifest: dict,
           files: list[str]) -> DataFrame:
-    """Read ``files`` (relative to ``path``) with the table schema
-    ``manifest`` records: no footer is opened to plan the read, and
-    files missing a column read it as typed NULLs. A manifest without
-    a schema falls back to a mergeSchema footer read (one Spark job)."""
-    paths = [f"{path}/{f}" for f in files]
-    schema = manifest.get("schema")
-    if schema is None:
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
-    return (spark.read.schema(StructType.fromJson(json.loads(schema)))
-            .parquet(*paths))
+    """Read ``files`` (relative to ``path``) with ``manifest``'s table
+    schema: no footer is opened to plan the read, files missing a
+    column read it as typed NULLs, and no files give a zero-row frame
+    with the table's columns."""
+    return (spark.read.schema(_table_schema(spark, path, manifest))
+            .parquet(*[f"{path}/{f}" for f in files]))
 
 
 def committed_txns(path: str) -> set[str]:
@@ -117,24 +127,21 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append",
     # NULLs) but may not CHANGE the type of any column the table has
     # — that would silently corrupt every existing file's reads, so it
     # fails loudly here
-    schema = df.schema.json()
+    schema = df.schema
     if mode == "append" and base in existing:
-        prev = _read_manifest(path, base).get("schema")
-        if prev is None:
-            schema = None       # table schema unknown: mergeSchema reads
-        else:
-            fields = json.loads(prev)["fields"]
-            prev_types = {f["name"]: f["type"] for f in fields}
-            for f in json.loads(schema)["fields"]:
-                if f["name"] not in prev_types:
-                    fields.append(f)
-                elif f["type"] != prev_types[f["name"]]:
-                    raise TypeError(
-                        f"schema evolution: column {f['name']!r} "
-                        f"changes type {prev_types[f['name']]!r} -> "
-                        f"{f['type']!r}; only ADDING columns is a "
-                        "safe widening")
-            schema = json.dumps({"type": "struct", "fields": fields})
+        fields = list(_table_schema(df.sparkSession, path,
+                                    _read_manifest(path, base)))
+        prev_types = {f.name: f.dataType for f in fields}
+        for f in df.schema.fields:
+            if f.name not in prev_types:
+                fields.append(f)
+            elif f.dataType != prev_types[f.name]:
+                raise TypeError(
+                    f"schema evolution: column {f.name!r} changes type "
+                    f"{prev_types[f.name].simpleString()!r} -> "
+                    f"{f.dataType.simpleString()!r}; only ADDING columns "
+                    "is a safe widening")
+        schema = StructType(fields)
     if txn is not None:
         for v in existing:
             if _read_manifest(path, v).get("txn") == txn:
@@ -160,7 +167,7 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append",
         with open(manifest, "x", encoding="utf-8") as f:
             json.dump({"version": new_version, "mode": mode,
                        "files": files, "txn": txn,
-                       "schema": schema}, f)
+                       "table_schema": schema.json()}, f)
     except FileExistsError as e:
         raise VersionConflictError(
             f"version {new_version} of {path} was committed concurrently; "
@@ -293,16 +300,7 @@ def read_versioned_pruned(spark: SparkSession, path: str, column: str,
         rng = stats.get(f, {}).get(column)
         if rng is None or (rng[0] <= hi and lo <= rng[1]):
             keep.append(f)
-    if not keep:
-        return _empty_like(spark, path, m)
     return _scan(spark, path, m, keep)
-
-
-def _empty_like(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
-    """Zero-row frame with the table's schema: a scan of no files, or
-    a footer read when the manifest records no schema."""
-    files = [] if manifest.get("schema") else manifest["files"]
-    return _scan(spark, path, manifest, files).where("false")
 
 
 def changed_files(path: str, since_version: int,
@@ -319,14 +317,15 @@ def changed_files(path: str, since_version: int,
     return [f for f in now if f not in base]
 
 
-def changed_rows(path: str, since_version: int) -> int:
-    """Row count of the change feed after ``since_version``, summed
-    from the parquet footers on the driver (no Spark job, no data
-    page read)."""
+def changed_rows(path: str, since_version: int,
+                 to_version: int | None = None) -> int:
+    """Row count of the change feed after ``since_version`` up to
+    ``to_version`` (default latest), summed from the parquet footers
+    on the driver (no Spark job, no data page read)."""
     import pyarrow.parquet as pq
 
     return sum(pq.read_metadata(str(Path(path) / f)).num_rows
-               for f in changed_files(path, since_version))
+               for f in changed_files(path, since_version, to_version))
 
 
 def read_changes(spark: SparkSession, path: str, since_version: int,
@@ -335,11 +334,8 @@ def read_changes(spark: SparkSession, path: str, since_version: int,
     changed_files), with the table schema of ``to_version``."""
     if to_version is None:
         to_version = versions(path)[-1]
-    files = changed_files(path, since_version, to_version)
-    m = _read_manifest(path, to_version)
-    if not files:
-        return _empty_like(spark, path, m)
-    return _scan(spark, path, m, files)
+    return _scan(spark, path, _read_manifest(path, to_version),
+                 changed_files(path, since_version, to_version))
 
 
 def merge_upsert_versioned(spark: SparkSession, path: str,
@@ -450,7 +446,7 @@ def clone_versioned(src: str, dst: str) -> int:
     try:
         with open(manifest, "x", encoding="utf-8") as f:
             json.dump({"version": 0, "mode": "overwrite", "files": files,
-                       "txn": None, "schema": m.get("schema"),
+                       "txn": None, "table_schema": m.get("table_schema"),
                        "cloned_from": {"table": str(src),
                                        "version": vs[-1]}}, f)
     except FileExistsError as e:
@@ -514,7 +510,7 @@ def delete_versioned(spark: SparkSession, path: str, predicate: str,
     carried = [f for f in files if f not in touched]
     manifest = {"version": new_version, "mode": "delete",
                 "files": carried + new_files, "txn": None,
-                "schema": m.get("schema"), "predicate": predicate}
+                "table_schema": df.schema.json(), "predicate": predicate}
     old_stats = m.get("stats", {})
     if old_stats:
         manifest["stats"] = {f: old_stats[f] for f in carried
@@ -617,9 +613,6 @@ def read_versioned_point(spark: SparkSession, path: str, column: str,
         if rng is not None and not (rng[0] <= value <= rng[1]):
             continue
         keep.append(f)
-    if not keep:
-        return _empty_like(spark, path, m).where(
-            F.col(column) == F.lit(value))
     return (_scan(spark, path, m, keep)
             .where(F.col(column) == F.lit(value)))
 
@@ -678,10 +671,7 @@ def diff_versions(spark: SparkSession, path: str, v_from: int,
     only_a, only_b = sorted(fa - fb), sorted(fb - fa)
 
     def side(files: list[str], manifest: dict) -> DataFrame:
-        if not files:
-            base = _empty_like(spark, path, manifest)
-        else:
-            base = _scan(spark, path, manifest, files)
+        base = _scan(spark, path, manifest, files)
         non_key = sorted(c for c in base.columns if c not in keys)
         return base.select(
             *keys,
@@ -717,10 +707,9 @@ def restore_versioned(path: str, version: int) -> int:
     new_version = vs[-1] + 1
     manifest = {"version": new_version, "mode": "restore",
                 "files": list(m["files"]), "txn": None,
-                "restored_from": version}
+                "restored_from": version,
+                "table_schema": m.get("table_schema")}
     if "stats" in m:
         manifest["stats"] = m["stats"]
-    if "schema" in m:
-        manifest["schema"] = m["schema"]
     _publish(path, manifest)
     return new_version

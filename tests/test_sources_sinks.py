@@ -690,34 +690,28 @@ def test_versioned_schema_evolution_contract(spark, tmp_path):
         write_versioned(bad, p, mode="append")
 
 
-def test_versioned_delete_keeps_schema_contract(spark, tmp_path):
-    """A DELETE commit carries its base's schema, so a later append
-    that changes a column's type is still refused."""
+def test_versioned_delete_and_clone_keep_schema_contract(spark, tmp_path):
+    """A DELETE commit and a shallow clone's v0 carry their base's
+    table schema, so a later append that changes a column's type is
+    still refused."""
     from openlmis_distributions_etl_spark.sources.versioned import (
-        delete_versioned, write_versioned)
+        clone_versioned, delete_versioned, write_versioned)
 
-    p = str(tmp_path / "tbl")
-    write_versioned(spark.createDataFrame(
-        [(1, "x"), (2, "y")], "id long, name string"), p)
-    assert delete_versioned(spark, p, "id = 2")["version"] == 1
-    bad = spark.createDataFrame([(3, 7)], "id long, name long")
-    with pytest.raises(TypeError, match="changes type"):
-        write_versioned(bad, p, mode="append")
+    def delete(p):
+        assert delete_versioned(spark, p, "id = 2")["version"] == 1
+        return p
 
+    def clone(p):
+        clone_versioned(p, p + "-clone")
+        return p + "-clone"
 
-def test_versioned_clone_keeps_schema_contract(spark, tmp_path):
-    """A shallow clone's v0 carries the source's schema, so an append
-    to the clone that changes a column's type is refused."""
-    from openlmis_distributions_etl_spark.sources.versioned import (
-        clone_versioned, write_versioned)
-
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    write_versioned(spark.createDataFrame(
-        [(1, "x")], "id long, name string"), src)
-    clone_versioned(src, dst)
-    bad = spark.createDataFrame([(3, 7)], "id long, name long")
-    with pytest.raises(TypeError, match="changes type"):
-        write_versioned(bad, dst, mode="append")
+    for op in (delete, clone):
+        p = str(tmp_path / op.__name__)
+        write_versioned(spark.createDataFrame(
+            [(1, "x"), (2, "y")], "id long, name string"), p)
+        bad = spark.createDataFrame([(3, 7)], "id long, name long")
+        with pytest.raises(TypeError, match="changes type"):
+            write_versioned(bad, op(p), mode="append")
 
 
 def _evolved_table(spark, p: str) -> None:
@@ -763,6 +757,49 @@ def test_versioned_reads_match_merged_footer_schema(spark, tmp_path):
         "id", "name", "score"]
     assert (cols(read_changes(spark, p, 0).schema)
             == merged(changed_files(p, 0)))
+
+
+def test_versioned_legacy_manifest_reads_merged_footer_schema(spark,
+                                                               tmp_path):
+    """A manifest written before manifests recorded the table schema
+    holds only its last commit's ``schema``. Reads take the table
+    schema from the files' footers, so a column the last append left
+    out survives; the append type check covers that column too; and
+    the next append records the table schema."""
+    import json
+
+    from openlmis_distributions_etl_spark.sources.versioned import (
+        _read_manifest, read_changes, read_versioned, write_versioned)
+
+    p = str(tmp_path / "tbl")
+    commits = [("id long, name string", (1, "x"), "overwrite"),
+               ("id long, name string, score double", (2, "y", 9.5),
+                "append"),
+               ("id long, name string", (3, "z"), "append")]
+    for v, (ddl, row, mode) in enumerate(commits):
+        write_versioned(spark.createDataFrame([row], ddl), p, mode=mode)
+        log = tmp_path / "tbl" / "_log" / f"v{v:08d}.json"
+        m = json.loads(log.read_text())
+        del m["table_schema"]
+        m["schema"] = spark.createDataFrame([], ddl).schema.json()
+        log.write_text(json.dumps(m))
+
+    merged = (spark.read.option("mergeSchema", "true")
+              .parquet(*[f"{p}/{f}" for f in _read_manifest(p, 2)["files"]])
+              .schema)
+    got = read_versioned(spark, p)
+    assert got.schema == merged
+    assert got.columns == ["id", "name", "score"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, "x", None), (2, "y", 9.5), (3, "z", None)]
+    assert read_changes(spark, p, 1).schema == merged
+    with pytest.raises(TypeError, match="changes type"):
+        write_versioned(spark.createDataFrame(
+            [(4, "w")], "id long, score string"), p, mode="append")
+    v = write_versioned(spark.createDataFrame(
+        [(4, "w")], "id long, name string"), p, mode="append")
+    assert StructType.fromJson(json.loads(
+        _read_manifest(p, v)["table_schema"])) == merged
 
 
 def test_versioned_reads_start_no_job(spark, tmp_path):
