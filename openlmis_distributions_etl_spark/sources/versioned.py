@@ -21,8 +21,8 @@ the next append, DELETE or MERGE onto such a table records it.
 
 What this deliberately does NOT do (and a production format adds):
 compaction of the manifest log, file-level column statistics for data
-skipping, and schema evolution rules. The foreachBatch snapshot upsert
-in streaming/jobs.py is the streaming producer of the same pattern.
+skipping, and schema evolution rules. The streaming snapshot stores
+(streaming/snapshots.py) are the streaming producer of the same pattern.
 
 Layout:
     <table>/_log/v00000042.json  # {"version", "files", "mode", "table_schema"}
@@ -64,6 +64,15 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(f)
 
 
+def _rewrite_manifest(path: str, version: int, manifest: dict) -> None:
+    """Replace a committed manifest in place (tmp + os.replace) to
+    attach derived metadata such as stats or Bloom filters."""
+    tmp = _log_dir(path) / f".v{version:08d}.json.tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, _log_dir(path) / f"v{version:08d}.json")
+
+
 def _table_schema(spark: SparkSession, path: str,
                   manifest: dict) -> StructType:
     """The table schema ``manifest`` records. A manifest without
@@ -85,13 +94,6 @@ def _scan(spark: SparkSession, path: str, manifest: dict,
     with the table's columns."""
     return (spark.read.schema(_table_schema(spark, path, manifest))
             .parquet(*[f"{path}/{f}" for f in files]))
-
-
-def committed_txns(path: str) -> set[str]:
-    """Transaction ids recorded across all manifests (the streaming
-    exactly-once ledger)."""
-    return {m["txn"] for v in versions(path)
-            if (m := _read_manifest(path, v)).get("txn")}
 
 
 def write_versioned(df: DataFrame, path: str, mode: str = "append",
@@ -277,10 +279,7 @@ def collect_stats(path: str, version: int | None = None,
     version = vs[-1] if version is None else version
     m = _read_manifest(path, version)
     m["stats"] = {f: _file_stats(path, f, stat_cols) for f in m["files"]}
-    tmp = _log_dir(path) / f".v{version:08d}.json.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(m, f)
-    os.replace(tmp, _log_dir(path) / f"v{version:08d}.json")
+    _rewrite_manifest(path, version, m)
 
 
 def read_versioned_pruned(spark: SparkSession, path: str, column: str,
@@ -580,10 +579,7 @@ def collect_bloom(spark: SparkSession, path: str, column: str,
         if rel is not None:
             per_file[rel] = list(r["bitmap"])
     m.setdefault("bloom", {})[column] = per_file
-    tmp = _log_dir(path) / f".v{version:08d}.json.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(m, f)
-    os.replace(tmp, _log_dir(path) / f"v{version:08d}.json")
+    _rewrite_manifest(path, version, m)
 
 
 def read_versioned_point(spark: SparkSession, path: str, column: str,

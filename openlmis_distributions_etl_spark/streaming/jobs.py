@@ -9,6 +9,17 @@ At scale: the windowed aggregate shuffles on (window, event_type) with
 partial aggregation upstream of the shuffle; session state partitions
 by user_id across executors, with the watermark evicting state for
 users idle past the lateness bound.
+
+The foreachBatch snapshot stores (upsert-latest, first-seen, band
+index, token counts, attribution, IVF health, skyline, lifecycle,
+audience bitmaps, heavy hitters, value histogram) differ only in their
+merge algebra; each commits through streaming/snapshots.py, which
+holds the on-disk format and the two exactly-once rules. Idempotent
+merges fold into the committed head (`snapshots.head_base`), so a
+fresh-checkpoint replay converges; non-idempotent merges REBASE onto
+the newest version below the batch (`snapshots.rebase_base`), so a
+replay rebuilds the same version and a batch behind the head is
+refused.
 """
 
 from __future__ import annotations
@@ -25,6 +36,8 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from ..functions import dec
+from . import snapshots
+from .snapshots import read_latest_snapshot, run_batches
 
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
@@ -179,61 +192,33 @@ def stream_to_parquet(df: DataFrame, out_dir: str, checkpoint_dir: str,
     return w.start()
 
 
-def read_latest_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read the current snapshot written by stream_upsert_latest."""
-    with open(f"{out_dir}/_CURRENT", encoding="utf-8") as f:
-        version = f.read().strip()
-    return spark.read.parquet(f"{out_dir}/{version}")
-
-
 def stream_upsert_latest(events: DataFrame, out_dir: str,
                          checkpoint_dir: str):
     """foreachBatch incremental upsert: each micro-batch folds its
-    latest-event-per-user view into a new versioned snapshot directory
-    and atomically repoints a _CURRENT pointer file (os.replace) — the
-    MERGE-into-snapshot pattern a Delta/Iceberg table replaces at
-    scale. Readers go through read_latest_snapshot and never observe a
-    partial write."""
-    import os
-
+    latest-event-per-user view into a new versioned snapshot (a
+    head merge: latest-wins is idempotent) — the MERGE-into-snapshot
+    pattern a Delta/Iceberg table replaces at scale. Readers go
+    through read_latest_snapshot and never observe a partial write."""
     from pyspark.sql import Window
-    from pyspark.errors import AnalysisException
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         w = Window.partitionBy("user_id").orderBy(
             F.desc("ts"), F.desc("event_id"))
         latest = (batch.withColumn("rn", F.row_number().over(w))
                   .where(F.col("rn") == 1)
                   .select("user_id", "event_id",
                           F.unix_micros("ts").alias("ts_us"), "event_type"))
-        pointer = f"{out_dir}/_CURRENT"
-        try:
-            current = read_latest_snapshot(spark, out_dir)
-            merged = (current.unionByName(latest)
-                      .withColumn("rn", F.row_number().over(
-                          Window.partitionBy("user_id")
-                          .orderBy(F.desc("ts_us"), F.desc("event_id"))))
-                      .where(F.col("rn") == 1).drop("rn"))
-        except FileNotFoundError:
-            merged = latest  # genuinely the first batch: no pointer yet
-        except AnalysisException as e:
-            # pointer exists but snapshot unreadable → data loss if we
-            # reset; fail the batch so the checkpoint retries it
-            raise RuntimeError(
-                f"snapshot under {out_dir} unreadable; refusing to "
-                f"reset upsert history") from e
-        version = f"v{batch_id:020d}"
-        merged.write.mode("overwrite").parquet(f"{out_dir}/{version}")
-        tmp = f"{out_dir}/_CURRENT.tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(version)
-        os.replace(tmp, pointer)  # atomic pointer swap
+        current = snapshots.head_base(batch.sparkSession, out_dir,
+                                      "snapshot", "upsert history")
+        merged = latest if current is None else (
+            current.unionByName(latest)
+            .withColumn("rn", F.row_number().over(
+                Window.partitionBy("user_id")
+                .orderBy(F.desc("ts_us"), F.desc("event_id"))))
+            .where(F.col("rn") == 1).drop("rn"))
+        snapshots.commit(merged, out_dir, batch_id)
 
-    return (events.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(events, upsert, checkpoint_dir)
 
 
 def stream_append_versioned(df: DataFrame, table_path: str,
@@ -251,10 +236,7 @@ def stream_append_versioned(df: DataFrame, table_path: str,
         write_versioned(batch, table_path, mode="append",
                         txn=f"stream-{batch_id}")
 
-    return (df.writeStream.foreachBatch(commit)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(df, commit, checkpoint_dir)
 
 
 def dedup_events_stream(events: DataFrame,
@@ -561,10 +543,7 @@ def stream_maintain_rollup(orders: DataFrame, fact_path: str,
             incremental_rollup_update(spark, fact_path, rollup_path,
                                       customer, since_version=base)
 
-    return (orders.writeStream.foreachBatch(commit)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(orders, commit, checkpoint_dir)
 
 
 def _psi_setup(history: DataFrame):
@@ -778,7 +757,7 @@ def stream_drift_monitor_self_updating(events: DataFrame,
         cache["apply"] = apply
 
     def commit(batch: DataFrame, batch_id: int) -> None:
-        _check_lineage(out_dir, checkpoint_dir)
+        snapshots.check_lineage(out_dir, checkpoint_dir)
         spark = batch.sparkSession
         heads = versions(baseline_path)
         if not heads:
@@ -793,10 +772,7 @@ def stream_drift_monitor_self_updating(events: DataFrame,
         write_versioned(out, out_dir, mode="append",
                         txn=f"drift-{kind}-{batch_id}")
 
-    return (events.writeStream.foreachBatch(commit)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(events, commit, checkpoint_dir)
 
 
 def read_drift_monitor(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -877,10 +853,7 @@ def stream_maintain_components(edges: DataFrame, labels_path: str,
         write_versioned(labels, labels_path, mode="overwrite",
                         txn=f"cc-maint-{batch_id}")
 
-    return (edges.writeStream.foreachBatch(commit)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(edges, commit, checkpoint_dir)
 
 
 def stream_maintain_first_seen(events: DataFrame, out_dir: str,
@@ -898,39 +871,20 @@ def stream_maintain_first_seen(events: DataFrame, out_dir: str,
     the exact-semantics floor for this metric), not executor memory:
     no unbounded stream-side state store, and the merge is one
     aggregate + one co-grouped min per batch."""
-    import os
-
-    from pyspark.errors import AnalysisException
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         seen = (batch
                 .groupBy("user_id")
                 .agg(F.min(F.date_format("ts", "yyyy-MM-dd"))
                      .alias("day")))
-        pointer = f"{out_dir}/_CURRENT"
-        try:
-            current = read_latest_snapshot(spark, out_dir)
-            merged = (current.unionByName(seen)
-                      .groupBy("user_id")
-                      .agg(F.min("day").alias("day")))
-        except FileNotFoundError:
-            merged = seen
-        except AnalysisException as e:
-            raise RuntimeError(
-                f"first-seen store under {out_dir} unreadable; "
-                f"refusing to reset history") from e
-        version = f"v{batch_id:020d}"
-        merged.write.mode("overwrite").parquet(f"{out_dir}/{version}")
-        tmp = f"{out_dir}/_CURRENT.tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(version)
-        os.replace(tmp, pointer)
+        current = snapshots.head_base(batch.sparkSession, out_dir,
+                                      "first-seen store")
+        merged = seen if current is None else (
+            current.unionByName(seen)
+            .groupBy("user_id").agg(F.min("day").alias("day")))
+        snapshots.commit(merged, out_dir, batch_id)
 
-    return (events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(events, merge, checkpoint_dir)
 
 
 def chi2_cells_stream(events: DataFrame) -> DataFrame:
@@ -1036,10 +990,7 @@ def stream_maintain_join_view(orders: DataFrame, orders_path: str,
         with open(marker, "w") as f:
             json.dump({"customer_version": cust_now}, f)
 
-    return (orders.writeStream.foreachBatch(commit)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(orders, commit, checkpoint_dir)
 
 
 def bounce_sessions_stream(events: DataFrame, gap: str = "30 minutes",
@@ -1146,10 +1097,7 @@ def stream_gate_expectations(orders: DataFrame, rules, table_path: str,
             write_versioned(batch, table_path, mode="append",
                             txn=f"exp-gate-{batch_id}")
 
-    return (orders.writeStream.foreachBatch(commit)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(orders, commit, checkpoint_dir)
 
 
 def stream_maintain_user_sketches(events: DataFrame, sketch_path: str,
@@ -1190,10 +1138,7 @@ def stream_maintain_user_sketches(events: DataFrame, sketch_path: str,
                       .alias("n_events")))
         merge_upsert_versioned(spark, sketch_path, merged, ["day"])
 
-    return (events.writeStream.foreachBatch(commit)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(events, commit, checkpoint_dir)
 
 
 def rate_spike_stream(events: DataFrame, history: DataFrame) -> DataFrame:
@@ -1425,63 +1370,20 @@ def stream_maintain_band_index(docs: DataFrame, out_dir: str,
     State lives in the store (one row per distinct band key — the
     exact-semantics floor), never in executor memory; the per-batch
     merge is one distinct + one union-distinct."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
     from ..functions.bands import explode_bands
     from ..operators.dedup import minhash_keys, minhash_signatures
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         bands = (explode_bands(minhash_signatures({"documents": batch}),
                                minhash_keys())
                  .select("band_id", "band_val").distinct())
-        pointer = f"{out_dir}/_CURRENT"
-        try:
-            current = read_latest_snapshot(spark, out_dir)
-            merged = current.unionByName(bands).distinct()
-        except FileNotFoundError:
-            merged = bands
-        except AnalysisException as e:
-            raise RuntimeError(
-                f"band-index store under {out_dir} unreadable; "
-                f"refusing to reset the index") from e
-        version = f"v{batch_id:020d}"
-        merged.write.mode("overwrite").parquet(f"{out_dir}/{version}")
-        tmp = f"{out_dir}/_CURRENT.tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(version)
-        os.replace(tmp, pointer)
+        current = snapshots.head_base(batch.sparkSession, out_dir,
+                                      "band-index store", "the index")
+        merged = bands if current is None else (
+            current.unionByName(bands).distinct())
+        snapshots.commit(merged, out_dir, batch_id)
 
-    return (docs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def _check_lineage(out_dir: str, lineage: str | None) -> None:
-    """Refuse to merge into a store owned by a DIFFERENT checkpoint
-    lineage: non-idempotent merges (sum, credit) would double-count
-    or silently reset if a fresh checkpoint replayed history into an
-    existing store. First writer stamps _LINEAGE; later merges must
-    match. Direct calls (tests, backfills) pass lineage=None and are
-    governed by the version-head guard alone."""
-    from pathlib import Path
-
-    if lineage is None:
-        return
-    lp = Path(out_dir) / "_LINEAGE"
-    if lp.exists():
-        if lp.read_text(encoding="utf-8") != lineage:
-            raise RuntimeError(
-                f"store {out_dir} belongs to checkpoint lineage "
-                f"{lp.read_text(encoding='utf-8')!r}, not {lineage!r} "
-                f"— a fresh checkpoint replaying history would "
-                f"double-count or reset; use a new store")
-    else:
-        lp.parent.mkdir(parents=True, exist_ok=True)
-        lp.write_text(lineage, encoding="utf-8")
+    return run_batches(docs, merge, checkpoint_dir)
 
 
 def _merge_token_counts(batch: DataFrame, batch_id: int,
@@ -1490,38 +1392,17 @@ def _merge_token_counts(batch: DataFrame, batch_id: int,
     """One exactly-once sum-merge commit of a micro-batch into the
     token-count store. Module-level so the replay test can invoke it
     directly; see stream_maintain_token_counts for the contract."""
-    import os
-    from pathlib import Path
-
     from ..operators.text import tokens
 
-    _check_lineage(out_dir, lineage)
-    spark = batch.sparkSession
+    base = snapshots.rebase_base(out_dir, batch_id, lineage,
+                                 "token-count store")
     cnt = (batch.select(F.explode(tokens()).alias("token"))
            .groupBy("token").agg(F.count(F.lit(1)).alias("cnt")))
-    existing = sorted(
-        int(p.name[1:]) for p in Path(out_dir).glob("v*")
-        if p.is_dir() and p.name[1:].isdigit())
-    if existing and max(existing) > batch_id:
-        raise RuntimeError(
-            f"token-count store {out_dir} already holds version "
-            f"v{max(existing)} > incoming batch {batch_id} (fresh "
-            f"checkpoint against an existing store?) — refusing to "
-            f"reset or double-count; use a new store or keep the "
-            f"original checkpoint")
-    prior = [v for v in existing if v < batch_id]
-    if prior:
-        base = spark.read.parquet(f"{out_dir}/v{prior[-1]:020d}")
-        merged = (base.unionByName(cnt)
-                  .groupBy("token").agg(F.sum("cnt").alias("cnt")))
-    else:
-        merged = cnt
-    version = f"v{batch_id:020d}"
-    merged.write.mode("overwrite").parquet(f"{out_dir}/{version}")
-    tmp = f"{out_dir}/_CURRENT.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(version)
-    os.replace(tmp, f"{out_dir}/_CURRENT")
+    merged = cnt if base is None else (
+        batch.sparkSession.read.parquet(f"{out_dir}/{base}")
+        .unionByName(cnt)
+        .groupBy("token").agg(F.sum("cnt").alias("cnt")))
+    snapshots.commit(merged, out_dir, batch_id)
 
 
 def stream_maintain_token_counts(docs: DataFrame, out_dir: str,
@@ -1532,24 +1413,16 @@ def stream_maintain_token_counts(docs: DataFrame, out_dir: str,
     folds them into the snapshot by sum-merge.
 
     Addition is commutative/associative but NOT idempotent (unlike
-    the first-seen store's min-merge), so exactly-once comes from
-    REBASING: batch b always merges into the newest snapshot with
-    version < b — a batch replayed after a crash (even one that
-    crashed after publishing but before the checkpoint committed)
-    rebuilds the same v{b} from the same base instead of
-    double-counting. A restart from a FRESH checkpoint against an
-    existing store fails loudly rather than silently resetting.
-    State is the vocabulary itself — the exact-semantics floor for
-    exact counts — never executor memory."""
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        _merge_token_counts(batch, batch_id, out_dir,
-                            lineage=checkpoint_dir)
-
-    return (docs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    the first-seen store's min-merge), so exactly-once comes from the
+    rebase rule of streaming/snapshots.py: a replayed batch rebuilds
+    the same version instead of double-counting, and a restart from a
+    FRESH checkpoint against an existing store fails loudly rather
+    than silently resetting. State is the vocabulary itself — the
+    exact-semantics floor for exact counts — never executor memory."""
+    return run_batches(
+        docs, lambda batch, batch_id: _merge_token_counts(
+            batch, batch_id, out_dir, lineage=checkpoint_dir),
+        checkpoint_dir)
 
 
 ATTR_WINDOW_US = 7 * 86_400 * 1_000_000
@@ -1586,9 +1459,6 @@ def stream_linear_attribution(events: DataFrame, out_dir: str,
     watermark bound); within the bound the ledger nets to the batch
     answer regardless of arrival order (tested: clicks delivered a
     batch after their purchases)."""
-    import os
-    from pathlib import Path
-
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
 
@@ -1606,7 +1476,6 @@ def stream_linear_attribution(events: DataFrame, out_dir: str,
     ])
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        _check_lineage(out_dir, checkpoint_dir)
         spark = batch.sparkSession
         clicks_new = (batch.where(F.col("event_type") == "click")
                       .select("user_id",
@@ -1614,21 +1483,13 @@ def stream_linear_attribution(events: DataFrame, out_dir: str,
                               F.unix_micros("ts").alias("c_us"),
                               F.date_format("ts", "yyyy-MM-dd")
                               .alias("day")))
-        existing = sorted(
-            int(p.name[1:]) for p in
-            Path(f"{out_dir}/clicks").glob("v*")
-            if p.is_dir() and p.name[1:].isdigit())
-        if existing and max(existing) > batch_id:
-            raise RuntimeError(
-                f"attribution store {out_dir} already holds version "
-                f"v{max(existing)} > incoming batch {batch_id} — "
-                f"refusing to reset or double-credit")
-        prior = [v for v in existing if v < batch_id]
+        base = snapshots.rebase_base(
+            out_dir, batch_id, checkpoint_dir, "attribution store",
+            " — refusing to reset or double-credit", sub="clicks")
 
         def _load(sub: str, schema) -> DataFrame:
-            if prior:
-                return spark.read.parquet(
-                    f"{out_dir}/{sub}/v{prior[-1]:020d}")
+            if base:
+                return spark.read.parquet(f"{out_dir}/{sub}/{base}")
             return spark.createDataFrame([], schema)
 
         clicks = _load("clicks", clicks_new.schema) \
@@ -1677,8 +1538,7 @@ def stream_linear_attribution(events: DataFrame, out_dir: str,
                  .unionByName(old_rows
                               .withColumn("credit", -F.col("credit"))
                               .withColumn("mult", F.lit(-1))))
-        delta.write.mode("overwrite").parquet(
-            f"{out_dir}/credits/v{batch_id:020d}")
+        snapshots.write_snapshot(delta, out_dir, batch_id, "credits")
 
         # retention fences off the ingestion frontier (max event time
         # seen across both stores and this batch)
@@ -1686,29 +1546,22 @@ def stream_linear_attribution(events: DataFrame, out_dir: str,
             clicks.agg(F.max("c_us")).collect()[0][0] or 0,
             pur_new.agg(F.max("p_us")).collect()[0][0] or 0,
             pur_base.agg(F.max("p_us")).collect()[0][0] or 0)
-        clicks.where(F.col("c_us") >= hi - 2 * ATTR_WINDOW_US) \
-            .write.mode("overwrite").parquet(
-                f"{out_dir}/clicks/v{batch_id:020d}")
+        snapshots.write_snapshot(
+            clicks.where(F.col("c_us") >= hi - 2 * ATTR_WINDOW_US),
+            out_dir, batch_id, "clicks")
         pur_keep = (pur_base.unionByName(pur_new)
                     .where(F.col("p_us") > hi - ATTR_WINDOW_US))
-        pur_keep.write.mode("overwrite").parquet(
-            f"{out_dir}/purchases/v{batch_id:020d}")
+        snapshots.write_snapshot(pur_keep, out_dir, batch_id,
+                                 "purchases")
         cur_next = (cur_base
                     .join(affected.select("p_id").distinct(),
                           "p_id", "anti")
                     .unionByName(new_rows)
                     .join(pur_keep.select("p_id"), "p_id", "semi"))
-        cur_next.write.mode("overwrite").parquet(
-            f"{out_dir}/cur/v{batch_id:020d}")
-        tmp = f"{out_dir}/_CURRENT.tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(f"v{batch_id:020d}")
-        os.replace(tmp, f"{out_dir}/_CURRENT")
+        snapshots.publish(out_dir, snapshots.write_snapshot(
+            cur_next, out_dir, batch_id, "cur"))
 
-    return (events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(events, merge, checkpoint_dir)
 
 
 def read_attribution_credits(spark: SparkSession,
@@ -1742,24 +1595,19 @@ def stream_ivf_health_monitor(embeddings: DataFrame,
     to retrain from). Each arriving vector routes through the
     zero-state `ivf_assign_stream` literal-centroid argmax; the
     micro-batch's (centroid_id, label) counts sum-merge into the
-    cells store with the token-count-store REBASE discipline
-    (non-idempotent sum ⇒ batch b always merges into the newest
-    version < b; fresh checkpoints against an existing store fail
-    loudly), and each commit also writes triggers/v{b}: the cells
-    breaching the jumbo-share / purity / empty fences AS OF that
-    batch, version-stamped so the maintenance actor knows which
-    snapshot fired. State is (k × labels) counters — never
-    vectors."""
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        _merge_ivf_cells(batch, batch_id, out_dir,
-                         centroids, lineage=checkpoint_dir)
-
-    assigned = ivf_assign_stream(embeddings, centroids)
-    return (assigned.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    cells store under the rebase rule of streaming/snapshots.py
+    (non-idempotent sum: replays rebuild, fresh checkpoints against
+    an existing store fail loudly), and each commit also writes
+    triggers/v{b}: the cells breaching the jumbo-share / purity /
+    empty fences AS OF that batch, version-stamped so the maintenance
+    actor knows which snapshot fired. State is (k × labels) counters
+    — never vectors."""
+    return run_batches(
+        ivf_assign_stream(embeddings, centroids),
+        lambda batch, batch_id: _merge_ivf_cells(
+            batch, batch_id, out_dir, centroids,
+            lineage=checkpoint_dir),
+        checkpoint_dir)
 
 
 def _merge_ivf_cells(batch: DataFrame, batch_id: int, out_dir: str,
@@ -1768,35 +1616,19 @@ def _merge_ivf_cells(batch: DataFrame, batch_id: int, out_dir: str,
     """One exactly-once sum-merge commit of a micro-batch's assigned
     cells + the fence evaluation over the merged store. Module-level
     so the replay test can invoke it directly."""
-    import os
-    from pathlib import Path
-
     from ..plans.ivf import IVF_MAX_SHARE, IVF_MIN_PURITY
 
-    _check_lineage(out_dir, lineage)
     spark = batch.sparkSession
+    base = snapshots.rebase_base(
+        out_dir, batch_id, lineage, "ivf-health store",
+        " — refusing to reset or double-count", sub="cells")
     cnt = (batch.groupBy("centroid_id", "label")
            .agg(F.count(F.lit(1)).alias("c")))
-    existing = sorted(
-        int(p.name[1:]) for p in Path(out_dir).glob("cells/v*")
-        if p.is_dir() and p.name[1:].isdigit())
-    if existing and max(existing) > batch_id:
-        raise RuntimeError(
-            f"ivf-health store {out_dir} already holds version "
-            f"v{max(existing)} > incoming batch {batch_id} — "
-            f"refusing to reset or double-count")
-    prior = [v for v in existing if v < batch_id]
-    if prior:
-        base = spark.read.parquet(
-            f"{out_dir}/cells/v{prior[-1]:020d}")
-        merged = (base.unionByName(cnt)
-                  .groupBy("centroid_id", "label")
-                  .agg(F.sum("c").alias("c")))
-    else:
-        merged = cnt
-    version = f"v{batch_id:020d}"
-    merged.write.mode("overwrite").parquet(
-        f"{out_dir}/cells/{version}")
+    merged = cnt if base is None else (
+        spark.read.parquet(f"{out_dir}/cells/{base}")
+        .unionByName(cnt)
+        .groupBy("centroid_id", "label").agg(F.sum("c").alias("c")))
+    version = snapshots.write_snapshot(merged, out_dir, batch_id, "cells")
     health = _ivf_health_from_cells(
         spark.read.parquet(f"{out_dir}/cells/{version}"), centroids)
     trig = health.select(
@@ -1805,13 +1637,10 @@ def _merge_ivf_cells(batch: DataFrame, batch_id: int, out_dir: str,
         .when(F.col("share") > IVF_MAX_SHARE, "jumbo_cell")
         .when(F.col("purity") < IVF_MIN_PURITY, "impure_cell")
         .alias("reason")).where(F.col("reason").isNotNull())
-    trig.withColumn("version", F.lit(batch_id).cast("long")) \
-        .write.mode("overwrite").parquet(
-            f"{out_dir}/triggers/{version}")
-    tmp = f"{out_dir}/_CURRENT.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(version)
-    os.replace(tmp, f"{out_dir}/_CURRENT")
+    snapshots.write_snapshot(
+        trig.withColumn("version", F.lit(batch_id).cast("long")),
+        out_dir, batch_id, "triggers")
+    snapshots.publish(out_dir, version)
 
 
 def _ivf_health_from_cells(cells: DataFrame,
@@ -1848,18 +1677,14 @@ def read_ivf_health(spark: SparkSession, out_dir: str,
     """Health report from the committed store head (the _CURRENT
     pointer) — same shape as plans/ivf.ivf_health on the full
     snapshot (tested equal)."""
-    with open(f"{out_dir}/_CURRENT", encoding="utf-8") as f:
-        head = f.read().strip()
-    cells = spark.read.parquet(f"{out_dir}/cells/{head}")
-    return _ivf_health_from_cells(cells, centroids)
+    return _ivf_health_from_cells(
+        read_latest_snapshot(spark, out_dir, "cells"), centroids)
 
 
 def read_ivf_triggers(spark: SparkSession, out_dir: str) -> DataFrame:
     """Fence breaches as of the committed head: (centroid_id,
     reason, version)."""
-    with open(f"{out_dir}/_CURRENT", encoding="utf-8") as f:
-        head = f.read().strip()
-    return spark.read.parquet(f"{out_dir}/triggers/{head}")
+    return read_latest_snapshot(spark, out_dir, "triggers")
 
 
 def stream_maintain_skyline(orders: DataFrame, out_dir: str,
@@ -1874,58 +1699,32 @@ def stream_maintain_skyline(orders: DataFrame, out_dir: str,
     history. Rebased per batch for exactly-once (replay rebuilds the
     same version from the pre-batch base; the merge is idempotent on
     top of that since skylining is)."""
-
-    def commit(batch: DataFrame, batch_id: int) -> None:
-        _merge_skyline(batch, batch_id, out_dir,
-                       lineage=checkpoint_dir)
-
-    return (orders.writeStream.foreachBatch(commit)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(
+        orders, lambda batch, batch_id: _merge_skyline(
+            batch, batch_id, out_dir, lineage=checkpoint_dir),
+        checkpoint_dir)
 
 
 def _merge_skyline(batch: DataFrame, batch_id: int, out_dir: str,
                    lineage: str | None = None) -> None:
     """One exactly-once frontier-merge commit. Module-level so the
     replay test can invoke it directly."""
-    import os
-    from pathlib import Path
-
     from ..operators.relational import _skyline_2d
 
-    _check_lineage(out_dir, lineage)
-    spark = batch.sparkSession
+    base = snapshots.rebase_base(out_dir, batch_id, lineage,
+                                 "skyline store", " — refusing to reset")
     cols = ["o_orderkey", "o_orderdate", "o_totalprice"]
     cand = _skyline_2d(batch.select(*cols))
-    existing = sorted(
-        int(p.name[1:]) for p in Path(out_dir).glob("v*")
-        if p.is_dir() and p.name[1:].isdigit())
-    if existing and max(existing) > batch_id:
-        raise RuntimeError(
-            f"skyline store {out_dir} already holds version "
-            f"v{max(existing)} > incoming batch {batch_id} — "
-            f"refusing to reset")
-    prior = [v for v in existing if v < batch_id]
-    if prior:
-        base = spark.read.parquet(f"{out_dir}/v{prior[-1]:020d}")
-        merged = _skyline_2d(base.unionByName(cand))
-    else:
-        merged = cand
-    version = f"v{batch_id:020d}"
-    merged.write.mode("overwrite").parquet(f"{out_dir}/{version}")
-    tmp = f"{out_dir}/_CURRENT.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(version)
-    os.replace(tmp, f"{out_dir}/_CURRENT")
+    merged = cand if base is None else _skyline_2d(
+        batch.sparkSession.read.parquet(f"{out_dir}/{base}")
+        .unionByName(cand))
+    snapshots.commit(merged, out_dir, batch_id)
 
 
 def read_skyline(spark: SparkSession, out_dir: str) -> DataFrame:
     """The committed frontier, in the batch `orders_skyline_2d`
     output shape (orderdate formatted)."""
-    with open(f"{out_dir}/_CURRENT", encoding="utf-8") as f:
-        head = f.read().strip()
-    cur = spark.read.parquet(f"{out_dir}/{head}")
+    cur = read_latest_snapshot(spark, out_dir)
     return cur.select("o_orderkey",
                       F.date_format("o_orderdate", "yyyy-MM-dd")
                       .alias("orderdate"),
@@ -1944,13 +1743,10 @@ def stream_maintain_lifecycle(events: DataFrame, out_dir: str,
     store into the batch report shape against the store's own
     frontier. State is one row per distinct user — the exact floor
     for this metric."""
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        _merge_lifecycle(batch, batch_id, out_dir)
-
-    return (events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(
+        events, lambda batch, batch_id: _merge_lifecycle(
+            batch, batch_id, out_dir),
+        checkpoint_dir)
 
 
 def _merge_lifecycle(batch: DataFrame, batch_id: int,
@@ -1959,33 +1755,18 @@ def _merge_lifecycle(batch: DataFrame, batch_id: int,
     lifecycle store (see stream_maintain_lifecycle for the contract).
     Module-level so replay tests and composed store queries can
     invoke it directly."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
-    spark = batch.sparkSession
     seen = (batch.select("user_id", F.unix_micros("ts").alias("us"))
             .groupBy("user_id")
             .agg(F.min("us").alias("first_us"),
                  F.max("us").alias("last_us")))
-    try:
-        current = read_latest_snapshot(spark, out_dir)
-        merged = (current.unionByName(seen)
-                  .groupBy("user_id")
-                  .agg(F.min("first_us").alias("first_us"),
-                       F.max("last_us").alias("last_us")))
-    except FileNotFoundError:
-        merged = seen
-    except AnalysisException as e:
-        raise RuntimeError(
-            f"lifecycle store under {out_dir} unreadable; "
-            f"refusing to reset history") from e
-    version = f"v{batch_id:020d}"
-    merged.write.mode("overwrite").parquet(f"{out_dir}/{version}")
-    tmp = f"{out_dir}/_CURRENT.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(version)
-    os.replace(tmp, f"{out_dir}/_CURRENT")
+    current = snapshots.head_base(batch.sparkSession, out_dir,
+                                  "lifecycle store")
+    merged = seen if current is None else (
+        current.unionByName(seen)
+        .groupBy("user_id")
+        .agg(F.min("first_us").alias("first_us"),
+             F.max("last_us").alias("last_us")))
+    snapshots.commit(merged, out_dir, batch_id)
 
 
 def read_lifecycle_stages(spark: SparkSession,
@@ -2027,11 +1808,8 @@ def _read_bitmap_state(spark: SparkSession, out_dir: str,
     into the head state. Sound for ANY interleaving because bit_or
     is idempotent, commutative and associative — a delta is just the
     batch's own words, never a read-modify-write image."""
-    frames = [spark.read.parquet(f"{out_dir}/{p}") for p in parts]
-    head = frames[0]
-    for fr in frames[1:]:
-        head = head.unionByName(fr)
-    return (head.groupBy("event_type", "blk")
+    return (spark.read.parquet(*[f"{out_dir}/{p}" for p in parts])
+            .groupBy("event_type", "blk")
             .agg(F.expr("bit_or(w)").alias("w")))
 
 
@@ -2048,14 +1826,10 @@ def stream_maintain_audience_bitmaps(events: DataFrame, out_dir: str,
     a fresh full snapshot every BITMAP_COMPACT_EVERY batches.
     Replays rewrite the same delta (same batch_id) and re-OR the
     same bits; out-of-order batches commute — no rebase ledger."""
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        _merge_audience_bitmaps(batch, batch_id, out_dir)
-
-    return (events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_batches(
+        events, lambda batch, batch_id: _merge_audience_bitmaps(
+            batch, batch_id, out_dir),
+        checkpoint_dir)
 
 
 def _merge_audience_bitmaps(batch: DataFrame, batch_id: int,
@@ -2064,8 +1838,6 @@ def _merge_audience_bitmaps(batch: DataFrame, batch_id: int,
     store (see stream_maintain_audience_bitmaps for the contract).
     Module-level so replay tests and composed store queries can
     invoke it directly."""
-    import os
-
     from ..operators.analytics import BITMAP_LANE
 
     spark = batch.sparkSession
@@ -2079,32 +1851,33 @@ def _merge_audience_bitmaps(batch: DataFrame, batch_id: int,
                      .alias("bit"))
              .groupBy("event_type", "blk")
              .agg(F.expr("bit_or(bit)").alias("w")))
-    version = f"v{batch_id:020d}"
+    version = snapshots.version(batch_id)
+    # the folded snapshot lives under base/, a name no delta takes: a
+    # replay of the compacting batch rewrites delta v{b} on top of it
+    # instead of overwriting the whole store with the batch's words
+    compacted = f"base/{version}"
     try:
-        with open(f"{out_dir}/_CURRENT", encoding="utf-8") as f:
-            parts = f.read().split()
+        parts = snapshots.read_head(out_dir)
     except FileNotFoundError:
         parts = []
     # a replayed batch_id must not duplicate its manifest entry
     # (the delta itself is overwritten in place; bit_or would
     # absorb a duplicate anyway, this keeps the chain honest)
     parts = [p for p in parts if p != version]
-    if len(parts) >= BITMAP_COMPACT_EVERY:
+    # a base this batch compacted already holds its words, and
+    # overwriting a path the fold reads can delete it before the scan
+    # runs: replay as a delta
+    if len(parts) >= BITMAP_COMPACT_EVERY and compacted not in parts:
         merged = (_read_bitmap_state(spark, out_dir, parts)
                   .unionByName(words)
                   .groupBy("event_type", "blk")
                   .agg(F.expr("bit_or(w)").alias("w")))
-        merged.write.mode("overwrite") \
-            .parquet(f"{out_dir}/{version}")
-        parts = [version]
+        snapshots.write_snapshot(merged, out_dir, batch_id, "base")
+        parts = [compacted]
     else:
-        words.write.mode("overwrite") \
-            .parquet(f"{out_dir}/{version}")
-        parts = parts + [version]
-    tmp = f"{out_dir}/_CURRENT.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write("\n".join(parts))
-    os.replace(tmp, f"{out_dir}/_CURRENT")
+        parts = parts + [snapshots.write_snapshot(words, out_dir,
+                                                  batch_id)]
+    snapshots.publish(out_dir, *parts)
 
 
 def read_audience_overlap(spark: SparkSession,
@@ -2113,9 +1886,8 @@ def read_audience_overlap(spark: SparkSession,
     `audience_bitmap_intersection` report shape (folding the base +
     delta manifest; a legacy single-version pointer reads the
     same)."""
-    with open(f"{out_dir}/_CURRENT", encoding="utf-8") as f:
-        parts = f.read().split()
-    words = _read_bitmap_state(spark, out_dir, parts)
+    words = _read_bitmap_state(spark, out_dir,
+                               snapshots.read_head(out_dir))
     a = (words.where(F.col("event_type") == "click")
          .select("blk", F.col("w").alias("wa")))
     b = (words.where(F.col("event_type") == "purchase")
@@ -2261,16 +2033,11 @@ def _merge_heavy_hitters(batch: DataFrame, batch_id: int,
     deterministic heavy-hitter guarantee that needs k counters of
     state where exact counts need the vocabulary.
 
-    Exactly-once by REBASING like the token-count store: batch b
-    merges into the newest snapshot with version < b, so a replayed
-    batch rebuilds the same v{b}; a fresh checkpoint behind the store
-    head fails loudly."""
-    import os
-    from pathlib import Path
-
+    Exactly-once by the rebase rule of streaming/snapshots.py: a
+    replayed batch rebuilds the same version; a fresh checkpoint
+    behind the store head fails loudly."""
     from ..operators.text import tokens
 
-    _check_lineage(out_dir, lineage)
     spark = batch.sparkSession
 
     def reduce_to_k(counts: DataFrame, dec_prior: int):
@@ -2285,51 +2052,30 @@ def _merge_heavy_hitters(batch: DataFrame, batch_id: int,
         return (kept.withColumn(
             "dec_total", F.lit(dec_total).cast("long")), dec_total)
 
+    base = snapshots.rebase_base(out_dir, batch_id, lineage,
+                                 "heavy-hitter store")
     cnt = (batch.select(F.explode(tokens()).alias("token"))
            .groupBy("token").agg(F.count(F.lit(1)).alias("cnt")))
-    existing = sorted(
-        int(p.name[1:]) for p in Path(out_dir).glob("v*")
-        if p.is_dir() and p.name[1:].isdigit())
-    if existing and max(existing) > batch_id:
-        raise RuntimeError(
-            f"heavy-hitter store {out_dir} already holds version "
-            f"v{max(existing)} > incoming batch {batch_id} (fresh "
-            f"checkpoint against an existing store?) — refusing to "
-            f"reset or double-count; use a new store or keep the "
-            f"original checkpoint")
-    prior = [v for v in existing if v < batch_id]
-    if prior:
-        base = spark.read.parquet(f"{out_dir}/v{prior[-1]:020d}")
+    if base:
         # dec_total lives in a sidecar, NOT only in the kept rows: a
         # snapshot can legally compact to ZERO rows (k+1 tokens tied
         # at the decrement), and max() over an empty frame would
         # silently reset the accumulated decrement — voiding the
         # cnt ≤ true ≤ cnt + dec_total bound for every later
-        # snapshot. Row-carried dec_total remains as a fallback for
-        # stores written before the sidecar existed.
-        dec_path = Path(out_dir) / f"v{prior[-1]:020d}.dec"
-        if dec_path.exists():
-            dec_prior = int(dec_path.read_text())
-        else:
-            dec_prior = int(
-                base.agg(F.max("dec_total")).collect()[0][0] or 0)
-        summed = (base.select("token", "cnt")
+        # snapshot.
+        with open(f"{out_dir}/{base}.dec", encoding="utf-8") as f:
+            dec_prior = int(f.read())
+        summed = (spark.read.parquet(f"{out_dir}/{base}")
+                  .select("token", "cnt")
                   .unionByName(cnt)
                   .groupBy("token").agg(F.sum("cnt").alias("cnt")))
     else:
         dec_prior = 0
         summed = cnt
     merged, dec_total = reduce_to_k(summed, dec_prior)
-    version = f"v{batch_id:020d}"
-    merged.write.mode("overwrite").parquet(f"{out_dir}/{version}")
-    dtmp = f"{out_dir}/{version}.dec.tmp"
-    with open(dtmp, "w", encoding="utf-8") as f:
-        f.write(str(dec_total))
-    os.replace(dtmp, f"{out_dir}/{version}.dec")
-    tmp = f"{out_dir}/_CURRENT.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(version)
-    os.replace(tmp, f"{out_dir}/_CURRENT")
+    version = snapshots.write_snapshot(merged, out_dir, batch_id)
+    snapshots.write_atomic(f"{out_dir}/{version}.dec", str(dec_total))
+    snapshots.publish(out_dir, version)
 
 
 def stream_maintain_heavy_hitters(docs: DataFrame, out_dir: str,
@@ -2343,18 +2089,12 @@ def stream_maintain_heavy_hitters(docs: DataFrame, out_dir: str,
 
     Each snapshot is ≤ k rows of (token, cnt, dec_total) with the
     guarantee cnt ≤ true ≤ cnt + dec_total and every token with
-    true > dec_total present. Same rebasing exactly-once contract as
-    the token-count store (replay rebuilds, fresh-checkpoint restarts
-    refuse)."""
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        _merge_heavy_hitters(batch, batch_id, out_dir, k=k,
-                             lineage=checkpoint_dir)
-
-    return (docs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    true > dec_total present. Same rebase rule as the token-count
+    store (replay rebuilds, fresh-checkpoint restarts refuse)."""
+    return run_batches(
+        docs, lambda batch, batch_id: _merge_heavy_hitters(
+            batch, batch_id, out_dir, k=k, lineage=checkpoint_dir),
+        checkpoint_dir)
 
 
 def read_heavy_hitters(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -2382,8 +2122,8 @@ def _merge_value_histogram(batch: DataFrame, batch_id: int,
                            lineage: str | None = None,
                            max_cells: int = VH_MAX_CELLS) -> None:
     """One exactly-once sum-merge of a micro-batch's per-(event_type,
-    quantized value) counts into the histogram store — the
-    token-count rebasing contract on the numeric axis. Module-level
+    quantized value) counts into the histogram store — the rebase
+    rule of streaming/snapshots.py on the numeric axis. Module-level
     so the replay test can invoke it directly.
 
     Before publishing, a distinct-cell census fences the quantized
@@ -2394,35 +2134,18 @@ def _merge_value_histogram(batch: DataFrame, batch_id: int,
     vocabulary-sized analogue) rather than let the store degrade into
     an unbounded table. The refused batch does not advance _CURRENT,
     so the prior snapshot stays serveable."""
-    import os
-    from pathlib import Path
-
-    _check_lineage(out_dir, lineage)
-    spark = batch.sparkSession
+    base = snapshots.rebase_base(out_dir, batch_id, lineage,
+                                 "value-histogram store")
     cnt = (batch.where(F.col("value").isNotNull())
            .select("event_type",
                    F.floor(F.col("value") * VH_VGRID + F.lit(0.5))
                    .cast("long").alias("vu"))
            .groupBy("event_type", "vu")
            .agg(F.count(F.lit(1)).alias("cnt")))
-    existing = sorted(
-        int(p.name[1:]) for p in Path(out_dir).glob("v*")
-        if p.is_dir() and p.name[1:].isdigit())
-    if existing and max(existing) > batch_id:
-        raise RuntimeError(
-            f"value-histogram store {out_dir} already holds version "
-            f"v{max(existing)} > incoming batch {batch_id} (fresh "
-            f"checkpoint against an existing store?) — refusing to "
-            f"reset or double-count; use a new store or keep the "
-            f"original checkpoint")
-    prior = [v for v in existing if v < batch_id]
-    if prior:
-        base = spark.read.parquet(f"{out_dir}/v{prior[-1]:020d}")
-        merged = (base.unionByName(cnt)
-                  .groupBy("event_type", "vu")
-                  .agg(F.sum("cnt").alias("cnt")))
-    else:
-        merged = cnt
+    merged = cnt if base is None else (
+        batch.sparkSession.read.parquet(f"{out_dir}/{base}")
+        .unionByName(cnt)
+        .groupBy("event_type", "vu").agg(F.sum("cnt").alias("cnt")))
     n_cells = merged.count()
     if n_cells > max_cells:
         raise RuntimeError(
@@ -2434,12 +2157,7 @@ def _merge_value_histogram(batch: DataFrame, batch_id: int,
             f"VH_VGRID, raise max_cells deliberately, or use a "
             f"bounded-error summary store; refusing to publish "
             f"(prior snapshot left as _CURRENT)")
-    version = f"v{batch_id:020d}"
-    merged.write.mode("overwrite").parquet(f"{out_dir}/{version}")
-    tmp = f"{out_dir}/_CURRENT.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(version)
-    os.replace(tmp, f"{out_dir}/_CURRENT")
+    snapshots.commit(merged, out_dir, batch_id)
 
 
 def stream_maintain_value_histogram(events: DataFrame, out_dir: str,
@@ -2451,18 +2169,12 @@ def stream_maintain_value_histogram(events: DataFrame, out_dir: str,
     VALUE-RANGE-bounded (never corpus-bounded — a 100 TB event stream
     still folds onto the same 1e-4 grid), so exact quantiles stay
     queryable offline at any stream length where a sketch would have
-    locked in its error. Same rebasing exactly-once contract as the
-    token-count store."""
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        _merge_value_histogram(batch, batch_id, out_dir,
-                               lineage=checkpoint_dir,
-                               max_cells=max_cells)
-
-    return (events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    locked in its error. Same rebase rule as the token-count store."""
+    return run_batches(
+        events, lambda batch, batch_id: _merge_value_histogram(
+            batch, batch_id, out_dir, lineage=checkpoint_dir,
+            max_cells=max_cells),
+        checkpoint_dir)
 
 
 def read_value_quantiles(spark: SparkSession, out_dir: str,

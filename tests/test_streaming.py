@@ -1244,6 +1244,29 @@ def test_stream_audience_bitmaps_compaction(spark, tmp_path,
     want = audience_bitmap_intersection(t).toPandas()
     pd.testing.assert_frame_equal(_sorted(got), _sorted(want))
 
+    # replaying the compacting batch (crash between publish and
+    # checkpoint commit) must add its delta on top of the folded
+    # snapshot, not overwrite it with the batch's own words
+    def merge(i: int, batch_id: int) -> None:
+        jobs._merge_audience_bitmaps(
+            ev.where(F.col("user_id") % 3 == i), batch_id, store)
+        got = jobs.read_audience_overlap(spark, store).toPandas()
+        pd.testing.assert_frame_equal(_sorted(got), _sorted(want))
+
+    merge(2, 2)
+    # batch 3 compacts again, batch 4 adds a delta; replaying batch 3
+    # then finds a full chain whose base is its own compaction, which
+    # it must not overwrite while folding it (without adaptive
+    # execution the overwrite deletes the base before the scan runs)
+    merge(0, 3)
+    merge(1, 4)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        merge(0, 3)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
 
 def test_dsir_gate_stream_matches_batch(spark):
     """Streaming DSIR gate (λ profile trained on the same corpus it
