@@ -118,8 +118,8 @@ def rebase_base(out_dir: str, batch_id: int, lineage: str | None,
 def write_snapshot(frame: DataFrame, out_dir: str, batch_id: int,
                    sub: str = "") -> str:
     """Write ``frame`` as the batch's version (a replay overwrites its
-    own earlier attempt) and return the version name; nothing reads it
-    until it is published."""
+    own earlier attempt) and return the version name; head readers see
+    it only once it is published."""
     name = version(batch_id)
     frame.write.mode("overwrite").parquet(os.path.join(out_dir, sub, name))
     return name
