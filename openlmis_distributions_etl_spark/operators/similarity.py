@@ -68,19 +68,122 @@ def _query_vector(t: dict[str, DataFrame]) -> DataFrame:
             .select(F.col("embedding").alias("q")))
 
 
-def knn_bruteforce(t: dict[str, DataFrame], k: int = TOP_K) -> DataFrame:
-    """Exact top-k cosine neighbors of the query vector: broadcast the
-    single query row, score map-side, global top-k (Spark's sort+limit
-    = distributed partial top-k, no full sort materialized)."""
-    e = spread(t["embeddings"])
-    return (
-        e.crossJoin(broadcast(_query_vector(t)))
+def _top_k(scored: DataFrame, k: int, by: tuple[str, ...] = (),
+           id_col: str = "vec_id") -> DataFrame:
+    """Top-k of ``scored`` in the (cos_sim DESC, id ASC) total order
+    every oracle twin replays. Without ``by``: one global top-k, a sort
+    + limit (Spark's distributed partial top-k, no full sort
+    materialized). With ``by`` (a query id, a source node, a sweep
+    lane): a top-k per group through one row_number window, the rank
+    kept as ``rnk``."""
+    order = (F.desc("cos_sim"), F.asc(id_col))
+    if not by:
+        return scored.orderBy(*order).limit(k)
+    w = Window.partitionBy(*by).orderBy(*order)
+    return (scored.withColumn("rnk", F.row_number().over(w))
+            .where(F.col("rnk") <= k))
+
+
+def _query_knn(cands: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Exact top-k cosine neighbors of the query row ``q`` (column
+    ``q``) among ``cands`` (vec_id, label, embedding), the query vector
+    itself excluded: broadcast the single query row, score map-side,
+    global top-k."""
+    return _top_k(
+        cands.crossJoin(broadcast(q))
         .where(F.col("vec_id") != QUERY_VEC_ID)
         .select("vec_id", "label",
-                cosine(F.col("embedding"), F.col("q")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
+                cosine(F.col("embedding"), F.col("q")).alias("cos_sim")),
+        k)
+
+
+def _probe_list(cent: DataFrame, q: DataFrame, nprobe: int) -> DataFrame:
+    """The ``nprobe`` centroids (centroid_id, cvec) nearest the query
+    row ``q``, ties to the smallest centroid_id."""
+    return _top_k(
+        cent.crossJoin(broadcast(q))
+        .select("centroid_id",
+                cosine(F.col("cvec"), F.col("q")).alias("cos_sim")),
+        nprobe, id_col="centroid_id").select("centroid_id")
+
+
+def knn_bruteforce(t: dict[str, DataFrame], k: int = TOP_K) -> DataFrame:
+    """Exact top-k cosine neighbors of the query vector over the whole
+    store (`_query_knn`)."""
+    return _query_knn(spread(t["embeddings"]), _query_vector(t), k)
+
+
+def _recall_at_k(exact: DataFrame, approx: DataFrame, k: int,
+                 lanes: DataFrame | None = None) -> DataFrame:
+    """Recall@k of an approximate search against the exact answer —
+    the evaluation harness every approximate tier ships with. A hit is
+    an ``approx`` row that matches an ``exact`` row on all of exact's
+    columns: vec_id, plus qid for a query set. Both sides are
+    k-row-sized, so the cost is the searches themselves. Three shapes,
+    each ending in (…, k, n_hits, recall_at_k):
+
+    - scalar (exact is (vec_id)): ONE row, also when nothing hits;
+    - per query (exact is (qid, vec_id)): one row per query of
+      ``exact``, a query without a hit reading n_hits 0;
+    - per lane (``lanes`` given: a small spine of sweep lanes, maybe
+      crossed with the queries): one row per ``lanes`` row, its
+      columns first, a lane without a hit reading 0."""
+    keys = [c for c in exact.columns if c != "vec_id"]
+    by = lanes.columns if lanes is not None else keys
+    hits = (approx.join(exact, exact.columns)
+            .groupBy(*by)
+            .agg(F.count(F.lit(1)).cast("int").alias("n_hits")))
+    if lanes is not None:
+        # a literal lane spine shares no partitioning with the hits
+        hits = lanes.join(broadcast(hits), by, "left")
+    elif keys:
+        # the query keys and the hits both come out hash-partitioned
+        # on the query key: a plain join adds no exchange
+        hits = exact.select(*keys).distinct().join(hits, keys, "left")
+    n = F.coalesce(F.col("n_hits"), F.lit(0))
+    return hits.select(*by, F.lit(k).alias("k"), n.alias("n_hits"),
+                       (n.cast("double") / k).alias("recall_at_k"))
+
+
+# 1/log2(i+1) gain weights for ranks 1..10 and their sum (ideal DCG),
+# baked as shortest-round-trip literals — no engine log2 in any plan
+NDCG_WEIGHTS = (1.0, 0.6309297535714575, 0.5, 0.43067655807339306,
+                0.38685280723454163, 0.3562071871080222,
+                0.3333333333333333, 0.31546487678572877,
+                0.3010299956639812, 0.2890648263178879)
+NDCG_IDEAL = 4.543559338088346
+
+
+def _ndcg_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """nDCG@k of a ranked approximate top-k (vec_id, cos_sim) against
+    the exact top-k ids — the rank-aware companion to `_recall_at_k`
+    (recall treats rank 1 and rank k alike; nDCG charges misses near
+    the top more). One row (k, dcg, ideal_dcg, ndcg).
+
+    Relevance is binary membership in the exact top-k; gains are the
+    baked 1/log2(rank+1) literals above, folded in rank order over a
+    sorted ≤k-element array (both engines fold lists in order — no
+    float accumulation reordering), and the ideal DCG is the same
+    baked constant in the oracle."""
+    ranked = approx.select(
+        "vec_id",
+        F.row_number().over(Window.orderBy(F.desc("cos_sim"),
+                                           F.asc("vec_id")))
+        .alias("rank"))
+    rel = exact.select("vec_id", F.lit(1).alias("rel"))
+    gains = F.array(*[F.lit(w) for w in NDCG_WEIGHTS[:k]])
+    scored = (ranked.join(broadcast(rel), "vec_id", "left")
+              .select("rank", F.coalesce("rel", F.lit(0)).alias("rel")))
+    g = scored.agg(F.array_sort(F.collect_list(
+        F.struct("rank", "rel"))).alias("rr"))
+    dcg = F.aggregate(
+        F.col("rr"), F.lit(0.0),
+        lambda acc, s: acc + s["rel"] * F.element_at(gains, s["rank"]))
+    return g.select(
+        F.lit(k).alias("k"),
+        dcg.alias("dcg"),
+        F.lit(NDCG_IDEAL).alias("ideal_dcg"),
+        (dcg / F.lit(NDCG_IDEAL)).alias("ndcg"))
 
 
 def _centroids(t: dict[str, DataFrame]) -> DataFrame:
@@ -159,23 +262,9 @@ def knn_ivf(t: dict[str, DataFrame], k: int = TOP_K,
     knn_bruteforce (approximate: may miss neighbors outside probed
     clusters)."""
     q = _query_vector(t)
-    probe = (
-        _centroids(t).crossJoin(broadcast(q))
-        .select("centroid_id", cosine(F.col("cvec"), F.col("q")).alias("qc"))
-        .orderBy(F.desc("qc"), F.asc("centroid_id"))
-        .limit(nprobe)
-        .select("centroid_id")
-    )
-    assigned = ivf_assign(t)
-    return (
-        assigned.join(broadcast(probe), "centroid_id")
-        .crossJoin(broadcast(q))
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", "label",
-                cosine(F.col("embedding"), F.col("q")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
+    probe = _probe_list(_centroids(t), q, nprobe)
+    return _query_knn(ivf_assign(t).join(broadcast(probe), "centroid_id"),
+                      q, k)
 
 
 EVAL_MAX_VECTORS = 100_000   # cap for the O(n²) recall harnesses
@@ -411,23 +500,10 @@ def knn_ivf_trained(t: dict[str, DataFrame], k: int = TOP_K,
                 "p -> p.centroid)").alias("cvec")))
     cent = retain(cent)
     q = _query_vector(t)
-    probe = (
-        cent.crossJoin(broadcast(q))
-        .select("centroid_id",
-                cosine(F.col("cvec"), F.col("q")).alias("qc"))
-        .orderBy(F.desc("qc"), F.asc("centroid_id"))
-        .limit(nprobe)
-        .select("centroid_id"))
+    probe = _probe_list(cent, q, nprobe)
     assigned = _argmax_assign(
         spread(t["embeddings"]).select("vec_id", "label", "embedding"), cent)
-    return (
-        assigned.join(broadcast(probe), "centroid_id")
-        .crossJoin(broadcast(q))
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", "label",
-                cosine(F.col("embedding"), F.col("q")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k))
+    return _query_knn(assigned.join(broadcast(probe), "centroid_id"), q, k)
 
 
 def knn_batch(t: dict[str, DataFrame], n_queries: int = 5,
@@ -444,9 +520,7 @@ def knn_batch(t: dict[str, DataFrame], n_queries: int = 5,
               .select("qid", "vec_id", "label",
                       cosine(F.col("embedding"), F.col("qv"))
                       .alias("cos_sim")))
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
+    return (_top_k(scored, k, by=("qid",))
             .select("qid", "vec_id", "label", "cos_sim", "rnk"))
 
 
@@ -561,15 +635,7 @@ def knn_lsh(t: dict[str, DataFrame], k: int = TOP_K) -> DataFrame:
                   *[F.col("bucket").bitwiseXOR(F.lit(1 << i))
                     for i in range(N_SEARCH_PLANES)])).alias("bucket")))
     q = qrow.select(F.col("embedding").alias("q"))
-    return (
-        assigned.join(broadcast(probes), "bucket")
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(broadcast(q))
-        .select("vec_id", "label",
-                cosine(F.col("embedding"), F.col("q")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _query_knn(assigned.join(broadcast(probes), "bucket"), q, k)
 
 
 def ivf_cluster_stats(t: dict[str, DataFrame]) -> DataFrame:
@@ -585,15 +651,9 @@ def ivf_cluster_stats(t: dict[str, DataFrame]) -> DataFrame:
 
 def knn_lsh_recall(t: dict[str, DataFrame], k: int = TOP_K) -> DataFrame:
     """Recall@k of the LSH multiprobe ANN against exact brute force —
-    the evaluation harness run before trusting an approximate index.
-    Both sides are tiny (k rows), so the intersection join is a
-    broadcast no-op; the cost is the two searches themselves."""
-    approx = knn_lsh(t, k).select("vec_id")
-    exact = knn_bruteforce(t, k).select("vec_id")
-    return (exact.join(approx, "vec_id")
-            .agg(F.lit(k).alias("k"),
-                 F.count(F.lit(1)).cast("int").alias("n_hits"),
-                 (F.count(F.lit(1)) / k).alias("recall_at_k")))
+    the evaluation harness run before trusting an approximate index."""
+    return _recall_at_k(knn_bruteforce(t, k).select("vec_id"),
+                        knn_lsh(t, k).select("vec_id"), k)
 
 
 def embedding_dim_stats(t: dict[str, DataFrame]) -> DataFrame:
@@ -765,13 +825,9 @@ def knn_pq_refine(t: dict[str, DataFrame], k: int = TOP_K,
     distances and tie-breaks are; the refine join is an id-keyed
     broadcast semi-join."""
     short = knn_pq_adc(t, k=shortlist).select("vec_id")
-    return (t["embeddings"]
-            .join(broadcast(short), "vec_id", "left_semi")
-            .crossJoin(broadcast(_query_vector(t)))
-            .select("vec_id", "label",
-                    cosine(F.col("embedding"), F.col("q")).alias("cos_sim"))
-            .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-            .limit(k))
+    return _query_knn(
+        t["embeddings"].join(broadcast(short), "vec_id", "left_semi"),
+        _query_vector(t), k)
 
 
 def knn_ivf_pq(t: dict[str, DataFrame], k: int = TOP_K,
@@ -787,12 +843,7 @@ def knn_ivf_pq(t: dict[str, DataFrame], k: int = TOP_K,
     (centroids, codebook, LUT, probe list, shortlist) is KB-sized.
     Approximate like any IVF: recall bounded by the probe set."""
     q = _query_vector(t)
-    probe = (
-        _centroids(t).crossJoin(broadcast(q))
-        .select("centroid_id", cosine(F.col("cvec"), F.col("q")).alias("qc"))
-        .orderBy(F.desc("qc"), F.asc("centroid_id"))
-        .limit(nprobe)
-        .select("centroid_id"))
+    probe = _probe_list(_centroids(t), q, nprobe)
     cands = (ivf_assign(t).join(broadcast(probe), "centroid_id")
              .where(F.col("vec_id") != QUERY_VEC_ID)
              .select("vec_id", "embedding"))
@@ -804,13 +855,9 @@ def knn_ivf_pq(t: dict[str, DataFrame], k: int = TOP_K,
              .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
              .limit(shortlist)
              .select("vec_id"))
-    return (t["embeddings"]
-            .join(broadcast(short), "vec_id", "left_semi")
-            .crossJoin(broadcast(q))
-            .select("vec_id", "label",
-                    cosine(F.col("embedding"), F.col("q")).alias("cos_sim"))
-            .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-            .limit(k))
+    return _query_knn(
+        t["embeddings"].join(broadcast(short), "vec_id", "left_semi"),
+        q, k)
 
 
 def _pq_subrows(t: dict[str, DataFrame]) -> DataFrame:
@@ -994,12 +1041,7 @@ def knn_filtered(t: dict[str, DataFrame], label: int = 1,
     under-returns when the filter is selective — the classic filtered-
     search failure this shape avoids.)"""
     e = spread(t["embeddings"]).where(F.col("label") == label)
-    return (e.crossJoin(broadcast(_query_vector(t)))
-            .where(F.col("vec_id") != QUERY_VEC_ID)
-            .select("vec_id", "label",
-                    cosine(F.col("embedding"), F.col("q")).alias("cos_sim"))
-            .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-            .limit(k))
+    return _query_knn(e, _query_vector(t), k)
 
 
 def _dim_variances(t: dict[str, DataFrame]) -> DataFrame:
@@ -1106,31 +1148,27 @@ def matryoshka_prefix_eval(t: dict[str, DataFrame], k: int = TOP_K,
     before the index quality drops (truncating to d is an 8×/4×/2×
     scan-bytes saving at serving time).
 
-    Each prefix search is the brute-force plan with the fold shortened
-    to d terms: broadcast query row, map-side score, distributed
-    top-k; the recall join intersects two k-row frames. Everything
-    stays engine-exact — same fold order, same (cos DESC, vec_id)
-    tie-break as knn_bruteforce."""
+    Every width searches in ONE exploded lane pass (the
+    `ivf_probe_sweep` shape): each candidate row fans out to one lane
+    per width, its cosine folded over the first d dims only, and one
+    per-lane window takes each width's top-k. Everything stays
+    engine-exact — same fold order, same (cos DESC, vec_id) tie-break
+    as knn_bruteforce."""
     exact = knn_bruteforce(t, k).select("vec_id")
-    e = spread(t["embeddings"])
-    q = _query_vector(t)
-    out: DataFrame | None = None
-    for d in dims:
-        pc = cosine(F.slice(F.col("embedding"), 1, d),
-                    F.slice(F.col("q"), 1, d))
-        approx = (e.crossJoin(broadcast(q))
-                  .where(F.col("vec_id") != QUERY_VEC_ID)
-                  .select("vec_id", pc.alias("pcos"))
-                  .orderBy(F.desc("pcos"), F.asc("vec_id"))
-                  .limit(k)
-                  .select("vec_id"))
-        r = (exact.join(approx, "vec_id")
-             .agg(F.lit(d).alias("prefix_dim"),
-                  F.lit(k).alias("k"),
-                  F.count(F.lit(1)).cast("int").alias("n_hits"),
-                  (F.count(F.lit(1)) / k).alias("recall_at_k")))
-        out = r if out is None else out.unionByName(r)
-    return out
+    widths = F.array(*[F.lit(int(d)) for d in dims])
+    d = F.col("prefix_dim")
+    lanes = (spread(t["embeddings"]).crossJoin(broadcast(_query_vector(t)))
+             .where(F.col("vec_id") != QUERY_VEC_ID)
+             .select("vec_id", "embedding", "q",
+                     F.explode(widths).alias("prefix_dim"))
+             .select("prefix_dim", "vec_id",
+                     cosine(F.slice(F.col("embedding"), 1, d),
+                            F.slice(F.col("q"), 1, d)).alias("cos_sim")))
+    approx = _top_k(lanes, k, by=("prefix_dim",)).select("prefix_dim",
+                                                         "vec_id")
+    spine = exact.sparkSession.range(1).select(
+        F.explode(widths).alias("prefix_dim"))
+    return _recall_at_k(exact, approx, k, spine)
 
 
 RANGE_TAU = 0.15
@@ -1222,15 +1260,9 @@ def pca_project8(t: dict[str, DataFrame]) -> DataFrame:
 def knn_ivf_recall(t: dict[str, DataFrame], k: int = TOP_K) -> DataFrame:
     """Recall@k of the TRAINED-IVF probe search against exact brute
     force — completes the eval-harness pair (LSH already has one):
-    the number an index owner checks before narrowing nprobe. Both
-    sides are k rows, so the intersection join is a broadcast no-op;
-    the cost is the two searches."""
-    approx = knn_ivf_trained(t, k=k).select("vec_id")
-    exact = knn_bruteforce(t, k).select("vec_id")
-    return (exact.join(approx, "vec_id")
-            .agg(F.lit(k).alias("k"),
-                 F.count(F.lit(1)).cast("int").alias("n_hits"),
-                 (F.count(F.lit(1)) / k).alias("recall_at_k")))
+    the number an index owner checks before narrowing nprobe."""
+    return _recall_at_k(knn_bruteforce(t, k).select("vec_id"),
+                        knn_ivf_trained(t, k=k).select("vec_id"), k)
 
 
 KNN_GRAPH_K = 3
@@ -1260,16 +1292,13 @@ def knn_graph(t: dict[str, DataFrame], k: int = KNN_GRAPH_K,
     b = assigned.select("bucket", F.col("vec_id").alias("dst"),
                         F.col("label").alias("dst_label"),
                         F.col("embedding").alias("eb"))
-    w = Window.partitionBy("src").orderBy(F.desc("cos_sim"),
-                                          F.asc("dst"))
-    return (a.join(b, "bucket")
-            .where(F.col("src") != F.col("dst"))
-            .select("src", "dst", "dst_label",
-                    cosine(F.col("ea"), F.col("eb")).alias("cos_sim"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
+    scored = (a.join(b, "bucket")
+              .where(F.col("src") != F.col("dst"))
+              .select("src", "dst", "dst_label",
+                      cosine(F.col("ea"), F.col("eb")).alias("cos_sim")))
+    return (_top_k(scored, k, by=("src",), id_col="dst")
             .select("src", "dst", "dst_label", "cos_sim",
-                    F.col("rn").cast("int").alias("rank")))
+                    F.col("rnk").alias("rank")))
 
 
 def centroid_drift(t: dict[str, DataFrame]) -> DataFrame:
@@ -1384,45 +1413,11 @@ def random_pair_cos_histogram(t: dict[str, DataFrame]) -> DataFrame:
          / F.sum("n_pairs").over(wall)).alias("share"))
 
 
-# 1/log2(i+1) gain weights for ranks 1..10 and their sum (ideal DCG),
-# baked as shortest-round-trip literals — no engine log2 in any plan
-NDCG_WEIGHTS = (1.0, 0.6309297535714575, 0.5, 0.43067655807339306,
-                0.38685280723454163, 0.3562071871080222,
-                0.3333333333333333, 0.31546487678572877,
-                0.3010299956639812, 0.2890648263178879)
-NDCG_IDEAL = 4.543559338088346
-
-
 def knn_lsh_ndcg(t: dict[str, DataFrame], k: int = TOP_K) -> DataFrame:
-    """nDCG@k of the LSH multiprobe ANN against the exact top-k —
-    the rank-aware companion to `knn_lsh_recall` (recall treats rank
-    1 and rank 10 alike; nDCG charges misses near the top more).
-
-    Relevance is binary membership in the exact top-k; gains are the
-    baked 1/log2(rank+1) literals above, folded in rank order over a
-    sorted ≤k-element array (both engines fold lists in order — no
-    float accumulation reordering), and the ideal DCG is the same
-    baked constant in the oracle. Both sides are k-row frames, so
-    every join is a broadcast no-op; the cost is the two searches."""
-    approx = knn_lsh(t, k).select(
-        "vec_id",
-        F.row_number().over(Window.orderBy(F.desc("cos_sim"),
-                                           F.asc("vec_id")))
-        .alias("rank"))
-    exact = knn_bruteforce(t, k).select("vec_id", F.lit(1).alias("rel"))
-    gains = F.array(*[F.lit(w) for w in NDCG_WEIGHTS[:k]])
-    scored = (approx.join(broadcast(exact), "vec_id", "left")
-              .select("rank", F.coalesce("rel", F.lit(0)).alias("rel")))
-    g = scored.agg(F.array_sort(F.collect_list(
-        F.struct("rank", "rel"))).alias("rr"))
-    dcg = F.aggregate(
-        F.col("rr"), F.lit(0.0),
-        lambda acc, s: acc + s["rel"] * F.element_at(gains, s["rank"]))
-    return g.select(
-        F.lit(k).alias("k"),
-        dcg.alias("dcg"),
-        F.lit(NDCG_IDEAL).alias("ideal_dcg"),
-        (dcg / F.lit(NDCG_IDEAL)).alias("ndcg"))
+    """nDCG@k of the LSH multiprobe ANN against the exact top-k
+    (`_ndcg_at_k`)."""
+    return _ndcg_at_k(knn_bruteforce(t, k).select("vec_id"),
+                      knn_lsh(t, k), k)
 
 
 def label_centroid_silhouette(t: dict[str, DataFrame]) -> DataFrame:
@@ -1509,11 +1504,9 @@ def ivf_probe_sweep(t: dict[str, DataFrame], k: int = TOP_K) -> DataFrame:
     # ONE exploded pass instead of a union of per-budget subtrees: the
     # budgets are nested prefixes of the same centroid ranking, so each
     # candidate row (scored once) fans out to every budget that covers
-    # its centroid's rank, one window ranks all budgets at once, and the
-    # per-budget top-k is row_number over the identical (cos_sim DESC,
-    # vec_id ASC) total order limit(k) used — bit-identical rows for a
-    # quarter of the jobs (guide §2.3: aggregate once, don't replan
-    # per arm).
+    # its centroid's rank, and one per-budget window takes every
+    # budget's top-k at once — bit-identical rows for a quarter of the
+    # jobs (guide §2.3: aggregate once, don't replan per arm).
     arms = F.array(*[F.lit(int(np_)) for np_ in PROBE_SWEEP])
     cand = (assigned.join(broadcast(ranked), "centroid_id")
             .crossJoin(broadcast(q))
@@ -1524,23 +1517,10 @@ def ivf_probe_sweep(t: dict[str, DataFrame], k: int = TOP_K) -> DataFrame:
                     F.explode(F.filter(
                         arms, lambda a: a >= F.col("rank")))
                     .alias("nprobe")))
-    wr = Window.partitionBy("nprobe").orderBy(F.desc("cos_sim"),
-                                              F.asc("vec_id"))
-    topk = (cand.withColumn("rnk", F.row_number().over(wr))
-            .where(F.col("rnk") <= k)
-            .select("nprobe", "vec_id"))
-    hits = (topk.join(broadcast(exact), "vec_id")
-            .groupBy("nprobe")
-            .agg(F.count(F.lit(1)).alias("c")))
-    spark = assigned.sparkSession
-    spine = spark.range(1).select(
+    topk = _top_k(cand, k, by=("nprobe",)).select("nprobe", "vec_id")
+    spine = assigned.sparkSession.range(1).select(
         F.explode(arms).alias("nprobe"))
-    return (spine.join(broadcast(hits), "nprobe", "left")
-            .select("nprobe",
-                    F.coalesce("c", F.lit(0)).cast("int")
-                    .alias("n_hits"),
-                    (F.coalesce("c", F.lit(0)) / k)
-                    .alias("recall_at_k")))
+    return _recall_at_k(exact, topk, k, spine).drop("k")
 
 
 def _best_sub_d2(m: int) -> Column:
@@ -1760,27 +1740,18 @@ def knn_int8_rerank(t: dict[str, DataFrame], k: int = TOP_K,
     shortlist = (coarse
                  .orderBy(F.desc("cs"), F.asc("vec_id"))
                  .limit(cand))
-    return (shortlist
-            .select("vec_id", "label",
-                    cosine(F.col("embedding"), F.col("qv"))
-                    .alias("cos_sim"))
-            .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-            .limit(k))
+    return _top_k(shortlist.select(
+        "vec_id", "label",
+        cosine(F.col("embedding"), F.col("qv")).alias("cos_sim")), k)
 
 
 def knn_int8_recall(t: dict[str, DataFrame],
                     k: int = TOP_K) -> DataFrame:
     """Recall@k of the int8 cascade against exact brute force — the
     eval harness run before trusting the cascade's candidate budget
-    (the `knn_lsh_recall` contract, for the quantized path). Both
-    sides are k rows; the intersection join is a broadcast no-op."""
-    approx = knn_int8_rerank(t, k).select("vec_id")
-    exact = knn_bruteforce(t, k).select("vec_id")
-    return (exact.join(approx, "vec_id")
-            .agg(F.lit(k).alias("k"),
-                 F.count(F.lit(1)).cast("int").alias("n_hits"),
-                 (F.count(F.lit(1)).cast("double") / k)
-                 .alias("recall_at_k")))
+    (the `knn_lsh_recall` contract, for the quantized path)."""
+    return _recall_at_k(knn_bruteforce(t, k).select("vec_id"),
+                        knn_int8_rerank(t, k).select("vec_id"), k)
 
 
 def ivf_cluster_purity(t: dict[str, DataFrame]) -> DataFrame:
@@ -1947,136 +1918,144 @@ def _build_beam_edges(t: dict[str, DataFrame]) -> DataFrame:
     return local_e.unionByName(rev_e).unionByName(long_e).distinct()
 
 
-def knn_beam(t: dict[str, DataFrame], k: int = TOP_K,
-             beam_width: int = BEAM_WIDTH,
-             hops: int = BEAM_HOPS) -> DataFrame:
+def _beam_walk(t: dict[str, DataFrame], entries: dict[int, list[int]],
+               k: int, beam_width: int, hops: int) -> DataFrame:
     """HNSW-style BEAM SEARCH over the navigable `beam_graph_edges`
-    index — the graph-index ANN family (the one mainstream family
-    IVF/PQ/LSH don't cover), in the serving shape real graph-ANN
-    engines use: beam STATE (the ≤ ef scored ids — O(ef), corpus-
-    independent) lives on the coordinator, while every data-sized
-    step stays distributed — edge expansion probes the cached edge
-    table and candidate scoring probes the cached embedding frame
-    with the shared JVM-side cosine fold. Total score work is hops ×
-    ef × degree cosine evaluations, never a corpus-wide score scan
-    (that would be brute-force cost wearing a graph-index costume),
-    and each hop costs exactly TWO jobs (neighbor probe, candidate
-    score).
+    index for a set of queries walking it together — the graph-index
+    ANN family (the one mainstream family IVF/PQ/LSH don't cover), in
+    the serving shape real graph-ANN engines use: beam STATE (the ≤ ef
+    scored ids per query, keyed by (qid, vec_id) — O(queries × ef),
+    corpus-independent) lives on the coordinator, while every
+    data-sized step stays distributed — edge expansion probes the
+    cached edge table and candidate scoring probes the cached
+    embedding frame with the shared JVM-side cosine fold. Total score
+    work is queries × hops × ef × degree cosine evaluations, never a
+    corpus-wide score scan (that would be brute-force cost wearing a
+    graph-index costume), and one hop costs at most TWO tiny jobs for
+    the whole query set (adjacency page-in, candidate score).
 
-    Semantics are the ef-search formulation: beam_i = top-ef of
-    VISITED_i (monotone — re-selecting from everything scored so
-    far), which the DuckDB oracle replays as a fixed-hop CTE unroll
-    bit-for-bit: cosine is computed by the SAME Spark fold here (the
-    coordinator only ever sorts/dedups ids on already-computed
-    doubles, so no float divergence is possible), and the early exit
-    fires exactly at the frontier fixpoint, where remaining unrolled
-    hops are provably identical. The query node itself (vec_id 0) is
-    excluded from entries, hops, and results, so the search has to
-    NAVIGATE to the neighborhood rather than read it off the query's
-    own adjacency. Deterministic: fixed entries, fixed hop count,
-    (score DESC, vec_id ASC) tie-breaks everywhere. On this
-    synthetic (unclustered) corpus the harness reports 0.8-0.9
-    recall@10 with the round-7 index (3 bucket reps, bidirectional
-    local edges, ef 32) where the LSH multiprobe tier reports 0.0 —
-    the navigability is doing real work.
+    ``entries`` maps each query vec_id to its entry nodes. Semantics
+    are the ef-search formulation: beam_i = top-ef of VISITED_i
+    (monotone — re-selecting from everything scored so far), which
+    the DuckDB oracle replays as a fixed-hop CTE unroll bit-for-bit:
+    cosine is computed by the SAME Spark fold here (the coordinator
+    only ever sorts/dedups ids on already-computed doubles, so no
+    float divergence is possible), and the early exit fires exactly
+    at the frontier fixpoint of the whole set, where remaining
+    unrolled hops are provably identical. Each query node is excluded
+    from its own hops and results, so the search has to NAVIGATE to
+    the neighborhood rather than read it off the query's own
+    adjacency. Deterministic: fixed entries, fixed hop count,
+    (score DESC, vec_id ASC) tie-breaks everywhere. Output (qid,
+    vec_id, label, cos_sim, rnk ≤ k).
 
     At 100 TB: edge table bucketed by src and embedding table by
     vec_id turn each id-list probe into partition-pruned point
-    lookups; the coordinator state stays O(ef + frontier) rows no
-    matter the corpus size — the same bound an HNSW server keeps in
-    RAM per query."""
+    lookups; the coordinator state stays O(ef + frontier) rows per
+    query no matter the corpus size — the same bound an HNSW server
+    keeps in RAM per in-flight query."""
     # shared memoized serving state: the index, the probe frame and
     # the touched-adjacency page cache are built once per embedding
-    # store and reused by the whole beam family (at 100 TB the probe
-    # frame is the vec_id-bucketed embedding table and each probe
-    # prunes to matching buckets)
+    # store and reused by the whole beam family
     edges, e, adj = _beam_serving_index(t)
-    # the query vector is O(dim) constant state: collected ONCE and
-    # inlined as a literal array, so hop jobs carry no broadcast
-    # build. float->double widening via collect is exact, and cosine
-    # double-casts both sides, so the literal chain is bit-identical
-    # to the broadcast-join chain the oracle replays.
-    qrow = _query_vector(t).collect()[0]["q"]
-    qlit = F.array(*[F.lit(float(x)) for x in qrow])
+    # the query vectors are O(queries × dim) constant state: collected
+    # ONCE and inlined as a literal qid -> vector map, so hop jobs
+    # carry no query-side broadcast build (float->double widening is
+    # exact; cosine double-casts both sides — bit-identical to the
+    # join chain the oracle replays)
+    qrows = (t["embeddings"].where(F.col("vec_id").isin(*entries))
+             .select(F.col("vec_id").alias("qid"), "embedding")
+             .collect())
+    qmap = F.map_from_arrays(
+        F.array(*[F.lit(r["qid"]) for r in qrows]),
+        F.array(*[F.array(*[F.lit(float(x)) for x in r["embedding"]])
+                  for r in qrows]))
 
-    def score_ids(ids):
-        # cosine over ONLY the given candidate ids, JVM-side: an
-        # id-list probe of the cached embedding frame (partition-
-        # pruned point lookups when bucketed by vec_id) — one tiny
-        # job, ≤ ef × degree rows back
-        return (e.where(F.col("vec_id").isin(*ids))
-                .select("vec_id", "label",
+    def score(pairs):
+        # cosine over ONLY the given (qid, vec_id) pairs, JVM-side: an
+        # id-list probe of the cached embedding frame fans each id out
+        # to the queries that asked for it through a literal
+        # vec_id -> qids map — one job, no broadcast build, never a
+        # (corpus × queries) expansion
+        asked: dict[int, list[int]] = {}
+        for qid, v in pairs:
+            asked.setdefault(v, []).append(qid)
+        ids = ", ".join(f"{v}L" for v in asked)
+        fan = ", ".join("array(" + ", ".join(f"{q}L" for q in qs) + ")"
+                        for qs in asked.values())
+        return (e.where(f"vec_id IN ({ids})")
+                .select("vec_id", "label", "embedding", F.explode(F.expr(
+                    f"map_from_arrays(array({ids}), array({fan}))"
+                    "[vec_id]")).alias("qid"))
+                .select("qid", "vec_id", "label",
                         cosine(F.col("embedding"),
-                               qlit).alias("qs")).collect())
+                               F.element_at(qmap, F.col("qid")))
+                        .alias("qs")).collect())
 
-    visited: dict[int, tuple] = {}
-    for r in score_ids(list(range(1, BEAM_ENTRIES + 1))):
-        visited[r["vec_id"]] = (r["qs"], r["label"])
+    visited: dict[int, dict[int, tuple]] = {}
+    for r in score([(qid, v) for qid, vs in entries.items() for v in vs]):
+        visited.setdefault(r["qid"], {})[r["vec_id"]] = \
+            (r["qs"], r["label"])
     for _ in range(hops):
-        beam = sorted(visited.items(),
-                      key=lambda kv: (-kv[1][0], kv[0]))[:beam_width]
-        # at most two tiny jobs per hop: (1) adjacency page-in for
-        # never-touched beam ids (free once the cache is warm),
-        # (2) cosine over ONLY the never-visited ids — and when the
-        # frontier adds nothing, the hop exits before scoring
-        a = _beam_adjacency(edges, adj, [i for i, _ in beam])
-        fresh = sorted(
-            {d for ids in a.values() for d in ids
-             if d != QUERY_VEC_ID} - visited.keys())
-        if not fresh:
+        beams = {qid: [i for i, _ in sorted(
+            vs.items(), key=lambda kv: (-kv[1][0], kv[0]))
+            [:beam_width]] for qid, vs in visited.items()}
+        # (1) ONE adjacency page-in serves every query's never-touched
+        # beam ids (free once the cache is warm), (2) cosine over ONLY
+        # the never-visited (qid, vec_id) pairs
+        a = _beam_adjacency(edges, adj,
+                            sorted({s for ids in beams.values()
+                                    for s in ids}))
+        new = sorted({
+            (qid, dst) for qid, ids in beams.items()
+            for src in ids for dst in a.get(src, ())
+            if dst != qid and dst not in visited[qid]})
+        if not new:
             # frontier fixpoint: every remaining unrolled hop would
-            # re-derive the identical visited set — exit is bit-equal
+            # re-derive the identical visited sets — exit is bit-equal
             # to the oracle's full fixed-hop replay
             break
-        for r in score_ids(fresh):
-            visited[r["vec_id"]] = (r["qs"], r["label"])
-    top = sorted(visited.items(),
-                 key=lambda kv: (-kv[1][0], kv[0]))[:k]
-    spark = e.sparkSession
-    return spark.createDataFrame(
-        [(i, lab, qs) for i, (qs, lab) in top],
-        "vec_id long, label int, cos_sim double")
+        for r in score(new):
+            visited[r["qid"]][r["vec_id"]] = (r["qs"], r["label"])
+    rows = []
+    for qid in sorted(visited):
+        top = sorted(visited[qid].items(),
+                     key=lambda kv: (-kv[1][0], kv[0]))[:k]
+        rows += [(qid, i, lab, qs, rnk + 1)
+                 for rnk, (i, (qs, lab)) in enumerate(top)]
+    return e.sparkSession.createDataFrame(
+        rows, "qid long, vec_id long, label int, cos_sim double, "
+              "rnk int")
+
+
+def knn_beam(t: dict[str, DataFrame], k: int = TOP_K,
+             beam_width: int = BEAM_WIDTH,
+             hops: int = BEAM_HOPS) -> DataFrame:
+    """Graph beam search (`_beam_walk`) for the single query
+    QUERY_VEC_ID from the fixed entry nodes 1..BEAM_ENTRIES. On this
+    synthetic (unclustered) corpus the harness reports 0.8-0.9
+    recall@10 with the round-7 index (3 bucket reps, bidirectional
+    local edges, ef 32) where the LSH multiprobe tier reports 0.0 —
+    the navigability is doing real work."""
+    entries = {QUERY_VEC_ID: list(range(1, BEAM_ENTRIES + 1))}
+    return (_beam_walk(t, entries, k, beam_width, hops)
+            .select("vec_id", "label", "cos_sim"))
 
 
 def knn_beam_recall(t: dict[str, DataFrame],
                     k: int = TOP_K) -> DataFrame:
     """Recall@k of the graph beam search against exact brute force —
     the eval harness every approximate tier here ships with (LSH,
-    IVF, PQ, int8 all have one). Both sides are k rows; the
-    intersection join is a broadcast no-op."""
-    approx = knn_beam(t, k).select("vec_id")
-    exact = knn_bruteforce(t, k).select("vec_id")
-    return (exact.join(approx, "vec_id")
-            .agg(F.lit(k).alias("k"),
-                 F.count(F.lit(1)).cast("int").alias("n_hits"),
-                 (F.count(F.lit(1)) / k).alias("recall_at_k")))
+    IVF, PQ, int8 all have one)."""
+    return _recall_at_k(knn_bruteforce(t, k).select("vec_id"),
+                        knn_beam(t, k).select("vec_id"), k)
 
 
 def knn_beam_ndcg(t: dict[str, DataFrame], k: int = TOP_K) -> DataFrame:
-    """nDCG@k of the graph beam search against the exact top-k — the
-    rank-aware companion to `knn_beam_recall` (same contract as
-    `knn_lsh_ndcg`: binary relevance, baked 1/log2(rank+1) gain
-    literals folded in rank order, ideal DCG a shared constant).
-    Both sides are k-row frames; the cost is the searches."""
-    approx = knn_beam(t, k).select(
-        "vec_id",
-        F.row_number().over(Window.orderBy(F.desc("cos_sim"),
-                                           F.asc("vec_id")))
-        .alias("rank"))
-    exact = knn_bruteforce(t, k).select("vec_id", F.lit(1).alias("rel"))
-    gains = F.array(*[F.lit(w) for w in NDCG_WEIGHTS[:k]])
-    scored = (approx.join(broadcast(exact), "vec_id", "left")
-              .select("rank", F.coalesce("rel", F.lit(0)).alias("rel")))
-    g = scored.agg(F.array_sort(F.collect_list(
-        F.struct("rank", "rel"))).alias("rr"))
-    dcg = F.aggregate(
-        F.col("rr"), F.lit(0.0),
-        lambda acc, s: acc + s["rel"] * F.element_at(gains, s["rank"]))
-    return g.select(
-        F.lit(k).alias("k"),
-        dcg.alias("dcg"),
-        F.lit(NDCG_IDEAL).alias("ideal_dcg"),
-        (dcg / F.lit(NDCG_IDEAL)).alias("ndcg"))
+    """nDCG@k of the graph beam search against the exact top-k
+    (`_ndcg_at_k`, the `knn_lsh_ndcg` contract)."""
+    return _ndcg_at_k(knn_bruteforce(t, k).select("vec_id"),
+                      knn_beam(t, k), k)
 
 
 BEAM_BATCH_QUERIES = 5   # query set: vec_id < 5 (knn_batch's set)
@@ -2093,110 +2072,25 @@ def knn_beam_batch(t: dict[str, DataFrame],
     """BATCH beam search — the serving shape `knn_batch` gives brute
     force, for the graph tier: every query in the set (vec_id <
     n_queries, knn_batch's contract) walks the SAME navigable index
-    simultaneously, beam state keyed by (qid, vec_id) on the
-    coordinator (O(n_queries × ef) — corpus-independent, the same
-    bound an HNSW server keeps per in-flight query batch). Each hop
-    is (1) per-query beam = top-ef selected from the coordinator
-    state, (2) ONE pass over the cached edge table serves every
-    query's frontier at once, (3) the (qid, vec_id) candidate pairs
-    broadcast into the cached embedding frame and the shared
-    JVM-side cosine fold evaluates JUST those pairs — the whole
-    batch's score work is n_queries × hops × ef × degree
-    evaluations, never a corpus×queries score scan, and one hop
-    costs exactly TWO jobs regardless of batch size — the batching
-    amortization that makes graph ANN a bulk operator rather than
-    n_queries sequential walks.
-
-    Per-query semantics match `knn_beam`: entries are the fixed pool
-    vec_ids 1..BEAM_ENTRY_POOL minus the query itself (the query
-    node is excluded from entries, hops and results, so each search
-    navigates to its neighborhood), fixed hop count, (qs DESC,
-    vec_id ASC) tie-breaks. Output mirrors knn_batch:
-    (qid, vec_id, label, cos_sim, rnk ≤ k)."""
-    edges, e, adj = _beam_serving_index(t)
-    spark = e.sparkSession
-    # the query set is O(n_queries × dim) constant state: collected
-    # ONCE and inlined as a literal qid -> vector map, so hop jobs
-    # carry no query-side broadcast build (float->double widening is
-    # exact; cosine double-casts both sides — bit-identical to the
-    # join chain the oracle replays)
-    qrows = (t["embeddings"].where(F.col("vec_id") < n_queries)
-             .select(F.col("vec_id").alias("qid"), "embedding")
-             .collect())
-    qmap = F.map_from_arrays(
-        F.array(*[F.lit(r["qid"]) for r in qrows]),
-        F.array(*[F.array(*[F.lit(float(x)) for x in r["embedding"]])
-                  for r in qrows]))
-    qcol = F.element_at(qmap, F.col("qid"))
-
-    def score_pairs(pairs):
-        # cosine over ONLY the given (qid, vec_id) pairs, JVM-side:
-        # the literal pair list broadcasts into the cached embedding
-        # frame — one job, never a (corpus × queries) expansion
-        pdf = spark.createDataFrame(pairs, "qid long, vec_id long")
-        return (e.join(broadcast(pdf), "vec_id")
-                .select("qid", "vec_id", "label",
-                        cosine(F.col("embedding"),
-                               qcol).alias("qs")).collect())
-
-    # entry pool: every query starts from vec_ids 1..POOL minus
-    # itself; scored in ONE job for the whole batch
-    visited: dict[int, dict[int, tuple]] = {}
-    entry = [(qid, v) for qid in range(n_queries)
-             for v in range(1, BEAM_ENTRY_POOL + 1) if v != qid]
-    for r in score_pairs(entry):
-        visited.setdefault(r["qid"], {})[r["vec_id"]] = \
-            (r["qs"], r["label"])
-    for _ in range(hops):
-        beams = {qid: [i for i, _ in sorted(
-            vs.items(), key=lambda kv: (-kv[1][0], kv[0]))
-            [:beam_width]] for qid, vs in visited.items()}
-        # at most two tiny jobs per hop for the whole batch: (1) ONE
-        # adjacency page-in serves every query's never-touched beam
-        # ids (free once the cache is warm), (2) cosine over ONLY
-        # the never-visited (qid, vec_id) pairs — and a batch-wide
-        # empty frontier exits before scoring
-        all_src = sorted({s for ids in beams.values() for s in ids})
-        a = _beam_adjacency(edges, adj, all_src)
-        new = sorted({
-            (qid, dst) for qid, ids in beams.items()
-            for src in ids for dst in a.get(src, ())
-            if dst != qid and dst not in visited[qid]})
-        if not new:
-            # batch-wide frontier fixpoint — remaining unrolled hops
-            # are identical for every query
-            break
-        for r in score_pairs(new):
-            visited[r["qid"]][r["vec_id"]] = (r["qs"], r["label"])
-    rows = []
-    for qid in sorted(visited):
-        top = sorted(visited[qid].items(),
-                     key=lambda kv: (-kv[1][0], kv[0]))[:k]
-        rows += [(qid, i, lab, qs, rnk + 1)
-                 for rnk, (i, (qs, lab)) in enumerate(top)]
-    return spark.createDataFrame(
-        rows, "qid long, vec_id long, label int, cos_sim double, "
-              "rnk int")
+    simultaneously (`_beam_walk`), from the fixed entry pool vec_ids
+    1..BEAM_ENTRY_POOL minus the query itself. One hop costs the same
+    jobs whatever the batch size — the batching amortization that
+    makes graph ANN a bulk operator rather than n_queries sequential
+    walks. Output mirrors knn_batch: (qid, vec_id, label, cos_sim,
+    rnk ≤ k)."""
+    entries = {qid: [v for v in range(1, BEAM_ENTRY_POOL + 1) if v != qid]
+               for qid in range(n_queries)}
+    return _beam_walk(t, entries, k, beam_width, hops)
 
 
 def knn_beam_batch_recall(t: dict[str, DataFrame],
                           k: int = 3) -> DataFrame:
     """Per-query recall@k of the batch beam search against per-query
     exact brute force — one row per query, the harness proving the
-    batch tier searches as well as the single-query tier. Both
-    sides are n_queries × k rows; the intersection join is tiny."""
-    approx = knn_beam_batch(t, k=k).select("qid", "vec_id")
+    batch tier searches as well as the single-query tier."""
     exact = knn_batch(t, k=k).select("qid", "vec_id")
-    hits = (exact.join(approx, ["qid", "vec_id"])
-            .groupBy("qid")
-            .agg(F.count(F.lit(1)).cast("int").alias("n_hits")))
-    base = (exact.select("qid").distinct()
-            .join(hits, "qid", "left"))
-    return base.select(
-        "qid", F.lit(k).alias("k"),
-        F.coalesce("n_hits", F.lit(0).cast("int")).alias("n_hits"),
-        (F.coalesce("n_hits", F.lit(0)).cast("double") / k)
-        .alias("recall_at_k"))
+    return _recall_at_k(exact, knn_beam_batch(t, k=k).select("qid", "vec_id"),
+                        k)
 
 
 OUTLIER_TOP_K = 20
@@ -2540,14 +2434,10 @@ def knn_bq_rerank(t: dict[str, DataFrame], k: int = TOP_K,
                                            F.asc("vec_id"))
     short = (coarse.withColumn("crk", F.row_number().over(wc))
              .where(F.col("crk") <= cand))
-    wr = Window.partitionBy("qid").orderBy(F.desc("cos_sim"),
-                                           F.asc("vec_id"))
-    return (short
-            .select("qid", "vec_id", "label",
-                    cosine(F.col("embedding"), F.col("qv"))
-                    .alias("cos_sim"))
-            .withColumn("rnk", F.row_number().over(wr))
-            .where(F.col("rnk") <= k)
+    scored = short.select("qid", "vec_id", "label",
+                          cosine(F.col("embedding"), F.col("qv"))
+                          .alias("cos_sim"))
+    return (_top_k(scored, k, by=("qid",))
             .select("qid", "vec_id", "label", "cos_sim", "rnk"))
 
 
@@ -2555,20 +2445,11 @@ def knn_bq_recall(t: dict[str, DataFrame], k: int = TOP_K) -> DataFrame:
     """Per-query recall@k of the BQ rerank cascade against exact
     brute force (the knn_beam_batch_recall contract) — the harness
     that prices the 32x compression in recall before serving trusts
-    it. Both sides are queries × k rows; the join is tiny."""
-    approx = knn_bq_rerank(t, k).select("qid", "vec_id")
+    it."""
     exact = knn_batch(t, n_queries=BQ_QUERIES, k=k) \
         .select("qid", "vec_id")
-    hits = (exact.join(approx, ["qid", "vec_id"])
-            .groupBy("qid")
-            .agg(F.count(F.lit(1)).cast("int").alias("n_hits")))
-    return (exact.select("qid").distinct()
-            .join(hits, "qid", "left")
-            .select("qid", F.lit(k).alias("k"),
-                    F.coalesce("n_hits", F.lit(0).cast("int"))
-                    .alias("n_hits"),
-                    (F.coalesce("n_hits", F.lit(0)).cast("double") / k)
-                    .alias("recall_at_k")))
+    return _recall_at_k(exact, knn_bq_rerank(t, k).select("qid", "vec_id"),
+                        k)
 
 
 BQ_CAND_SWEEP = (50, 100, 200)   # candidate-depth budgets swept
@@ -2615,29 +2496,20 @@ def bq_cand_sweep(t: dict[str, DataFrame], k: int = TOP_K) -> DataFrame:
     # prefixes of the same Hamming ranking, so each candidate (its
     # float cosine computed once) fans out to every budget covering
     # its coarse rank, one (cand, qid) window reproduces each budget's
-    # row_number()<=k rerank over the identical ordering, and a
-    # (cand × qid) spine restores the zero-hit rows the per-budget
-    # left join used to add. Bit-identical rows, ~1/3 the jobs.
+    # top-k rerank over the identical ordering, and a (cand × qid)
+    # spine keeps the zero-hit rows. Bit-identical rows, ~1/3 the jobs.
     arms = F.array(*[F.lit(int(c)) for c in BQ_CAND_SWEEP])
     scored = (coarse.select(
         "qid", "vec_id",
         cosine(F.col("embedding"), F.col("qv")).alias("cos_sim"),
         F.explode(F.filter(arms, lambda a: a >= F.col("crk")))
         .alias("cand")))
-    wr = Window.partitionBy("cand", "qid").orderBy(F.desc("cos_sim"),
-                                                   F.asc("vec_id"))
-    topk = (scored.withColumn("rnk", F.row_number().over(wr))
-            .where(F.col("rnk") <= k)
+    topk = (_top_k(scored, k, by=("cand", "qid"))
             .select("cand", "qid", "vec_id"))
-    hits = (topk.join(exact, ["qid", "vec_id"])
-            .groupBy("cand", "qid")
-            .agg(F.count(F.lit(1)).alias("n_hits")))
-    spark = exact.sparkSession
-    spine = (spark.range(1).select(F.explode(arms).alias("cand"))
+    spine = (exact.sparkSession.range(1)
+             .select(F.explode(arms).alias("cand"))
              .crossJoin(exact.select("qid").distinct()))
-    per = (spine.join(broadcast(hits), ["cand", "qid"], "left")
-           .select("cand",
-                   F.coalesce("n_hits", F.lit(0)).alias("n_hits")))
+    per = _recall_at_k(exact, topk, k, spine)
     return (per.groupBy("cand")
             .agg(F.lit(k).alias("k"),
                  F.count(F.lit(1)).cast("int").alias("n_queries"),

@@ -142,7 +142,6 @@ _AVRO_OF_SPARK = {
     "float": "float", "double": "double", "string": "string",
     "binary": "bytes",
 }
-_SPARK_OF_AVRO = {v: k for k, v in _AVRO_OF_SPARK.items()}
 
 
 # ---------- binary decoding (Avro spec, public) ----------

@@ -24,11 +24,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor the
-# reference targets (geography/product/supplier dims grow ~linearly in
-# facilities, not in fact volume).
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 # NOTE on scan parallelism for unsplittable inputs: when a table is
 # one parquet file with one row group, the scan is ONE task no matter
 # what maxPartitionBytes says. Round 10 compensated with a loader-

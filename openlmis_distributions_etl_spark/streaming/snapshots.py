@@ -4,7 +4,9 @@ on-disk layout of the foreachBatch stores in streaming/jobs.py.
 A store directory holds
   v{batch_id:020d}/  the parquet snapshot a micro-batch committed (a
                      store keeping several frames per batch puts each
-                     under its own subdirectory: cells/, clicks/, ...);
+                     under its own subdirectory: cells/, clicks/, ...;
+                     a head merge replaying its head's batch writes
+                     v{batch_id:020d}.replay/, see commit);
   _CURRENT           the pointer naming the committed head, written to
                      _CURRENT.tmp and swapped in with os.replace, so a
                      reader sees the old head or the new one, never a
@@ -29,6 +31,7 @@ from __future__ import annotations
 
 import os
 from pathlib import Path
+from urllib.parse import urlparse
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -139,8 +142,21 @@ def publish(out_dir: str, *parts: str) -> None:
 
 
 def commit(frame: DataFrame, out_dir: str, batch_id: int) -> None:
-    """Write and publish a single-frame store's next snapshot."""
-    publish(out_dir, write_snapshot(frame, out_dir, batch_id))
+    """Write and publish a single-frame store's next snapshot.
+
+    A head merge replaying the batch that wrote the committed head
+    reads v{b} while rewriting it, and overwriting a directory a frame
+    still scans can delete it before the scan runs (it does without
+    adaptive execution). Such a commit writes v{b}.replay, a name the
+    read does not use, and publishes that; the next replay reads
+    v{b}.replay and writes v{b} again."""
+    name = version(batch_id)
+    head = Path(os.path.abspath(os.path.join(out_dir, name)))
+    if any(head in Path(urlparse(f).path).parents
+           for f in frame.inputFiles()):
+        name += ".replay"
+    frame.write.mode("overwrite").parquet(os.path.join(out_dir, name))
+    publish(out_dir, name)
 
 
 def run_batches(df: DataFrame, merge, checkpoint_dir: str):

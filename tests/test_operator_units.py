@@ -744,6 +744,46 @@ def test_matryoshka_full_width_prefix_is_exact(spark):
     assert row["n_hits"] == row["k"] and row["recall_at_k"] == 1.0
 
 
+def test_ann_eval_harness_shapes(spark):
+    """The recall@k harness keeps every row its shape promises when
+    nothing hits, and nDCG@k reads 1.0 for a perfect ranking and
+    (ideal − 1)/ideal for a miss at rank 1 only."""
+    k = similarity.TOP_K
+    ids = lambda xs: spark.createDataFrame(  # noqa: E731
+        [(x,) for x in xs], "vec_id long")
+    exact, miss = ids(range(1, k + 1)), ids(range(100, 100 + k))
+
+    row, = similarity._recall_at_k(exact, miss, k).collect()
+    assert (row["k"], row["n_hits"], row["recall_at_k"]) == (k, 0, 0.0)
+
+    # per query: query 2 has exact neighbours but no approximate hit
+    q_exact = spark.createDataFrame([(1, 5), (1, 6), (2, 7)],
+                                    "qid long, vec_id long")
+    q_approx = spark.createDataFrame([(1, 5), (1, 9), (2, 8)],
+                                     "qid long, vec_id long")
+    got = {r["qid"]: (r["n_hits"], r["recall_at_k"]) for r in
+           similarity._recall_at_k(q_exact, q_approx, 2).collect()}
+    assert got == {1: (1, 0.5), 2: (0, 0.0)}
+
+    # per lane: lane 3 has no approximate row at all
+    lanes = spark.createDataFrame([(1,), (2,), (3,)], "lane int")
+    l_approx = spark.createDataFrame([(1, 5), (2, 5), (2, 7)],
+                                     "lane int, vec_id long")
+    got = {r["lane"]: r["n_hits"] for r in similarity._recall_at_k(
+        ids([5, 7]), l_approx, 2, lanes).collect()}
+    assert got == {1: 1, 2: 2, 3: 0}
+
+    def ndcg(approx_ids):
+        ranked = spark.createDataFrame(
+            [(v, 1.0 - i / 100) for i, v in enumerate(approx_ids)],
+            "vec_id long, cos_sim double")
+        return similarity._ndcg_at_k(exact, ranked, k).collect()[0]["ndcg"]
+
+    assert ndcg(range(1, k + 1)) == 1.0
+    ideal = similarity.NDCG_IDEAL
+    assert ndcg([100, *range(2, k + 1)]) == (ideal - 1.0) / ideal
+
+
 def test_semantic_dup_lang_matrix_covers_all_pairs(spark):
     from openlmis_distributions_etl_spark.operators.dedup import (
         semantic_dup_lang_matrix)

@@ -1146,6 +1146,31 @@ def test_stream_lifecycle_store_matches_batch(spark, tmp_path):
     pd.testing.assert_frame_equal(_sorted(got), _sorted(want))
 
 
+def test_lifecycle_replay_of_head_batch_keeps_the_head(spark, tmp_path):
+    """Replaying the batch whose version is the committed head reads
+    that version while committing the merge; the commit must not
+    overwrite it (without adaptive execution the overwrite deletes
+    the head before the scan runs and leaves _CURRENT naming a
+    deleted directory)."""
+    ev = load_tables(spark, SF0001, "events")["events"]
+    store = str(tmp_path / "lc_replay")
+    b0 = ev.where(F.col("user_id") % 2 == 0)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        jobs._merge_lifecycle(b0, 0, store)
+        jobs._merge_lifecycle(b0, 0, store)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    jobs._merge_lifecycle(ev.where(F.col("user_id") % 2 == 1), 1, store)
+    us = F.unix_micros("ts")
+    want = ev.groupBy("user_id").agg(F.min(us).alias("first_us"),
+                                     F.max(us).alias("last_us"))
+    got = jobs.read_latest_snapshot(spark, store)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.select(*got.columns).collect()))
+
+
 def test_stream_audience_bitmaps_match_batch(spark, tmp_path):
     """bit_or-merged audience bitmaps across out-of-order micro-
     batches finish to exactly the batch intersection report, and a

@@ -47,9 +47,9 @@ def main() -> None:
                 ".\n`bnlj` > 0 only in the broadcast-singleton patterns "
                 "pinned in\n`tests/test_plan_hygiene.py`; `py` > 0 only "
                 "in the declared Arrow lanes.\n\n"
-                "Caveat (ADVICE r8): `knn_beam` / `knn_beam_batch` / "
-                "`mmr_diversified_topk` /\n`kcenter_greedy_coreset` "
-                "run their search at "
+                "Caveat (ADVICE r8): `knn_beam` / `knn_beam_batch` "
+                "(one beam walk,\n`_beam_walk`) / `mmr_diversified_topk`"
+                " / `kcenter_greedy_coreset` run\ntheir search at "
                 "DataFrame-CONSTRUCTION time (the coordinator-held\n"
                 "loop issues bounded constant-size probe jobs "
                 "immediately) and return a\nLocalRelation, so their "
@@ -59,7 +59,7 @@ def main() -> None:
                 "Their correctness is pinned by the oracle-parity gate "
                 "and the partition-\ninvariance battery; the per-hop "
                 "probe cost model is documented at\n"
-                "`operators/similarity.py::knn_beam`.\n\n")
+                "`operators/similarity.py::_beam_walk`.\n\n")
         f.write("| query | exchanges | bcast_join | smj | shj | bnlj "
                 "| py |\n|---|---|---|---|---|---|---|\n")
         for r in rows:
