@@ -246,13 +246,13 @@ def main() -> None:
 
     # steady-state methodology, per query: one untimed warmup run
     # (JIT/codegen compilation, parquet footer cache, python daemon
-    # spin-up) immediately followed by the timed runs. Warming and
-    # timing back-to-back keeps the query's generated code hot in the
-    # JIT code cache — a single global warmup pass measured ~3× worse
-    # (22 queries' codegen classes evict each other before the timed
-    # pass comes back around). At production scale the one-time costs
-    # amortize to zero against hours of execution; the timed runs
-    # measure the plans.
+    # spin-up) immediately followed by the timed runs. A single global
+    # warmup pass once measured ~3× worse: the 22 queries' generated
+    # classes evicted each other from Spark's compiled-class cache
+    # (100 entries by default, now sized in session.get_spark), so the
+    # timed pass compiled them all again. At production scale the
+    # one-time costs amortize to zero against hours of execution; the
+    # timed runs measure the plans.
     # best-of-N timed runs per query (the timeit convention): this
     # host shows multi-second contention bursts that can inflate any
     # single run 5-30×; the minimum is the reproducible cost of the

@@ -203,3 +203,32 @@ def test_arrow_python_only_in_declared_lanes(plans):
            if any(node in p for node in _PY_NODES)}
     new = got - PYTHON_EVAL_ALLOWED
     assert not new, f"undeclared Python eval lanes in {sorted(new)}"
+
+
+def _compiles(spark) -> int:
+    """Classes Spark has compiled in this JVM: the codegen compile-time
+    histogram is updated only on a generated-class cache miss."""
+    jvm = spark.sparkContext._jvm
+    return jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
+def test_query_classes_survive_a_session_working_set(spark):
+    """A session cycling through more distinct plans than Spark's default
+    codegen cache holds (100 classes) must not evict a query's classes:
+    rerunning the query compiles nothing."""
+    def q1():
+        registry.queries()["q1_pricing_summary"](spark, SF0001) \
+            .write.format("noop").mode("overwrite").save()
+
+    q1()
+    before = _compiles(spark)
+    for i in range(150):
+        # a distinct inlined literal per plan: one new class each
+        spark.range(4).selectExpr(f"id + {i + 1000}").collect()
+    after = _compiles(spark)
+    assert after - before >= 100, f"only {after - before} classes compiled"
+    q1()
+    assert _compiles(spark) == after, (
+        f"q1_pricing_summary compiled {_compiles(spark) - after} classes "
+        "again: its generated classes were evicted")

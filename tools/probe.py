@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Solo-probe one or more queries: time with the noop sink (warmup +
-min-of-N, the bench methodology) and optionally dump the formatted
-physical plan to DIR/<query>.txt.
+min-of-N, the bench methodology), count the jobs, stages, tasks and
+generated-class compiles per timed run, and optionally dump the
+formatted physical plan to DIR/<query>.txt.
 
 Usage: python tools/probe.py [--plan DIR] [--runs N] [--sf DIR] q1 q2 ...
 """
@@ -41,6 +42,9 @@ def main() -> None:
         spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
+    # updated only when a generated class misses Spark's codegen cache
+    compile_count = spark._jvm.org.apache.spark.metrics.source \
+        .CodegenMetrics.METRIC_COMPILATION_TIME()
     if args.plan:
         args.plan.mkdir(parents=True, exist_ok=True)
     for name in args.queries:
@@ -58,6 +62,7 @@ def main() -> None:
         runs = []
         tracker = spark.sparkContext.statusTracker()
         jobs0 = set(tracker.getJobIdsForGroup(None) or [])
+        compiles0 = compile_count.getCount()
         for i in range(args.runs):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
             t0 = time.perf_counter()
@@ -65,6 +70,7 @@ def main() -> None:
                 .mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
         jobs1 = set(tracker.getJobIdsForGroup(None) or [])
+        compiles = compile_count.getCount() - compiles0
         new_jobs = sorted(jobs1 - jobs0)
         n_stages = n_tasks = 0
         for j in new_jobs:
@@ -80,7 +86,8 @@ def main() -> None:
         print(f"{name}: min={min(runs):.3f}s "
               f"runs={[round(r, 3) for r in runs]} "
               f"jobs={len(new_jobs) / per:.1f} "
-              f"stages={n_stages / per:.1f} tasks={n_tasks / per:.0f}"
+              f"stages={n_stages / per:.1f} tasks={n_tasks / per:.0f} "
+              f"compiles={compiles / per:.1f}"
               " (per run)", flush=True)
     spark.stop()
 
