@@ -25,30 +25,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..functions import dsum, month_key
+from ..functions import month_key
 from ..sources.versioned import (changed_rows, merge_upsert_versioned,
                                  read_changes, read_versioned, versions,
                                  write_versioned)
-
-
-def _month_segment_rollup(orders: DataFrame,
-                          customer: DataFrame) -> DataFrame:
-    """The same plan as plans.star.monthly_sales_rollup, taking the
-    fact as a DataFrame so it runs against any snapshot/filter."""
-    return (orders
-            .join(broadcast(customer.select("c_custkey", "c_mktsegment")),
-                  F.col("o_custkey") == F.col("c_custkey"))
-            .groupBy(month_key("o_orderdate").alias("month"),
-                     "c_mktsegment")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 dsum("o_totalprice").alias("total_value")))
+from .star import month_segment_rollup
 
 
 def init_rollup(spark: SparkSession, fact_path: str, rollup_path: str,
                 customer: DataFrame) -> int:
     """Materialize the rollup table from the fact's current version."""
     orders = read_versioned(spark, fact_path)
-    return write_versioned(_month_segment_rollup(orders, customer),
+    return write_versioned(month_segment_rollup(orders, customer),
                            rollup_path, mode="overwrite")
 
 
@@ -74,7 +62,7 @@ def incremental_rollup_update(spark: SparkSession, fact_path: str,
         return versions(rollup_path)[-1]
     fact = read_versioned(spark, fact_path)
     affected = fact.where(month_key("o_orderdate").isin(months))
-    updated = _month_segment_rollup(affected, customer)
+    updated = month_segment_rollup(affected, customer)
     return merge_upsert_versioned(spark, rollup_path, updated,
                                   ["month", "c_mktsegment"])
 

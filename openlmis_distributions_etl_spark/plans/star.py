@@ -48,14 +48,22 @@ def star_denormalize(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def monthly_sales_rollup(t: dict[str, DataFrame]) -> DataFrame:
-    """Month × market-segment sales rollup fact (the reference's
-    periodic distribution report shape)."""
+def month_segment_rollup(orders: DataFrame,
+                         customer: DataFrame) -> DataFrame:
+    """Month × market-segment sales rollup of ``orders`` (any snapshot
+    or filter of the fact; the incremental rollup recomputes affected
+    months with it)."""
     return (
-        t["orders"]
-        .join(broadcast(t["customer"].select("c_custkey", "c_mktsegment")),
+        orders
+        .join(broadcast(customer.select("c_custkey", "c_mktsegment")),
               F.col("o_custkey") == F.col("c_custkey"))
         .groupBy(month_key("o_orderdate").alias("month"), "c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n_orders"),
              dsum("o_totalprice").alias("total_value"))
     )
+
+
+def monthly_sales_rollup(t: dict[str, DataFrame]) -> DataFrame:
+    """Month × market-segment sales rollup fact (the reference's
+    periodic distribution report shape)."""
+    return month_segment_rollup(t["orders"], t["customer"])

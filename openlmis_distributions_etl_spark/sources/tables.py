@@ -8,6 +8,8 @@ downstream select only the columns they need and the scan node prunes
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -149,7 +151,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-class LazyTables(dict):
+class LazyTables(Mapping):
     """Mapping table-name → DataFrame that defers the parquet footer
     read until a table is actually used — operators receive the full
     catalog but only touch their inputs (a query over one table costs
@@ -157,19 +159,17 @@ class LazyTables(dict):
 
     def __init__(self, spark: SparkSession, sf_dir: str,
                  names: tuple[str, ...]):
-        super().__init__()
         self._spark = spark
         self._sf_dir = sf_dir
         self._names = names
 
-    def __missing__(self, name: str) -> DataFrame:
+    def __getitem__(self, name: str) -> DataFrame:
+        # load_table memoizes the frame on the session
         if name not in self._names:
             raise KeyError(name)
-        df = load_table(self._spark, self._sf_dir, name)
-        self[name] = df
-        return df
+        return load_table(self._spark, self._sf_dir, name)
 
-    # dict.get/in/iter/len bypass __missing__; reflect the full catalog
+    # Mapping's default would load the table just to test membership
     def __contains__(self, name: object) -> bool:
         return name in self._names
 
@@ -179,23 +179,9 @@ class LazyTables(dict):
     def __len__(self) -> int:
         return len(self._names)
 
-    def get(self, name, default=None):
-        try:
-            return self[name]
-        except KeyError:
-            return default
 
-    def keys(self):
-        return list(self._names)
-
-    def items(self):
-        return [(n, self[n]) for n in self._names]
-
-    def values(self):
-        return [self[n] for n in self._names]
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
+def load_tables(spark: SparkSession, sf_dir: str,
+                *names: str) -> Mapping[str, DataFrame]:
     use = names or TABLES
     return LazyTables(spark, sf_dir, use)
 

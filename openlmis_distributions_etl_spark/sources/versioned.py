@@ -1,14 +1,21 @@
 """Minimal versioned table format (Delta/Iceberg-lite).
 
 A table directory holds immutable parquet data files plus a JSON
-manifest log; every commit writes its data under a fresh subdirectory
-and then publishes a manifest that lists the COMPLETE file set for the
-new version (snapshot isolation — readers of version N never see a
-partial commit or later files). The manifest is created with O_EXCL,
-so two concurrent writers racing to the same version number cannot
-both win: the loser gets a VersionConflictError and retries against
-the new latest (optimistic concurrency, the Delta commit protocol in
-miniature).
+manifest log. The commit protocol (the Delta commit in miniature):
+
+1. ``_manifest`` resolves the base snapshot: the latest version, or a
+   pinned one. A table with no versions raises FileNotFoundError; a
+   version that was never committed raises ValueError. Every public
+   reader and writer resolves its versions here.
+2. ``_write_files`` writes the commit's new data under a fresh
+   ``data/v{n}-{uuid}`` directory that no manifest names yet, so a
+   crash before step 3 leaves garbage, never a half-visible version.
+3. ``_publish`` creates manifest ``n`` with O_EXCL. It lists the
+   COMPLETE file set of the new version (snapshot isolation: readers
+   of version N never see a partial commit or later files), and two
+   writers racing to the same version number cannot both win: the
+   loser gets a VersionConflictError and retries against the new
+   latest (optimistic concurrency).
 
 Every manifest records the TABLE schema under ``table_schema`` (the
 union of its files' columns, in the order a footer merge gives), so a
@@ -19,10 +26,13 @@ manifests recorded the table schema (it holds only the last commit's
 ``schema``) takes it from a mergeSchema read of its files' footers;
 the next append, DELETE or MERGE onto such a table records it.
 
+Per-file min/max stats and Bloom filters are derived metadata that
+``collect_stats`` / ``collect_bloom`` attach to a committed manifest.
+
 What this deliberately does NOT do (and a production format adds):
-compaction of the manifest log, file-level column statistics for data
-skipping, and schema evolution rules. The streaming snapshot stores
-(streaming/snapshots.py) are the streaming producer of the same pattern.
+compaction of the manifest log and schema evolution beyond adding
+columns. The streaming snapshot stores (streaming/snapshots.py) are
+the streaming producer of the same pattern.
 
 Layout:
     <table>/_log/v00000042.json  # {"version", "files", "mode", "table_schema"}
@@ -64,6 +74,64 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(f)
 
 
+def _manifest(path: str, version: int | None = None) -> dict:
+    """The manifest of ``version`` (default: latest); its ``"version"``
+    is the resolved number."""
+    vs = versions(path)
+    if not vs:
+        raise FileNotFoundError(f"no committed versions under {path}")
+    if version is None:
+        version = vs[-1]
+    elif version not in vs:
+        raise ValueError(f"version {version} of {path} not in {vs}")
+    m = _read_manifest(path, version)
+    m["version"] = version
+    return m
+
+
+def _write_files(df: DataFrame, path: str, version: int) -> list[str]:
+    """Write ``df`` under a fresh data directory for ``version``;
+    returns its part files relative to ``path``, sorted."""
+    commit_dir = f"{_DATA}/v{version:08d}-{uuid.uuid4().hex[:8]}"
+    df.write.mode("errorifexists").parquet(f"{path}/{commit_dir}")
+    return sorted(f"{commit_dir}/{p.name}"
+                  for p in (Path(path) / commit_dir).glob("part-*.parquet"))
+
+
+def _publish(path: str, version: int, mode: str, files: list[str],
+             table_schema: str | None, base: dict | None = None,
+             **extra) -> int:
+    """Create manifest ``version`` with O_EXCL (exactly one writer per
+    version) listing ``files``; returns ``version``. ``extra`` adds
+    manifest keys (``txn``, ``predicate``, ...).
+
+    Every file carried over from the ``base`` manifest keeps its
+    ``stats`` and ``bloom`` entries, so data skipping and point
+    lookups still prune it; new files get none and are read
+    conservatively until the next ``collect_stats`` / ``collect_bloom``."""
+    manifest = {"version": version, "mode": mode, "files": files,
+                "txn": None, "table_schema": table_schema, **extra}
+    if base is not None:
+        keep = set(files)
+        stats = {f: s for f, s in base.get("stats", {}).items() if f in keep}
+        bloom = {c: kept for c, per in base.get("bloom", {}).items()
+                 if (kept := {f: b for f, b in per.items() if f in keep})}
+        if stats:
+            manifest["stats"] = stats
+        if bloom:
+            manifest["bloom"] = bloom
+    _log_dir(path).mkdir(parents=True, exist_ok=True)
+    try:
+        with open(_log_dir(path) / f"v{version:08d}.json", "x",
+                  encoding="utf-8") as f:
+            json.dump(manifest, f)
+    except FileExistsError as e:
+        raise VersionConflictError(
+            f"version {version} of {path} was committed concurrently; "
+            f"re-read the table and retry") from e
+    return version
+
+
 def _rewrite_manifest(path: str, version: int, manifest: dict) -> None:
     """Replace a committed manifest in place (tmp + os.replace) to
     attach derived metadata such as stats or Bloom filters."""
@@ -102,9 +170,7 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append",
     """Commit ``df`` as a new version; returns the version number.
 
     ``overwrite`` replaces the visible file set; ``append`` extends
-    it. Data files land under an uncommitted uuid directory first, so
-    a crash before the manifest publish leaves garbage, never a
-    half-visible version.
+    it, and the files it carries keep their stats and Bloom entries.
 
     ``base_version`` pins the snapshot this commit was derived from
     (the optimistic-concurrency protocol: a transactional writer reads
@@ -122,17 +188,21 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append",
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     existing = versions(path)
-    base = base_version if base_version is not None else \
-        (existing[-1] if existing else None)
+    if txn is not None:
+        for v in existing:
+            if _read_manifest(path, v).get("txn") == txn:
+                return v
+    base = (_manifest(path, base_version)
+            if existing or base_version is not None else None)
     # schema evolution contract: an append may ADD columns (appended
     # at the end of the table schema; older files read them as typed
     # NULLs) but may not CHANGE the type of any column the table has
     # — that would silently corrupt every existing file's reads, so it
     # fails loudly here
-    schema = df.schema
-    if mode == "append" and base in existing:
-        fields = list(_table_schema(df.sparkSession, path,
-                                    _read_manifest(path, base)))
+    schema, carried = df.schema, []
+    if mode == "append" and base is not None:
+        carried = base["files"]
+        fields = list(_table_schema(df.sparkSession, path, base))
         prev_types = {f.name: f.dataType for f in fields}
         for f in df.schema.fields:
             if f.name not in prev_types:
@@ -144,51 +214,17 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append",
                     f"{f.dataType.simpleString()!r}; only ADDING columns "
                     "is a safe widening")
         schema = StructType(fields)
-    if txn is not None:
-        for v in existing:
-            if _read_manifest(path, v).get("txn") == txn:
-                return v
-    if base_version is None:
-        new_version = (existing[-1] + 1) if existing else 0
-    else:
-        if base_version not in existing:
-            raise ValueError(
-                f"base_version {base_version} not committed (have {existing})")
-        new_version = base_version + 1
-    commit_dir = f"{_DATA}/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
-    df.write.mode("errorifexists").parquet(f"{path}/{commit_dir}")
-    new_files = sorted(
-        f"{commit_dir}/{p.name}"
-        for p in (Path(path) / commit_dir).glob("part-*.parquet"))
-    files = new_files if mode == "overwrite" or base is None else \
-        _read_manifest(path, base)["files"] + new_files
-    _log_dir(path).mkdir(parents=True, exist_ok=True)
-    manifest = _log_dir(path) / f"v{new_version:08d}.json"
-    try:
-        # O_EXCL publish: exactly one writer can commit this version
-        with open(manifest, "x", encoding="utf-8") as f:
-            json.dump({"version": new_version, "mode": mode,
-                       "files": files, "txn": txn,
-                       "table_schema": schema.json()}, f)
-    except FileExistsError as e:
-        raise VersionConflictError(
-            f"version {new_version} of {path} was committed concurrently; "
-            f"re-read the table and retry") from e
-    return new_version
+    version = 0 if base is None else base["version"] + 1
+    files = carried + _write_files(df, path, version)
+    return _publish(path, version, mode, files, schema.json(), base=base,
+                    txn=txn)
 
 
 def read_versioned(spark: SparkSession, path: str,
                    version: int | None = None) -> DataFrame:
     """Read the table at ``version`` (default: latest) — time travel
     is just resolving an older manifest's file list."""
-    vs = versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no committed versions under {path}")
-    if version is None:
-        version = vs[-1]
-    elif version not in vs:
-        raise ValueError(f"version {version} not in {vs}")
-    m = _read_manifest(path, version)
+    m = _manifest(path, version)
     return _scan(spark, path, m, m["files"])
 
 
@@ -275,11 +311,9 @@ def collect_stats(path: str, version: int | None = None,
     manifest (rewrites the manifest in place — stats are derived
     metadata, not part of the commit protocol). Run after write, or
     periodically like vacuum."""
-    vs = versions(path)
-    version = vs[-1] if version is None else version
-    m = _read_manifest(path, version)
+    m = _manifest(path, version)
     m["stats"] = {f: _file_stats(path, f, stat_cols) for f in m["files"]}
-    _rewrite_manifest(path, version, m)
+    _rewrite_manifest(path, m["version"], m)
 
 
 def read_versioned_pruned(spark: SparkSession, path: str, column: str,
@@ -290,9 +324,7 @@ def read_versioned_pruned(spark: SparkSession, path: str, column: str,
     scan-planning step that makes a selective query on a 100 TB table
     touch 100 GB. Files without stats are conservatively read.
     Returns an empty-but-typed frame when every file prunes away."""
-    vs = versions(path)
-    version = vs[-1] if version is None else version
-    m = _read_manifest(path, version)
+    m = _manifest(path, version)
     stats = m.get("stats", {})
     keep = []
     for f in m["files"]:
@@ -309,10 +341,8 @@ def changed_files(path: str, since_version: int,
     primitive (backfills, downstream syncs) that reads only the delta,
     never the whole table. Overwrites start a new lineage, so their
     files appear as additions."""
-    vs = versions(path)
-    to_version = vs[-1] if to_version is None else to_version
-    base = set(_read_manifest(path, since_version)["files"])
-    now = _read_manifest(path, to_version)["files"]
+    base = set(_manifest(path, since_version)["files"])
+    now = _manifest(path, to_version)["files"]
     return [f for f in now if f not in base]
 
 
@@ -331,10 +361,9 @@ def read_changes(spark: SparkSession, path: str, since_version: int,
                  to_version: int | None = None) -> DataFrame:
     """Read only the rows added after ``since_version`` (see
     changed_files), with the table schema of ``to_version``."""
-    if to_version is None:
-        to_version = versions(path)[-1]
-    return _scan(spark, path, _read_manifest(path, to_version),
-                 changed_files(path, since_version, to_version))
+    m = _manifest(path, to_version)
+    return _scan(spark, path, m,
+                 changed_files(path, since_version, m["version"]))
 
 
 def merge_upsert_versioned(spark: SparkSession, path: str,
@@ -352,14 +381,13 @@ def merge_upsert_versioned(spark: SparkSession, path: str,
     whole snapshot rewrites, which is the documented simplification."""
     from pyspark.sql import functions as F
 
-    vs = versions(path)
-    base = vs[-1] if base_version is None else base_version
-    current = read_versioned(spark, path, version=base)
+    m = _manifest(path, base_version)
     keys = updates.select(*key_cols).distinct()
-    survivors = current.join(F.broadcast(keys), key_cols, "left_anti")
+    survivors = (_scan(spark, path, m, m["files"])
+                 .join(F.broadcast(keys), key_cols, "left_anti"))
     merged = survivors.unionByName(updates)
     return write_versioned(merged, path, mode="overwrite",
-                           base_version=base)
+                           base_version=m["version"])
 
 
 ZORDER_BITS = 8
@@ -389,9 +417,8 @@ def zorder_rewrite(spark: SparkSession, path: str, cols: list[str],
     """
     from pyspark.sql import functions as F
 
-    vs = versions(path)
-    base = vs[-1] if base_version is None else base_version
-    df = read_versioned(spark, path, version=base)
+    m = _manifest(path, base_version)
+    df = _scan(spark, path, m, m["files"])
     aggs = []
     for c in cols:
         aggs += [F.min(F.col(c).cast("double")).alias(f"lo_{c}"),
@@ -417,7 +444,7 @@ def zorder_rewrite(spark: SparkSession, path: str, cols: list[str],
                  .sortWithinPartitions("__z")
                  .drop("__z"))
     version = write_versioned(clustered, path, mode="overwrite",
-                              base_version=base)
+                              base_version=m["version"])
     collect_stats(path, version=version, stat_cols=tuple(cols))
     return version
 
@@ -435,37 +462,11 @@ def clone_versioned(src: str, dst: str) -> int:
     pair them with source retention that outlives them. ``dst``'s own
     vacuum never touches files outside its directory.
     """
-    vs = versions(src)
-    if not vs:
-        raise FileNotFoundError(f"no committed versions under {src}")
-    m = _read_manifest(src, vs[-1])
+    m = _manifest(src)
     files = [os.path.relpath(str(Path(src) / f), dst) for f in m["files"]]
-    _log_dir(dst).mkdir(parents=True, exist_ok=True)
-    manifest = _log_dir(dst) / "v00000000.json"
-    try:
-        with open(manifest, "x", encoding="utf-8") as f:
-            json.dump({"version": 0, "mode": "overwrite", "files": files,
-                       "txn": None, "table_schema": m.get("table_schema"),
-                       "cloned_from": {"table": str(src),
-                                       "version": vs[-1]}}, f)
-    except FileExistsError as e:
-        raise VersionConflictError(
-            f"{dst} already has a version 0; clone targets must be "
-            "fresh paths") from e
-    return 0
-
-
-def _publish(path: str, manifest: dict) -> None:
-    """O_EXCL manifest publish (exactly one writer per version)."""
-    _log_dir(path).mkdir(parents=True, exist_ok=True)
-    target = _log_dir(path) / f"v{manifest['version']:08d}.json"
-    try:
-        with open(target, "x", encoding="utf-8") as f:
-            json.dump(manifest, f)
-    except FileExistsError as e:
-        raise VersionConflictError(
-            f"version {manifest['version']} of {path} was committed "
-            f"concurrently; re-read the table and retry") from e
+    return _publish(dst, 0, "overwrite", files, m.get("table_schema"),
+                    cloned_from={"table": str(src),
+                                 "version": m["version"]})
 
 
 def delete_versioned(spark: SparkSession, path: str, predicate: str,
@@ -478,15 +479,13 @@ def delete_versioned(spark: SparkSession, path: str, predicate: str,
     carried into the new manifest BY REFERENCE — at 100 TB a
     selective delete rewrites the few files it touches, not the
     table. Rows where the predicate is NULL are kept (SQL DELETE
-    semantics). Untouched files keep their stats metadata.
+    semantics). Untouched files keep their stats and Bloom metadata.
 
     Returns {"version", "rewritten_files", "carried_files"};
     version is the base when no file matched (no-op, no commit)."""
     from pyspark.sql import functions as F
 
-    vs = versions(path)
-    base = vs[-1] if base_version is None else base_version
-    m = _read_manifest(path, base)
+    m = _manifest(path, base_version)
     files = m["files"]
     df = _scan(spark, path, m, files)
     hit_rows = (df.where(F.expr(predicate))
@@ -495,26 +494,15 @@ def delete_versioned(spark: SparkSession, path: str, predicate: str,
     hit = {r["f"] for r in hit_rows}
     touched = [f for f in files if any(h.endswith(f) for h in hit)]
     if not touched:
-        return {"version": base, "rewritten_files": 0,
+        return {"version": m["version"], "rewritten_files": 0,
                 "carried_files": len(files)}
-    new_version = base + 1
-    commit_dir = f"{_DATA}/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
+    new_version = m["version"] + 1
     keep = ~F.coalesce(F.expr(predicate), F.lit(False))
-    (_scan(spark, path, m, touched)
-     .where(keep)
-     .write.mode("errorifexists").parquet(f"{path}/{commit_dir}"))
-    new_files = sorted(
-        f"{commit_dir}/{p.name}"
-        for p in (Path(path) / commit_dir).glob("part-*.parquet"))
+    new_files = _write_files(_scan(spark, path, m, touched).where(keep),
+                             path, new_version)
     carried = [f for f in files if f not in touched]
-    manifest = {"version": new_version, "mode": "delete",
-                "files": carried + new_files, "txn": None,
-                "table_schema": df.schema.json(), "predicate": predicate}
-    old_stats = m.get("stats", {})
-    if old_stats:
-        manifest["stats"] = {f: old_stats[f] for f in carried
-                             if f in old_stats}
-    _publish(path, manifest)
+    _publish(path, new_version, "delete", carried + new_files,
+             df.schema.json(), base=m, predicate=predicate)
     return {"version": new_version, "rewritten_files": len(touched),
             "carried_files": len(carried)}
 
@@ -553,9 +541,7 @@ def collect_bloom(spark: SparkSession, path: str, column: str,
     so the shuffle is ≤ |files|·1024 rows regardless of row count."""
     from pyspark.sql import functions as F
 
-    vs = versions(path)
-    version = vs[-1] if version is None else version
-    m = _read_manifest(path, version)
+    m = _manifest(path, version)
     df = (_scan(spark, path, m, m["files"])
           .select(F.input_file_name().alias("f"),
                   F.col(column).cast("string").alias("v"))
@@ -579,7 +565,7 @@ def collect_bloom(spark: SparkSession, path: str, column: str,
         if rel is not None:
             per_file[rel] = list(r["bitmap"])
     m.setdefault("bloom", {})[column] = per_file
-    _rewrite_manifest(path, version, m)
+    _rewrite_manifest(path, m["version"], m)
 
 
 def read_versioned_point(spark: SparkSession, path: str, column: str,
@@ -593,9 +579,7 @@ def read_versioned_point(spark: SparkSession, path: str, column: str,
     key, with the final exact predicate pushed into the scan."""
     from pyspark.sql import functions as F
 
-    vs = versions(path)
-    version = vs[-1] if version is None else version
-    m = _read_manifest(path, version)
+    m = _manifest(path, version)
     bloom = m.get("bloom", {}).get(column, {})
     stats = m.get("stats", {})
     probe = [_bloom_idx_pos_py(value, j) for j in range(BLOOM_IDX_K)]
@@ -625,7 +609,7 @@ def optimize_versioned(spark: SparkSession, path: str,
     so small-file cleanup is free whenever clustering runs. Returns
     {"version", "n_files_before", "n_files_after", plus the vacuum
     counters}."""
-    before = len(_read_manifest(path, versions(path)[-1])["files"])
+    before = len(_manifest(path)["files"])
     if zorder_cols:
         v = zorder_rewrite(spark, path, zorder_cols,
                            target_files=target_files)
@@ -662,7 +646,7 @@ def diff_versions(spark: SparkSession, path: str, v_from: int,
     No window, no driver data."""
     from pyspark.sql import functions as F
 
-    ma, mb = _read_manifest(path, v_from), _read_manifest(path, v_to)
+    ma, mb = _manifest(path, v_from), _manifest(path, v_to)
     fa, fb = set(ma["files"]), set(mb["files"])
     only_a, only_b = sorted(fa - fb), sorted(fb - fa)
 
@@ -690,22 +674,12 @@ def restore_versioned(path: str, version: int) -> int:
     operation is metadata-only: no data files move, the new manifest
     references the old files. Returns the new version number.
     Fails loudly if the target's files have been vacuumed away."""
-    vs = versions(path)
-    if version not in vs:
-        raise ValueError(f"version {version} not in {vs}")
-    m = _read_manifest(path, version)
+    m = _manifest(path, version)
     for f in m["files"]:
         if not (Path(path) / f).exists():
             raise FileNotFoundError(
                 f"cannot restore to v{version}: data file {f} was "
                 f"vacuumed; restore targets must be within the "
                 f"retention window")
-    new_version = vs[-1] + 1
-    manifest = {"version": new_version, "mode": "restore",
-                "files": list(m["files"]), "txn": None,
-                "restored_from": version,
-                "table_schema": m.get("table_schema")}
-    if "stats" in m:
-        manifest["stats"] = m["stats"]
-    _publish(path, manifest)
-    return new_version
+    return _publish(path, versions(path)[-1] + 1, "restore", m["files"],
+                    m.get("table_schema"), base=m, restored_from=version)

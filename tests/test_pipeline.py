@@ -113,7 +113,9 @@ def test_export_training_shards_layout(spark, tmp_path):
 
 def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
     from openlmis_distributions_etl_spark.plans.incremental import (
-        _month_segment_rollup, incremental_rollup_update, init_rollup)
+        incremental_rollup_update, init_rollup)
+    from openlmis_distributions_etl_spark.plans.star import (
+        month_segment_rollup as _month_segment_rollup)
     from openlmis_distributions_etl_spark.sources import load_tables
     from openlmis_distributions_etl_spark.sources.versioned import (
         read_versioned, versions, write_versioned)

@@ -225,7 +225,8 @@ def test_versioned_table_time_travel(spark, tmp_path):
 
 def test_versioned_table_commit_conflict(spark, tmp_path):
     from openlmis_distributions_etl_spark.sources.versioned import (
-        VersionConflictError, write_versioned)
+        VersionConflictError, delete_versioned, write_versioned,
+        zorder_rewrite)
     import pytest
 
     t = load_tables(spark, SF0001, "events")
@@ -238,6 +239,12 @@ def test_versioned_table_commit_conflict(spark, tmp_path):
         '{"version": 1, "mode": "append", "files": []}')
     with pytest.raises(VersionConflictError):
         write_versioned(base, tbl, mode="append", base_version=0)
+    # DELETE and Z-order rewrite publish through the same O_EXCL create
+    with pytest.raises(VersionConflictError):
+        delete_versioned(spark, tbl, "event_id >= 0", base_version=0)
+    with pytest.raises(VersionConflictError):
+        zorder_rewrite(spark, tbl, ["event_id"], target_files=1,
+                       base_version=0)
 
 
 def test_versioned_table_vacuum(spark, tmp_path):
@@ -575,6 +582,133 @@ def test_versioned_bloom_point_lookup(spark, tmp_path):
     # absent key: usually prunes everything, never errors
     assert read_versioned_point(spark, tbl, "event_id", 10**9) \
         .count() == 0
+
+
+def test_versioned_commits_keep_carried_file_metadata(spark, tmp_path):
+    """An append, a DELETE and a RESTORE carry every untouched file's
+    min/max stats and Bloom filter into the new manifest, so pruned
+    and point reads still skip those files; new files have none and
+    are read."""
+    from openlmis_distributions_etl_spark.sources import versioned as V
+
+    tbl = str(tmp_path / "vcarry")
+    # 4 files of even ids (0..798), one disjoint range each
+    V.write_versioned(spark.range(0, 800, 2).repartitionByRange(4, "id"),
+                      tbl, mode="overwrite")
+    V.collect_stats(tbl, stat_cols=("id",))
+    V.collect_bloom(spark, tbl, "id")
+
+    def opened():
+        # [0, 5] lies in the first file's range; 9 does too, but no
+        # file holds it, so only its Bloom filter can skip that file
+        return (len(V.read_versioned_pruned(spark, tbl, "id", 0, 5)
+                    .inputFiles()),
+                len(V.read_versioned_point(spark, tbl, "id", 9)
+                    .inputFiles()))
+
+    assert opened() == (1, 0)
+    V.write_versioned(spark.range(1000, 1010).coalesce(1), tbl,
+                      mode="append")
+    assert opened() == (2, 1)      # + the appended file
+    assert V.delete_versioned(spark, tbl, "id = 798")["version"] == 2
+    assert opened() == (3, 2)      # + the rewritten file
+    assert V.restore_versioned(tbl, 0) == 3
+    assert opened() == (1, 0)
+    m = V._read_manifest(tbl, 3)
+    assert set(m["bloom"]["id"]) == set(m["stats"]) == set(m["files"])
+
+
+def test_versioned_entry_points_share_one_error_rule(spark, tmp_path):
+    """Every public reader and writer that takes a table path or a
+    version raises FileNotFoundError on a path with no versions and
+    ValueError on a version that was never committed. (``versions``,
+    ``table_history`` and ``vacuum_versioned`` list a missing table as
+    empty.)"""
+    from openlmis_distributions_etl_spark.sources import versioned as V
+
+    df = spark.createDataFrame([(1, 1.0)], "id long, v double")
+    tbl = str(tmp_path / "tbl")
+    V.write_versioned(df, tbl, mode="overwrite")
+    # name -> (call, kind): "latest" takes an optional version (None
+    # is the latest), "pinned" a required one, None no version at all.
+    # write_versioned is "pinned": without base_version it creates
+    cases = {
+        "write_versioned": (lambda p, v: V.write_versioned(
+            df, p, base_version=v), "pinned"),
+        "read_versioned": (lambda p, v: V.read_versioned(spark, p, v),
+                           "latest"),
+        "collect_stats": (lambda p, v: V.collect_stats(p, v, ("id",)),
+                          "latest"),
+        "read_versioned_pruned": (lambda p, v: V.read_versioned_pruned(
+            spark, p, "id", 0, 1, version=v), "latest"),
+        "changed_files(since)": (lambda p, v: V.changed_files(p, v),
+                                 "pinned"),
+        "changed_files(to)": (lambda p, v: V.changed_files(p, 0, v),
+                              "latest"),
+        "changed_rows": (lambda p, v: V.changed_rows(p, v), "pinned"),
+        "read_changes(since)": (lambda p, v: V.read_changes(spark, p, v),
+                                "pinned"),
+        "read_changes(to)": (lambda p, v: V.read_changes(spark, p, 0, v),
+                             "latest"),
+        "merge_upsert_versioned": (lambda p, v: V.merge_upsert_versioned(
+            spark, p, df, ["id"], base_version=v), "latest"),
+        "zorder_rewrite": (lambda p, v: V.zorder_rewrite(
+            spark, p, ["id"], base_version=v), "latest"),
+        "delete_versioned": (lambda p, v: V.delete_versioned(
+            spark, p, "id = 1", base_version=v), "latest"),
+        "collect_bloom": (lambda p, v: V.collect_bloom(spark, p, "id", v),
+                          "latest"),
+        "read_versioned_point": (lambda p, v: V.read_versioned_point(
+            spark, p, "id", 1, version=v), "latest"),
+        "diff_versions(from)": (lambda p, v: V.diff_versions(
+            spark, p, v, 0, ["id"]), "pinned"),
+        "diff_versions(to)": (lambda p, v: V.diff_versions(
+            spark, p, 0, v, ["id"]), "pinned"),
+        "restore_versioned": (lambda p, v: V.restore_versioned(p, v),
+                              "pinned"),
+        "clone_versioned": (lambda p, v: V.clone_versioned(
+            p, str(tmp_path / "clone")), None),
+        "optimize_versioned": (lambda p, v: V.optimize_versioned(spark, p),
+                               None),
+    }
+    missing = str(tmp_path / "missing")
+    pinned = [(missing, 0, FileNotFoundError), (tbl, 7, ValueError)]
+    probes = {None: [(missing, None, FileNotFoundError)],
+              "pinned": pinned,
+              "latest": [(missing, None, FileNotFoundError)] + pinned}
+    wrong = []
+    for name, (call, kind) in cases.items():
+        for path, version, want in probes[kind]:
+            try:
+                call(path, version)
+                wrong.append((name, version, want.__name__, "no error"))
+            except Exception as e:       # noqa: BLE001 — the type is checked
+                if type(e) is not want:
+                    wrong.append((name, version, want.__name__, repr(e)))
+    assert wrong == []
+    assert V.versions(tbl) == [0]      # no probe committed anything
+
+
+def test_lazy_tables_load_on_first_use(spark, tmp_path):
+    """``load_tables`` is a read-only mapping over the whole catalog
+    that reads a table's footer only when the table is looked up."""
+    from openlmis_distributions_etl_spark.sources.tables import TABLES
+
+    (tmp_path / "region.parquet").symlink_to(f"{SF0001}/region.parquet")
+    sf = str(tmp_path)
+
+    def loaded():
+        return sorted(n for d, n in getattr(
+            spark, "_openlmis_table_cache", {}) if d == sf)
+
+    t = load_tables(spark, sf)
+    assert list(t) == list(TABLES) and len(t) == len(TABLES)
+    assert "region" in t and "nope" not in t and t.get("nope") is None
+    with pytest.raises(KeyError):
+        t["nope"]
+    assert loaded() == []
+    assert t["region"].count() == 5 and t["region"] is t["region"]
+    assert loaded() == ["region"]
 
 
 def test_csv_quarantine_ingest(spark, tmp_path):

@@ -307,8 +307,8 @@ def test_sample_gate_stream_matches_batch(spark):
 
 
 def test_stream_maintain_rollup_matches_batch(spark, tmp_path):
-    from openlmis_distributions_etl_spark.plans.incremental import (
-        _month_segment_rollup)
+    from openlmis_distributions_etl_spark.plans.star import (
+        month_segment_rollup as _month_segment_rollup)
     from openlmis_distributions_etl_spark.sources.versioned import (
         read_versioned)
 
